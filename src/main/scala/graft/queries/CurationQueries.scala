@@ -985,17 +985,13 @@ object CurationQueries {
     * could pair a schedule with the wrong manifest) and handed back as
     * LOADED pinned scans. Corpus fingerprint: XOR of document ids, the
     * manifest discipline. */
-  private val loaderRegistryCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]())
+  private val loaderRegistryCache = SessionArtifact[(DataFrame, DataFrame)]("loader_registry")
 
   private[queries] def sharedLoaderArtifacts(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    SessionCaches.purgeStopped(loaderRegistryCache)(_._1)
-    // resolve dependencies BEFORE entering the cache slot (the
-    // SketchQueries nest-safe discipline)
-    val sched = q191EpochShuffle(s, dir)
-    val man = q193ShardManifest(s, dir)
-    loaderRegistryCache.computeIfAbsent((s, dir), _ => {
+      : (DataFrame, DataFrame) =
+    loaderRegistryCache(s, dir) {
+      val sched = q191EpochShuffle(s, dir)
+      val man = q193ShardManifest(s, dir)
       val reg = graft.ext.ArtifactRegistry
       val root = RegistryRoots.root(s, dir)
       val fp = Tables.load(s, dir, "documents")
@@ -1004,8 +1000,7 @@ object CurationQueries {
         Seq("schedule" -> sched, "manifest" -> man))
       (reg.read(s, root, "epoch_loader", v, "schedule"),
         reg.read(s, root, "epoch_loader", v, "manifest"))
-    })
-  }
+    }
 
   /** q195: mid-epoch RESUME from the persisted loader artifacts — the
     * query that turns the q193 manifest from write-only bookkeeping

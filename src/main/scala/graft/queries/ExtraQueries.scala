@@ -91,7 +91,7 @@ object ExtraQueries {
       mapping = MappingConfig(mainContent = "o_orderpriority", groupBy = Some("o_custkey")),
       prompt = PromptTemplate("Order {o_orderkey}"),
       output = OutputConfig(includePrompt = true, includeTimestamp = false))
-    val (results, _) = BatchPipeline.run(
+    val (results, _, _) = BatchPipeline.run(
       Tables.load(s, dir, "orders"), cfg, ConversationalTestEnricher(),
       orderCols = Seq($"o_orderkey"))
     results

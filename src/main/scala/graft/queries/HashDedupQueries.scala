@@ -20,19 +20,16 @@ object HashDedupQueries {
     * document's full text, the dominant upstream cost of the family.
     * Same per-(session, dir) discipline as [[TextQueries]]'
     * shingleCache — hash-neutral (consumers run identical operators
-    * over the identical pair rows), evicted when the owning session's
-    * context stops. Pair rows are (id_a, id_b, est_sim): three numbers,
+    * over the identical pair rows). Pair rows are (id_a, id_b, est_sim): three numbers,
     * ≪ corpus-sized. */
-  private val lshPairsCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+  private val lshPairsCache = SessionArtifact[DataFrame]("lsh_pairs")
 
-  private[queries] def sharedLshPairs(s: SparkSession, dir: String): DataFrame = {
-    SessionCaches.purgeStopped(lshPairsCache)(_._1)
-    lshPairsCache.computeIfAbsent((s, dir), _ =>
+  private[queries] def sharedLshPairs(s: SparkSession, dir: String): DataFrame =
+    lshPairsCache(s, dir) {
       MinHashLsh.nearDupPairs(Tables.load(s, dir, "documents"),
           "doc_id", "text", n = 8, minEstSim = 0.5)
-        .localCheckpoint(true))
-  }
+        .localCheckpoint(true)
+    }
 
   /** Session-scoped cache of the near-dup CLUSTER labels — the
     * [[graft.ext.ConnectedComponents]] closure over [[sharedLshPairs]]
@@ -41,18 +38,16 @@ object HashDedupQueries {
     * hash-min/pointer-jumping rounds are the family's second dominant
     * cost after the pair generation itself. Output (id, cluster_id) —
     * two longs per document. */
-  private val lshCcLabelsCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+  private val lshCcLabelsCache = SessionArtifact[DataFrame]("lsh_cc_labels")
 
-  private[queries] def sharedLshCcLabels(s: SparkSession, dir: String): DataFrame = {
-    SessionCaches.purgeStopped(lshCcLabelsCache)(_._1)
-    val pairs = sharedLshPairs(s, dir) // resolve BEFORE the slot (nest-safety)
-    lshCcLabelsCache.computeIfAbsent((s, dir), _ =>
+  private[queries] def sharedLshCcLabels(s: SparkSession, dir: String): DataFrame =
+    lshCcLabelsCache(s, dir) {
+      val pairs = sharedLshPairs(s, dir)
       graft.ext.ConnectedComponents.assign(
           Tables.load(s, dir, "documents").select(col("doc_id")), "doc_id",
           pairs, "id_a", "id_b")
-        .localCheckpoint(true))
-  }
+        .localCheckpoint(true)
+    }
 
   def q20MinHash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -506,27 +501,23 @@ object HashDedupQueries {
     * and is IDENTICAL between them, so it materializes once per
     * (session, dir). Pair sets are candidate-bounded (df-capped
     * posting lists), far smaller than the corpus. */
-  private val lshEvalCache = SessionCaches.registerMap(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (DataFrame, DataFrame)]())
+  private val lshEvalCache = SessionArtifact[(DataFrame, DataFrame)]("lsh_eval")
 
   private def sharedLshEvalPairs(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    SessionCaches.purgeStopped(lshEvalCache)(_._1)
-    // resolve the shared upstreams BEFORE the slot (nest-safety). The
-    // truth side is a row FILTER of the session θ=0.2 verified-pairs
-    // artifact: the exact verification is deterministic over the
-    // identical candidate set, and J ≥ 0.5 pairs all clear the θ=0.2
-    // size prefilter (J ≤ size ratio), so the filtered frame equals a
-    // direct θ=0.5 run row for row. The est side is the canonical pair
-    // cache. Neither re-scans the corpus text here.
-    val truthPairs = TextQueries.sharedJaccardPairs(s, dir)
-    val estPairs = sharedLshPairs(s, dir)
-    lshEvalCache.computeIfAbsent((s, dir), _ =>
+      : (DataFrame, DataFrame) =
+    lshEvalCache(s, dir) {
+      // The truth side is a row FILTER of the session θ=0.2 verified-pairs
+      // artifact: the exact verification is deterministic over the
+      // identical candidate set, and J ≥ 0.5 pairs all clear the θ=0.2
+      // size prefilter (J ≤ size ratio), so the filtered frame equals a
+      // direct θ=0.5 run row for row. The est side is the canonical pair
+      // cache. Neither re-scans the corpus text here.
+      val truthPairs = TextQueries.sharedJaccardPairs(s, dir)
+      val estPairs = sharedLshPairs(s, dir)
       (truthPairs.filter(col("jaccard") >= 0.5)
         .select(col("id_a"), col("id_b"), col("jaccard")),
-        estPairs.select(col("id_a"), col("id_b"), col("est_sim"))))
-  }
+        estPairs.select(col("id_a"), col("id_b"), col("est_sim")))
+    }
 
   def q137LshEval(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -649,12 +640,10 @@ object HashDedupQueries {
     * Scaladoc promised ("in production this index is PERSISTED from
     * the previous ingest") — the [[graft.ext.VectorIndexStore]]
     * discipline applied to the dedup family. */
-  private val lshIndexCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+  private val lshIndexCache = SessionArtifact[DataFrame]("lsh_index")
 
-  private[queries] def sharedPersistedLshIndex(s: SparkSession, dir: String): DataFrame = {
-    SessionCaches.purgeStopped(lshIndexCache)(_._1)
-    lshIndexCache.computeIfAbsent((s, dir), _ => {
+  private[queries] def sharedPersistedLshIndex(s: SparkSession, dir: String): DataFrame =
+    lshIndexCache(s, dir) {
       val reg = graft.ext.ArtifactRegistry
       val root = RegistryRoots.root(s, dir)
       val standing = Tables.load(s, dir, "documents").filter(col("doc_id") < 250)
@@ -662,8 +651,7 @@ object HashDedupQueries {
       val v = reg.publish(s, root, "lsh_index", fp, Seq(
         "bands" -> MinHashLsh.bandedIndex(standing, "doc_id", "text")))
       reg.read(s, root, "lsh_index", v, "bands")
-    })
-  }
+    }
 
   /** q173: incremental near-dup against the LOADED index — q120's
     * exact semantics, but the corpus side arrives from parquet storage
@@ -819,12 +807,10 @@ object HashDedupQueries {
     * as a loaded lazy scan — the [[graft.ext.VectorIndexStore]] /
     * `sharedPersistedLshIndex` discipline applied to exact substring
     * dedup. */
-  private val dupDictCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+  private val dupDictCache = SessionArtifact[DataFrame]("dup_dict")
 
-  private[queries] def sharedPersistedDupDict(s: SparkSession, dir: String): DataFrame = {
-    SessionCaches.purgeStopped(dupDictCache)(_._1)
-    dupDictCache.computeIfAbsent((s, dir), _ => {
+  private[queries] def sharedPersistedDupDict(s: SparkSession, dir: String): DataFrame =
+    dupDictCache(s, dir) {
       val reg = graft.ext.ArtifactRegistry
       val root = RegistryRoots.root(s, dir)
       val corpus = Tables.load(s, dir, "documents").filter(col("doc_id") < 250)
@@ -833,8 +819,7 @@ object HashDedupQueries {
         "dict" -> graft.ext.DupNgrams.dupGramDict(
           graft.ext.DupNgrams.gramPositions(corpus, "doc_id", "text"))))
       reg.read(s, root, "dupgram_dict", v, "dict")
-    })
-  }
+    }
 
   /** q179: incremental exact-substring probe against the LOADED
     * dictionary — the fresh batch (doc_id ≥ 250) gets its q177-style
@@ -864,13 +849,11 @@ object HashDedupQueries {
     * counts and persisted as the next generation — the q167/q168
     * build/add lifecycle applied to the dedup dictionary. Both hands
     * back LOADED lazy scans. */
-  private val dupCountsCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]())
+  private val dupCountsCache = SessionArtifact[(DataFrame, DataFrame)]("dup_counts")
 
   private[queries] def sharedDupgramGenerations(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    SessionCaches.purgeStopped(dupCountsCache)(_._1)
-    dupCountsCache.computeIfAbsent((s, dir), _ => {
+      : (DataFrame, DataFrame) =
+    dupCountsCache(s, dir) {
       // the two dictionary generations ARE registry versions of one
       // kind — exactly the coexist-and-pin lifecycle the registry
       // models (gen2 merges the ingest batch into LOADED gen1)
@@ -890,8 +873,7 @@ object HashDedupQueries {
         fpOf(docs.filter(col("doc_id") < 375)), Seq(
           "counts" -> graft.ext.DupNgrams.mergeCounts(gen1, batch)))
       (gen1, reg.read(s, root, "dupgram_counts", v2, "counts"))
-    })
-  }
+    }
 
   /** q182: incremental dictionary UPDATE audit — merge an ingest
     * batch into the standing gram-count state and report what changed,

@@ -20,30 +20,21 @@ object MiningQueries {
     * fingerprint, ~2/(w+1) of the grams, the corpus-version artifact a
     * real pipeline computes once (the [[TextQueries]] shingle-cache /
     * [[SketchQueries]] vector-cache discipline). Hash-neutral:
-    * consumers run identical operators over identical rows. Entries
-    * live for the session and evict once its context stops
-    * ([[SessionCaches.purgeStopped]]); `localCheckpoint` blocks are
-    * unrecoverable after executor loss — a long-lived service would
-    * persist to storage instead (the [[graft.ext.VectorIndexStore]]
-    * path). */
-  private val winnowCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), DataFrame]())
+    * consumers run identical operators over identical rows. */
+  private val winnowCache = SessionArtifact[DataFrame]("winnow_fps")
 
   /** The per-doc distinct selected fingerprints, cached per
     * (session, dir, k, w) — the cache key carries the OPERATING POINT,
     * because fingerprint sets at different (k, w) are different
     * artifacts: the default 8/4 point feeds q124/q146/q148, the
     * long-span 20/8 point feeds q183's evaluation, and each is
-    * materialized once. Single-entry builder — never nests another
-    * lookup on the same map (the [[SketchQueries]] recursive-update
-    * lesson). */
+    * materialized once. */
   private[queries] def sharedWinnowFps(s: SparkSession, dir: String,
-      k: Int = graft.ext.Winnowing.K, w: Int = graft.ext.Winnowing.W): DataFrame = {
-    SessionCaches.purgeStopped(winnowCache)(_._1)
-    winnowCache.computeIfAbsent((s, dir, k, w), _ =>
+      k: Int = graft.ext.Winnowing.K, w: Int = graft.ext.Winnowing.W): DataFrame =
+    winnowCache(s, dir, k, w) {
       graft.ext.Winnowing.fingerprints(
-        Tables.load(s, dir, "documents"), "doc_id", "text", k, w).localCheckpoint(true))
-  }
+        Tables.load(s, dir, "documents"), "doc_id", "text", k, w).localCheckpoint(true)
+    }
 
   /** Session-scoped cache of the documents table's per-doc surprisal
     * scores ([[SurprisalScore.tokenBigramSurprisal]] shape: id,
@@ -52,16 +43,14 @@ object MiningQueries {
     * CCNet terciles, q171/q172 calibration): each consumer otherwise
     * re-runs the bigram explode + LM-count join, the family's dominant
     * cost. One thin row per document; the winnow/shingle-cache
-    * discipline, eviction included. */
-  private val surprisalCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+    * discipline. */
+  private val surprisalCache = SessionArtifact[DataFrame]("surprisal")
 
-  private[queries] def sharedSurprisal(s: SparkSession, dir: String): DataFrame = {
-    SessionCaches.purgeStopped(surprisalCache)(_._1)
-    surprisalCache.computeIfAbsent((s, dir), _ =>
+  private[queries] def sharedSurprisal(s: SparkSession, dir: String): DataFrame =
+    surprisalCache(s, dir) {
       SurprisalScore.tokenBigramSurprisal(
-        Tables.load(s, dir, "documents"), "doc_id", "text").localCheckpoint(true))
-  }
+        Tables.load(s, dir, "documents"), "doc_id", "text").localCheckpoint(true)
+    }
 
   /** q86: integer surprisal per document — the perplexity-style quality
     * gate with the corpus's own token-bigram counts as the LM and
@@ -505,14 +494,12 @@ object MiningQueries {
     * evaluation (the [[sharedWinnowFps]] discipline; one thin id
     * column checkpointed). Hash-neutral: consumers see identical
     * rows. */
-  private val winnowTruthCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]())
+  private val winnowTruthCache = SessionArtifact[DataFrame]("winnow_truth")
 
   private def sharedSpanTruth(s: SparkSession, dir: String,
-      guarantee: Int): DataFrame = {
-    import s.implicits._
-    SessionCaches.purgeStopped(winnowTruthCache)(_._1)
-    winnowTruthCache.computeIfAbsent((s, dir, guarantee), _ => {
+      guarantee: Int): DataFrame =
+    winnowTruthCache(s, dir, guarantee) {
+      import s.implicits._
       val tg = Tables.load(s, dir, "documents")
         .filter(length($"text") >= guarantee)
         .select($"doc_id".as("id"), explode(expr(
@@ -523,8 +510,7 @@ object MiningQueries {
       tg.join(dupG.select("g"), Seq("g"), "left_semi")
         .select($"id").distinct()
         .localCheckpoint(true)
-    })
-  }
+    }
 
   def q183WinnowEval(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -767,17 +753,15 @@ object MiningQueries {
     * mixTagged chain (q175/q181) all read ONE eagerly checkpointed
     * materialization instead of each re-running the bucket histogram +
     * ECDF walk (the [[sharedSurprisal]] discipline one layer up). */
-  private val calibFrameCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+  private val calibFrameCache = SessionArtifact[DataFrame]("calib_frame")
 
-  private[queries] def sharedCalibration(s: SparkSession, dir: String): DataFrame = {
-    SessionCaches.purgeStopped(calibFrameCache)(_._1)
-    val perDoc = sharedSurprisal(s, dir) // resolve BEFORE entering the cache
-    calibFrameCache.computeIfAbsent((s, dir), _ =>
+  private[queries] def sharedCalibration(s: SparkSession, dir: String): DataFrame =
+    calibFrameCache(s, dir) {
+      val perDoc = sharedSurprisal(s, dir)
       SurprisalScore.sourceCalibrationFrom(perDoc,
           Tables.load(s, dir, "documents"), "doc_id", "source")
-        .localCheckpoint(true))
-  }
+        .localCheckpoint(true)
+    }
 
   def q171ScoreCalibration(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -838,13 +822,11 @@ object MiningQueries {
     * applied to the quality-calibration stack; with this, every
     * serving artifact in the engine persists: vectors q165, LSH q173,
     * NB q174, calibration here). */
-  private val calibRegistryCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]())
+  private val calibRegistryCache = SessionArtifact[(DataFrame, DataFrame)]("calib_registry")
 
   private[queries] def sharedPersistedCalibRegistry(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    SessionCaches.purgeStopped(calibRegistryCache)(_._1)
-    calibRegistryCache.computeIfAbsent((s, dir), _ => {
+      : (DataFrame, DataFrame) =
+    calibRegistryCache(s, dir) {
       val docs = Tables.load(s, dir, "documents")
       val lm = SurprisalScore.bigramModel(docs, "doc_id", "text")
       val scored = SurprisalScore.bucketedScoresFrom(
@@ -857,8 +839,7 @@ object MiningQueries {
         Seq("lm" -> lm, "calib" -> calib))
       (reg.read(s, root, "calib_registry", v, "lm"),
         reg.read(s, root, "calib_registry", v, "calib"))
-    })
-  }
+    }
 
   /** q176: calibrated-gate SERVING from the loaded registry — the
     * arrival slice (doc_id % 10 = 0) scores itself against the LOADED
@@ -920,14 +901,12 @@ object MiningQueries {
     * materialized sample): (doc_id, source, n_tokens, is_uniq,
     * cal_keep) — exact-dedup first-ownership plus the calibrated-gate
     * verdict, computed ONCE so the two queries cannot fork. */
-  private val mixTagCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+  private val mixTagCache = SessionArtifact[DataFrame]("mix_tag")
 
-  private def mixTagged(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    SessionCaches.purgeStopped(mixTagCache)(_._1)
-    val calib = sharedCalibration(s, dir) // resolve BEFORE entering the cache
-    mixTagCache.computeIfAbsent((s, dir), _ => {
+  private def mixTagged(s: SparkSession, dir: String): DataFrame =
+    mixTagCache(s, dir) {
+      import s.implicits._
+      val calib = sharedCalibration(s, dir)
       val docs = Tables.load(s, dir, "documents")
       val base = docs.select($"doc_id", $"source",
         graft.functions.TextFunctions.contentHash($"text").as("h"),
@@ -941,8 +920,7 @@ object MiningQueries {
         .withColumn("cal_keep", coalesce($"cal_keep", lit(0L)))
         .select($"doc_id", $"source", $"n_tokens", $"is_uniq", $"cal_keep")
         .localCheckpoint(true)
-    })
-  }
+    }
 
   def q175MixingPlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -437,14 +437,11 @@ object MiscQueries {
     * generation 2 (stranding generation 1 below the floor — the gc
     * candidate q199 exists to surface), and every single-generation
     * kind pins its latest. */
-  private val pinSetupCache = SessionCaches.registerMap(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), java.lang.Boolean]())
+  private val pinSetupCache = SessionArtifact[Unit]("pin_posture")
 
-  private def sharedPinPosture(s: SparkSession, dir: String): Unit = {
-    SessionCaches.purgeStopped(pinSetupCache)(_._1)
-    forceAllPublishes(s, dir) // publishes resolve BEFORE the cache slot
-    pinSetupCache.computeIfAbsent((s, dir), _ => {
+  private def sharedPinPosture(s: SparkSession, dir: String): Unit =
+    pinSetupCache(s, dir) {
+      forceAllPublishes(s, dir)
       val reg = graft.ext.ArtifactRegistry
       val root = RegistryRoots.root(s, dir)
       RegistryKinds.foreach { k =>
@@ -454,9 +451,7 @@ object MiscQueries {
         }
         reg.setPin(s, root, k, v)
       }
-      java.lang.Boolean.TRUE
-    })
-  }
+    }
 
   /** q199: registry RETENTION PLAN — the ops query an operator runs
     * before `gc`, now data-driven by the pin log instead of a number

@@ -104,7 +104,7 @@ object Reference {
       mapping = MappingConfig(mainContent = "o_orderpriority", groupBy = None),
       prompt = PromptTemplate("Order {o_orderkey} priority {o_orderpriority}"),
       output = OutputConfig(includePrompt = true, includeTimestamp = false))
-    val (results, _) = BatchPipeline.run(
+    val (results, _, _) = BatchPipeline.run(
       Tables.load(s, dir, "orders"), cfg, DeterministicEnricher(),
       orderCols = Seq($"o_orderkey"))
     results
@@ -172,14 +172,11 @@ object Reference {
     * enriched and published WITH its certificate as one registry
     * generation, once per (session, dir). What a real stop leaves on
     * storage; q198 resumes from nothing else. */
-  private val enrichCkptCache = SessionCaches.registerMap(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (DataFrame, DataFrame, Long)]())
+  private val enrichCkptCache = SessionArtifact[(DataFrame, DataFrame, Long)]("enrich_ckpt")
 
   private[queries] def sharedEnrichCheckpoint(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, Long) = {
-    SessionCaches.purgeStopped(enrichCkptCache)(_._1)
-    enrichCkptCache.computeIfAbsent((s, dir), _ => {
+      : (DataFrame, DataFrame, Long) =
+    enrichCkptCache(s, dir) {
       import graft.enrich.EnrichCheckpoint
       val indexed = enrichResumeInput(s, dir)
       val pos = indexed.count() / 2
@@ -191,8 +188,7 @@ object Reference {
       val v = EnrichCheckpoint.publish(s, root, "enrich_ckpt", pre, pos)
       (reg.read(s, root, "enrich_ckpt", v, "results"),
         reg.read(s, root, "enrich_ckpt", v, "cursor"), pos)
-    })
-  }
+    }
 
   /** q198: batch pause→resume PARITY for enrichment — the last
     * behavioral delta vs the reference's mid-job pause
@@ -243,14 +239,11 @@ object Reference {
     * generation, once per (session, dir). What a stop after each
     * group's second turn leaves on storage; q201 resumes from nothing
     * else. */
-  private val convCkptCache = SessionCaches.registerMap(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (DataFrame, DataFrame)]())
+  private val convCkptCache = SessionArtifact[(DataFrame, DataFrame)]("conv_ckpt")
 
   private[queries] def sharedConvCheckpoint(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    SessionCaches.purgeStopped(convCkptCache)(_._1)
-    convCkptCache.computeIfAbsent((s, dir), _ => {
+      : (DataFrame, DataFrame) =
+    convCkptCache(s, dir) {
       import graft.enrich.ConversationCheckpoint
       val input = convResumeInput(s, dir)
       val w = org.apache.spark.sql.expressions.Window
@@ -269,8 +262,7 @@ object Reference {
         "o_custkey", "prompt", cursorTurn = 2L)
       (reg.read(s, root, "conv_ckpt", v, "results"),
         reg.read(s, root, "conv_ckpt", v, "cursor"))
-    })
-  }
+    }
 
   /** q201: MID-GROUP pause→resume PARITY for grouped conversations —
     * the grouped twin of q198 and the reference's actual pause point

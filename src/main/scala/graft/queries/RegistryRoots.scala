@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.SparkSession
 
@@ -11,42 +10,27 @@ import org.apache.spark.sql.SparkSession
   *
   * [[graft.ext.VectorIndexStore.defaultPath]] is jvmToken-scoped, so it
   * OUTLIVES the session-scoped publish caches. Without this allocator,
-  * any cache drop — a stopped-and-recreated SparkSession purged by
-  * [[SessionCaches.purgeStopped]], or the [[SketchQueries.vecCacheClear]]
-  * test hook — made the caches republish into the SAME root, silently
-  * shifting versions to 3/4 under oracles that (correctly) pin 1/2.
-  * Here the root itself lives in a session-scoped cache: whenever the
-  * publish caches drop (new session, or the engine-wide
-  * [[SessionCaches.clearRegistered]]), the next publish lands in a
-  * FRESH generation directory and the whole surface republishes from
-  * version 1 — versions inside any root are exactly what one cold pass
-  * publishes, ever. Two concurrent sessions over the same dir get
-  * DISTINCT roots too (previously they interleaved publishes into one
-  * root). Abandoned roots stay on disk until the
-  * [[graft.ext.VectorIndexStore]] JVM-exit sweep — the registry is
+  * any cache drop — a stopped-and-recreated SparkSession, or
+  * [[SessionArtifacts.clear]] — made the caches republish into the SAME
+  * root, silently shifting versions to 3/4 under oracles that
+  * (correctly) pin 1/2. Here the root itself is a session artifact:
+  * whenever the publish caches drop, the root drops with them, the next
+  * publish lands in a FRESH generation directory and the whole surface
+  * republishes from version 1 — versions inside any root are exactly
+  * what one cold pass publishes, ever. Two concurrent sessions over the
+  * same dir get DISTINCT roots too. Abandoned roots stay on disk until
+  * the [[graft.ext.VectorIndexStore]] JVM-exit sweep — the registry is
   * write-once by design, and a stale root may still be pinned by a
-  * cached loaded frame of a module whose cache predates the reset. */
+  * loaded frame a query already holds. */
 private[graft] object RegistryRoots {
 
   private val gen = new AtomicLong(0L)
-  private val rootCache =
-    SessionCaches.registerMap(new ConcurrentHashMap[(SparkSession, String), String]())
+  private val roots = SessionArtifact[String]("registry_root")
 
   /** The registry root for this (session, data dir) — allocated fresh
-    * on first use after any session replacement or engine-wide cache
-    * clear. computeIfAbsent is safe here: the mapping function touches
-    * no other key of this map. */
-  def root(s: SparkSession, dir: String): String = {
-    SessionCaches.purgeStopped(rootCache)(_._1)
-    rootCache.computeIfAbsent((s, dir), _ =>
-      f"${graft.ext.VectorIndexStore.defaultPath(dir, "registry")}/g${gen.incrementAndGet()}%04d")
-  }
-
-  /** Drop every allocated root so the next publish starts a fresh
-    * generation directory. Only called from
-    * [[SessionCaches.clearRegistered]] — resetting roots WITHOUT
-    * clearing the publish caches would desynchronize the audit
-    * (cached publishes point at the old root; new publishes at the
-    * new one). */
-  private[queries] def reset(): Unit = rootCache.clear()
+    * on first use after any session replacement or store clear. */
+  def root(s: SparkSession, dir: String): String =
+    roots(s, dir) {
+      f"${graft.ext.VectorIndexStore.defaultPath(dir, "registry")}/g${gen.incrementAndGet()}%04d"
+    }
 }

@@ -16,113 +16,76 @@ import graft.ext.{HeavyHitters, Hll, KMeansInt, PassageDedup, Quantize}
   */
 object SketchQueries {
 
-  /** Session-scoped cache of the vector-index training chain, shared
-    * across the k-means/PQ family within one process (the
-    * [[AnalyticsQueries]] graph-cache discipline applied to vectors):
-    * q77 and q110's coarse quantizer run the IDENTICAL full-dim k=8
-    * Lloyd fit over the same SQ8 codes, and q107/q108 train the SAME
+  /** The vector-index training chain, shared across the k-means/PQ
+    * family: q77 and q110's coarse quantizer run the IDENTICAL full-dim
+    * k=8 Lloyd fit over the same SQ8 codes, and q107/q108 train the SAME
     * four per-subspace codebooks — without sharing, each query retrains
     * from scratch, the dominant cost of the family (q107+q108+q110 =
-    * the top of the warm bench). Cached entries: the eagerly
-    * checkpointed codes (n×64 longs), the full-dim fit, the subspace
-    * fits, and the IVF-PQ index — all bounded by the embeddings table,
-    * hash-neutral (deterministic training: same input → same fixed
-    * point). Entries evict once their session's context stops
-    * ([[SessionCaches.purgeStopped]]); a long-lived service would
-    * additionally evict on source-data version change, keyed here by
-    * the data dir. */
-  private val vecCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), AnyRef]())
+    * the top of the warm bench). Artifacts: the eagerly checkpointed
+    * codes (n×64 longs), the full-dim fit, the subspace fits, and the
+    * IVF-PQ index — all bounded by the embeddings table, hash-neutral
+    * (deterministic training: same input → same fixed point). */
+  private val codesCache = SessionArtifact[DataFrame]("sq8_codes")
+  private val fullFitCache = SessionArtifact[KMeansInt.FitResult]("kmeans_fullfit")
+  private val subFitsCache = SessionArtifact[IndexedSeq[KMeansInt.FitResult]]("pq_subfits")
+  private val ivfPqCache = SessionArtifact[IvfPq]("ivfpq")
+  private val persistedIvfPqCache = SessionArtifact[IvfPq]("ivfpq_persisted")
+  private val oldSubFitsCache = SessionArtifact[IndexedSeq[KMeansInt.FitResult]]("pq_subfits_old")
+  private val frozenBooksCache = SessionArtifact[DataFrame]("pq_books_old_persisted")
+  private val oldFullFitCache = SessionArtifact[KMeansInt.FitResult]("kmeans_fullfit_old")
+  private val oldIvfPqCache = SessionArtifact[IvfPq]("ivfpq_old")
+  private val oldPersistedIvfPqCache = SessionArtifact[IvfPq]("ivfpq_old_persisted")
+  private val compactedIvfPqCache = SessionArtifact[IvfPq]("ivfpq_old_v2_persisted")
+  private val ivfPqRegistryCache = SessionArtifact[(IvfPq, Long, Long)]("ivfpq_registry")
 
-  /** Nest-safe memoization. NOT `computeIfAbsent`: a mapping function
-    * that touches other keys of the same ConcurrentHashMap violates its
-    * contract and throws `IllegalStateException: Recursive update`
-    * whenever two keys land in one hash bin — intermittent per JVM,
-    * since bin placement hashes the SparkSession's identity. Instead:
-    * lock-free read for the hot hit path, then double-checked compute
-    * under the map's monitor. The monitor is reentrant, so even a
-    * dependent entry populated from inside `mk` is safe (the entry
-    * points below additionally hoist their dependencies OUT of `mk`,
-    * so the nested path never occurs). Single compute per key — the
-    * eagerly-checkpointed values must not be built twice. */
-  private def vcached[T <: AnyRef](s: SparkSession, dir: String, tag: String)(
-      mk: => T): T = {
-    SessionCaches.purgeStopped(vecCache)(_._1)
-    val key = (s, dir, tag)
-    val hit = vecCache.get(key)
-    if (hit != null) hit.asInstanceOf[T]
-    else vecCache.synchronized {
-      val again = vecCache.get(key)
-      if (again != null) again.asInstanceOf[T]
-      else { val v = mk; vecCache.put(key, v); v }
-    }
-  }
-
-  /** Test hook: drop every cached artifact ENGINE-WIDE — all modules'
-    * per-(session, dir) caches plus the registry-root allocation
-    * ([[SessionCaches.clearRegistered]]) — so a spec can exercise each
-    * entry point of the training chain against an EMPTY cache (the
-    * regression surface of the former nested-computeIfAbsent bug).
-    * Engine-wide on purpose: clearing only THIS module's caches while
-    * registry publishes stayed cached elsewhere would republish into a
-    * shared root and shift version numbers under the gated oracles
-    * (see [[RegistryRoots]]). */
-  private[graft] def vecCacheClear(): Unit = SessionCaches.clearRegistered()
+  /** (coarse, asg, books, enc) — the IVF-PQ index parts. */
+  private[queries] type IvfPq = (DataFrame, DataFrame, DataFrame, DataFrame)
 
   /** The SQ8 code matrix, materialized once per (session, dir): the
     * corpus min/max pass behind the codes runs once, not once per
     * consumer training stage. */
   private[queries] def sharedCodes(s: SparkSession, dir: String): DataFrame =
-    vcached(s, dir, "codes") {
+    codesCache(s, dir) {
       Quantize.sq8Codes(Tables.load(s, dir, "embeddings"), "vec_id", "embedding")
         .localCheckpoint(true)
     }
 
   /** The full-dim k=8 converged fit shared by q77 (as the query result)
     * and q110 (as the IVF coarse quantizer). */
-  private[queries] def sharedFullFit(s: SparkSession, dir: String): KMeansInt.FitResult = {
-    val codes = sharedCodes(s, dir) // resolve BEFORE entering the cache
-    vcached(s, dir, "fullfit") {
-      KMeansInt.fitConvergedAssign(codes,
+  private[queries] def sharedFullFit(s: SparkSession, dir: String): KMeansInt.FitResult =
+    fullFitCache(s, dir) {
+      KMeansInt.fitConvergedAssign(sharedCodes(s, dir),
         k = graft.ext.ProductQuantize.CoarseK, maxRounds = KMeansInt.MaxRounds)
     }
-  }
 
   /** The four per-subspace PQ fits shared by q107 (encode + recon
     * error) and q108 (codebooks + compressed corpus). */
   private[queries] def sharedSubFits(s: SparkSession, dir: String)
-      : IndexedSeq[KMeansInt.FitResult] = {
-    val codes = sharedCodes(s, dir) // resolve BEFORE entering the cache
-    vcached(s, dir, "subfits") {
-      graft.ext.ProductQuantize.subspaceFits(codes)
+      : IndexedSeq[KMeansInt.FitResult] =
+    subFitsCache(s, dir) {
+      graft.ext.ProductQuantize.subspaceFits(sharedCodes(s, dir))
     }
-  }
 
   /** The full IVF-PQ index (coarse, asg, residual books, compressed
     * residual corpus), built on the shared coarse fit. */
-  private[queries] def sharedIvfPqIndex(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val codes = sharedCodes(s, dir)   // resolve dependencies BEFORE
-    val full = sharedFullFit(s, dir)  // entering the cache
-    vcached(s, dir, "ivfpq") {
-      graft.ext.ProductQuantize.ivfPqIndexFrom(codes, full)
+  private[queries] def sharedIvfPqIndex(s: SparkSession, dir: String): IvfPq =
+    ivfPqCache(s, dir) {
+      val codes = sharedCodes(s, dir)
+      graft.ext.ProductQuantize.ivfPqIndexFrom(codes, sharedFullFit(s, dir))
     }
-  }
 
   /** The PERSISTED IVF-PQ index: written to parquet once per
     * (session, dir) and handed back as LOADED lazy scans — executing a
     * probe against the returned frames reads parquet and touches no
     * training code path (the ingest-vs-serving split of
     * [[graft.ext.VectorIndexStore]]). */
-  private[queries] def sharedPersistedIvfPq(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val idx = sharedIvfPqIndex(s, dir) // resolve BEFORE entering the cache
-    vcached(s, dir, "ivfpq_persisted") {
+  private[queries] def sharedPersistedIvfPq(s: SparkSession, dir: String): IvfPq =
+    persistedIvfPqCache(s, dir) {
+      val idx = sharedIvfPqIndex(s, dir)
       val path = graft.ext.VectorIndexStore.defaultPath(dir, "ivfpq")
       graft.ext.VectorIndexStore.writeIvfPq(idx, path)
       graft.ext.VectorIndexStore.readIvfPq(s, path)
     }
-  }
 
   /** The four per-subspace PQ fits trained ONLY on the standing corpus
     * (vec_id % 10 ≠ 0) — the frozen codebooks q166's new-arrival batch
@@ -130,12 +93,10 @@ object SketchQueries {
     * from [[sharedSubFits]]: frozen-codebook semantics require books
     * that never saw the new vectors. */
   private[queries] def sharedOldSubFits(s: SparkSession, dir: String)
-      : IndexedSeq[KMeansInt.FitResult] = {
-    val codes = sharedCodes(s, dir) // resolve BEFORE entering the cache
-    vcached(s, dir, "subfits_old") {
-      graft.ext.ProductQuantize.subspaceFits(codes.filter(col("id") % 10 =!= 0))
+      : IndexedSeq[KMeansInt.FitResult] =
+    oldSubFitsCache(s, dir) {
+      graft.ext.ProductQuantize.subspaceFits(sharedCodes(s, dir).filter(col("id") % 10 =!= 0))
     }
-  }
 
   /** q77: k-means (k=8) over int8 quantization codes, trained to the
     * EXACT assignment-set fixed point ([[KMeansInt.fitConvergedAssign]]
@@ -745,15 +706,14 @@ object SketchQueries {
     * ([[sharedOldSubFits]]), persisted to parquet, handed back as the
     * LOADED scan (so q166's encode provably reads storage, not the
     * training session). */
-  private[queries] def sharedFrozenBooks(s: SparkSession, dir: String): DataFrame = {
-    val fits = sharedOldSubFits(s, dir) // resolve BEFORE entering the cache
-    vcached(s, dir, "books_old_persisted") {
+  private[queries] def sharedFrozenBooks(s: SparkSession, dir: String): DataFrame =
+    frozenBooksCache(s, dir) {
+      val fits = sharedOldSubFits(s, dir)
       val path = graft.ext.VectorIndexStore.defaultPath(dir, "books_old")
       graft.ext.VectorIndexStore.writeBooks(
         graft.ext.ProductQuantize.codebooksFromFits(fits), path)
       graft.ext.VectorIndexStore.readBooks(s, path)
     }
-  }
 
   /** q166: frozen-codebook INGEST — encode a batch of NEW vectors
     * (vec_id % 10 = 0, the arrival slice) against PQ codebooks trained
@@ -806,26 +766,22 @@ object SketchQueries {
 
   /** The IVF-PQ index trained ONLY on the standing corpus
     * (vec_id % 10 ≠ 0), persisted to parquet and handed back LOADED —
-    * the frozen index q167's arrival batch is added against.
-    * Three sequential cache entries, dependencies hoisted out of every
-    * compute closure (the nest-safe discipline). */
-  private[queries] def sharedOldIvfPq(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val codes = sharedCodes(s, dir) // resolve BEFORE entering the cache
-    val old = codes.filter(col("id") % 10 =!= 0)
-    val fit = vcached(s, dir, "fullfit_old") {
-      KMeansInt.fitConvergedAssign(old,
-        k = graft.ext.ProductQuantize.CoarseK, maxRounds = KMeansInt.MaxRounds)
-    }
-    val idx = vcached(s, dir, "ivfpq_old") {
-      graft.ext.ProductQuantize.ivfPqIndexFrom(old, fit)
-    }
-    vcached(s, dir, "ivfpq_old_persisted") {
+    * the frozen index q167's arrival batch is added against: fit,
+    * index and persisted index are three artifacts. */
+  private[queries] def sharedOldIvfPq(s: SparkSession, dir: String): IvfPq =
+    oldPersistedIvfPqCache(s, dir) {
+      val old = sharedCodes(s, dir).filter(col("id") % 10 =!= 0)
+      val fit = oldFullFitCache(s, dir) {
+        KMeansInt.fitConvergedAssign(old,
+          k = graft.ext.ProductQuantize.CoarseK, maxRounds = KMeansInt.MaxRounds)
+      }
+      val idx = oldIvfPqCache(s, dir) {
+        graft.ext.ProductQuantize.ivfPqIndexFrom(old, fit)
+      }
       val path = graft.ext.VectorIndexStore.defaultPath(dir, "ivfpq_old")
       graft.ext.VectorIndexStore.writeIvfPq(idx, path)
       graft.ext.VectorIndexStore.readIvfPq(s, path)
     }
-  }
 
   /** q167: IVF-PQ index ADD — the full incremental-ingest path q166
     * covers for plain PQ, applied to the production index layout: the
@@ -904,19 +860,16 @@ object SketchQueries {
     * takedown batch), deleted via [[graft.ext.ProductQuantize.ivfPqDelete]],
     * written to its own parquet location and handed back LOADED — so
     * q168's report provably reads the compacted storage, never the
-    * in-memory diff. Dependencies resolved BEFORE entering the cache
-    * slot (the nest-safe discipline). */
-  private[queries] def sharedCompactedOldIvfPq(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val v1 = sharedOldIvfPq(s, dir) // resolve BEFORE entering the cache
-    vcached(s, dir, "ivfpq_old_v2_persisted") {
+    * in-memory diff. */
+  private[queries] def sharedCompactedOldIvfPq(s: SparkSession, dir: String): IvfPq =
+    compactedIvfPqCache(s, dir) {
+      val v1 = sharedOldIvfPq(s, dir)
       val deletes = v1._2.filter(col("id") % 7 === 0).select(col("id"))
       val v2 = graft.ext.ProductQuantize.ivfPqDelete(v1, deletes)
       val path = graft.ext.VectorIndexStore.defaultPath(dir, "ivfpq_old_v2")
       graft.ext.VectorIndexStore.writeIvfPq(v2, path)
       graft.ext.VectorIndexStore.readIvfPq(s, path)
     }
-  }
 
   /** q168: index DELETE + COMPACT — the retraction pass that completes
     * the persisted index's lifecycle (build/probe q165, frozen-book
@@ -1005,10 +958,10 @@ object SketchQueries {
     * recorded in the manifest are the XOR id-checksums of each
     * generation's membership (the q193 manifest discipline). */
   private[queries] def sharedIvfPqRegistry(s: SparkSession, dir: String)
-      : ((DataFrame, DataFrame, DataFrame, DataFrame), Long, Long) = {
-    val codes = sharedCodes(s, dir)  // resolve dependencies BEFORE
-    val v1idx = sharedOldIvfPq(s, dir) // entering the cache slot
-    vcached(s, dir, "ivfpq_registry") {
+      : (IvfPq, Long, Long) =
+    ivfPqRegistryCache(s, dir) {
+      val codes = sharedCodes(s, dir)
+      val v1idx = sharedOldIvfPq(s, dir)
       import org.apache.spark.sql.functions.{col, posexplode, expr}
       val reg = graft.ext.ArtifactRegistry
       val root = RegistryRoots.root(s, dir)
@@ -1025,7 +978,6 @@ object SketchQueries {
       (reg.readIvfPq(s, root, "ivfpq", v1), v1,
         reg.latestVersion(s, root, "ivfpq"))
     }
-  }
 
   /** q194: registry-PINNED serve — the read path the versioned
     * registry exists for: a probe batch serves against generation 1 of

@@ -23,18 +23,14 @@ object TextQueries {
     * pipeline computes once per corpus version (the
     * [[AnalyticsQueries]] graph-cache / [[SketchQueries]] vector-cache
     * discipline). Hash-neutral: consumers run the identical operators
-    * over the identical sets. Entries are keyed by SparkSession, live
-    * for the session, and evict once the owning session's context
-    * stops ([[SessionCaches.purgeStopped]] — the checkpoint blocks die
-    * with it); `localCheckpoint` blocks are also unrecoverable after
-    * executor loss, a reason a long-lived deployment would persist the
-    * artifact to storage instead ([[graft.ext.VectorIndexStore]]). */
-  private val shingleCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+    * over the identical sets. `localCheckpoint` blocks are
+    * unrecoverable after executor loss, a reason a long-lived
+    * deployment would persist the artifact to storage instead
+    * ([[graft.ext.VectorIndexStore]]). */
+  private val shingleCache = SessionArtifact[DataFrame]("shingle_sets")
 
-  private[queries] def sharedShingleSets(s: SparkSession, dir: String): DataFrame = {
-    SessionCaches.purgeStopped(shingleCache)(_._1)
-    shingleCache.computeIfAbsent((s, dir), _ =>
+  private[queries] def sharedShingleSets(s: SparkSession, dir: String): DataFrame =
+    shingleCache(s, dir) {
       // id-hash-partitioned + id-sorted INTO the checkpoint
       // (GraftShim.localCheckpointHashLayout — plain localCheckpoint
       // drops the layout under AQE), so every downstream id-keyed
@@ -50,8 +46,8 @@ object TextQueries {
       org.apache.spark.sql.GraftShim.localCheckpointHashLayout(
         Dedup.hashedShingleSets(Tables.load(s, dir, "documents"),
           "doc_id", "text", n = 8),
-        "id", s.conf.get("spark.sql.shuffle.partitions").toInt))
-  }
+        "id", s.conf.get("spark.sql.shuffle.partitions").toInt)
+    }
 
   /** Session-scoped cache of the ANNOTATED inverted shingle index over
     * [[sharedShingleSets]] ([[Dedup.shingleBuckets]] — (sh, members
@@ -60,15 +56,13 @@ object TextQueries {
     * previously re-ran it with their own doc filter, which is a
     * row-local member filter of THESE buckets (nsh rides in the
     * bucket, so cap-after-filter commutes). */
-  private val bucketCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+  private val bucketCache = SessionArtifact[DataFrame]("shingle_buckets")
 
-  private[queries] def sharedShingleBuckets(s: SparkSession, dir: String): DataFrame = {
-    SessionCaches.purgeStopped(bucketCache)(_._1)
-    val sets = sharedShingleSets(s, dir) // resolve BEFORE the slot (nest-safety)
-    bucketCache.computeIfAbsent((s, dir), _ =>
-      Dedup.shingleBuckets(sets).localCheckpoint(true))
-  }
+  private[queries] def sharedShingleBuckets(s: SparkSession, dir: String): DataFrame =
+    bucketCache(s, dir) {
+      val sets = sharedShingleSets(s, dir)
+      Dedup.shingleBuckets(sets).localCheckpoint(true)
+    }
 
   /** Session-scoped cache of the verified n-gram Jaccard pairs at the
     * family's LOWEST gate (θ = 0.2, the q19 operator): the exact
@@ -77,17 +71,15 @@ object TextQueries {
     * θ = 0.5) is a row filter of this frame — J ≥ 0.5 pairs all clear
     * the θ = 0.2 size prefilter (J ≤ size ratio), so nothing a direct
     * θ = 0.5 run would emit is missing. Candidate-bounded rows. */
-  private val jaccardPairsCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+  private val jaccardPairsCache = SessionArtifact[DataFrame]("jaccard_pairs")
 
-  private[queries] def sharedJaccardPairs(s: SparkSession, dir: String): DataFrame = {
-    SessionCaches.purgeStopped(jaccardPairsCache)(_._1)
-    val sets = sharedShingleSets(s, dir) // resolve BEFORE the slot
-    val buckets = sharedShingleBuckets(s, dir)
-    jaccardPairsCache.computeIfAbsent((s, dir), _ =>
+  private[queries] def sharedJaccardPairs(s: SparkSession, dir: String): DataFrame =
+    jaccardPairsCache(s, dir) {
+      val sets = sharedShingleSets(s, dir)
+      val buckets = sharedShingleBuckets(s, dir)
       Dedup.ngramJaccardPairsFromBuckets(sets, buckets,
-        threshold = 0.2, maxShingleDf = 20).localCheckpoint(true))
-  }
+        threshold = 0.2, maxShingleDf = 20).localCheckpoint(true)
+    }
 
   /** q16: per-document text statistics — token counts, average token
     * length, stopword ratio, punctuation ratio, composite quality score.
@@ -458,8 +450,7 @@ object TextQueries {
     * The model-registry half of the q169 train/serve split — the
     * [[graft.ext.VectorIndexStore]] / q173 discipline applied to the
     * quality classifier. */
-  private val nbModelCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]())
+  private val nbModelCache = SessionArtifact[(DataFrame, DataFrame)]("nb_model")
 
   /** THE q169 training recipe — Gopher rule gate as teacher, standing
     * slice (doc_id % 10 ≠ 0) as training data — stated once, so the
@@ -478,9 +469,8 @@ object TextQueries {
   }
 
   private[queries] def sharedPersistedNbModel(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    SessionCaches.purgeStopped(nbModelCache)(_._1)
-    nbModelCache.computeIfAbsent((s, dir), _ => {
+      : (DataFrame, DataFrame) =
+    nbModelCache(s, dir) {
       val (w, g) = nbTeacherTrain(s, dir)
       val reg = graft.ext.ArtifactRegistry
       val root = RegistryRoots.root(s, dir)
@@ -491,8 +481,7 @@ object TextQueries {
         Seq("weights" -> w, "globals" -> g))
       (reg.read(s, root, "nb_model", v, "weights"),
         reg.read(s, root, "nb_model", v, "globals"))
-    })
-  }
+    }
 
   /** q174: NB scoring against the LOADED model — q169's exact
     * semantics, but the weight table and globals arrive from parquet
@@ -945,20 +934,17 @@ object TextQueries {
     * derive its clone groups (min doc_id + n_copies per content) from
     * the artifact without a second text scan. Same lifecycle as
     * [[sharedShingleSets]]. */
-  private val deTokenCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+  private val deTokenCache = SessionArtifact[DataFrame]("de_token")
 
-  private[queries] def sharedDeTokenSets(s: SparkSession, dir: String): DataFrame = {
-    SessionCaches.purgeStopped(deTokenCache)(_._1)
-    deTokenCache.computeIfAbsent((s, dir), _ => {
+  private[queries] def sharedDeTokenSets(s: SparkSession, dir: String): DataFrame =
+    deTokenCache(s, dir) {
       import s.implicits._
       Tables.load(s, dir, "documents")
         .filter($"lang" === "de")
         .select($"doc_id", contentHash($"text").as("h"),
           array_sort(array_distinct(tokens(lower($"text")))).as("ts"))
         .localCheckpoint(true)
-    })
-  }
+    }
 
   /** Session-scoped cache of the VERIFIED prefix-join pairs over the
     * raw de slice (q116's exact relation before its final sort) — the
@@ -976,18 +962,15 @@ object TextQueries {
     * for ANY per-doc key order — so the verified relation is
     * corpus-restriction compatible. Output is pair-bounded (the
     * blocked slice keeps it linear; see the q116 scaladoc). */
-  private val prefixPairsCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+  private val prefixPairsCache = SessionArtifact[DataFrame]("prefix_pairs")
 
-  private[queries] def sharedPrefixPairs(s: SparkSession, dir: String): DataFrame = {
-    SessionCaches.purgeStopped(prefixPairsCache)(_._1)
-    val toks = sharedDeTokenSets(s, dir) // resolve BEFORE the slot (nest-safety)
-    prefixPairsCache.computeIfAbsent((s, dir), _ => {
+  private[queries] def sharedPrefixPairs(s: SparkSession, dir: String): DataFrame =
+    prefixPairsCache(s, dir) {
+      val toks = sharedDeTokenSets(s, dir)
       import s.implicits._
       prefixJoinPairs(toks.select($"doc_id", $"ts").filter(size($"ts") > 0))
         .localCheckpoint(true)
-    })
-  }
+    }
 
   def q116PrefixJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1093,18 +1076,15 @@ object TextQueries {
     * holds artifacts, not corpus-sized plans. Distinct from
     * [[sharedPersistedBpe]], which trains the FROZEN standing-slice
     * tokenizer the registry serves. */
-  private val bpeTrainAllCache = SessionCaches.registerMap(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), graft.ext.BpeTrain.Trained]())
+  private val bpeTrainAllCache = SessionArtifact[graft.ext.BpeTrain.Trained]("bpe_train_all")
 
   private def sharedBpeTrainedAll(s: SparkSession, dir: String)
-      : graft.ext.BpeTrain.Trained = {
-    SessionCaches.purgeStopped(bpeTrainAllCache)(_._1)
-    bpeTrainAllCache.computeIfAbsent((s, dir), _ =>
+      : graft.ext.BpeTrain.Trained =
+    bpeTrainAllCache(s, dir) {
       graft.ext.BpeTrain.trainBatched(
         graft.ext.BpeTrain.wordDict(Tables.load(s, dir, "documents"), "text"),
-        BpeMerges))
-  }
+        BpeMerges)
+    }
 
   /** Shared DuckDB BPE training chain for q143/q145: doc-level valid
     * tokens `toks(doc_id, word)`, the word dictionary, and
@@ -1271,13 +1251,11 @@ object TextQueries {
     * registry's LAST uncovered trained artifact (after the NB weights,
     * the calibration registry, the PQ codebooks, the LSH index, the
     * BM25 index, the dup-gram dictionary). */
-  private val bpeStoreCache = SessionCaches.registerMap(new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]())
+  private val bpeStoreCache = SessionArtifact[(DataFrame, DataFrame)]("bpe_store")
 
   private[queries] def sharedPersistedBpe(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    SessionCaches.purgeStopped(bpeStoreCache)(_._1)
-    bpeStoreCache.computeIfAbsent((s, dir), _ => {
+      : (DataFrame, DataFrame) =
+    bpeStoreCache(s, dir) {
       import graft.ext.BpeTrain
       val standing = Tables.load(s, dir, "documents").filter(col("doc_id") < 250)
       val trained = BpeTrain.trainBatched(BpeTrain.wordDict(standing, "text"), BpeMerges)
@@ -1288,8 +1266,7 @@ object TextQueries {
         Seq("merges" -> trained.merges, "dict" -> trained.dict))
       (reg.read(s, root, "bpe_tokenizer", v, "merges"),
         reg.read(s, root, "bpe_tokenizer", v, "dict"))
-    })
-  }
+    }
 
   /** q185: FROZEN tokenizer application to an arrival batch — the
     * registry serve for the tokenizer: merges load from parquet,

@@ -69,11 +69,15 @@ object Sinks {
     } finally sb.close()
   }
 
-  /** S7: consolidated CSV with header. */
+  /** S7: consolidated CSV with header. Cells keep their leading and
+    * trailing whitespace, as the reference's `csv.DictWriter` does
+    * (Spark's CSV writer trims both by default). */
   def writeCsv(df: DataFrame, path: String, singleFile: Boolean = false): Unit = {
     val out = exportLayout(df)
     (if (singleFile) out.coalesce(1) else out)
-      .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
+      .write.mode(SaveMode.Overwrite).option("header", "true")
+      .option("ignoreLeadingWhiteSpace", "false").option("ignoreTrailingWhiteSpace", "false")
+      .csv(path)
   }
 
   /** S8 (main.py:782-818): one text file per result row, named

@@ -254,7 +254,7 @@ class ArtifactRegistrySpec extends SparkSpec {
         .select($"pinned_version", $"latest_version").distinct()
         .as[(Long, Long)].collect().toSeq
     assert(versions() == Seq((1L, 2L)))
-    graft.queries.SketchQueries.vecCacheClear() // engine-wide cold caches
+    graft.queries.SessionArtifacts.clear() // engine-wide cold caches
     assert(versions() == Seq((1L, 2L)),
       "a republish after a cache clear shifted registry versions — " +
         "the root did not rotate with the publish-cache generation")

@@ -73,6 +73,31 @@ class EnrichSpec extends SparkSpec {
     assert(out(3)._1 == "system:SYS|user:dddd" && out(3)._2 == 1L) // fresh state per group
   }
 
+  test("grouped runs count a transient failure's retry") {
+    val df = Seq((1, 1L, "a"), (1, 2L, "b"), (2, 1L, "c")).toDF("grp", "seq", "prompt")
+    val metrics = new EnrichMetrics(spark)
+    val out = EnrichRunner.runConversations(df, "grp", Seq("seq"), "prompt",
+        new FailOnceEnricher("b"), AiConfig.test(), metrics = Some(metrics))
+      .select("response").as[String].collect()
+    assert(out.length == 3 && !out.contains(null))
+    assert(metrics.retries.value == 1L && metrics.errors.value == 0L)
+    assert(metrics.processed.value == 3L)
+  }
+
+  test("ungrouped map sends the system prompt before each user prompt") {
+    val df = Seq((1L, "About AI"), (2L, "About Python")).toDF("id", "prompt")
+    val recording = new Enricher {
+      def enrich(ms: Seq[Message], c: AiConfig): String =
+        ms.map(m => s"${m.role}:${m.content}").mkString("|")
+    }
+    def responses(system: Option[String]): Seq[String] =
+      EnrichRunner.mapWithResponse(df, "prompt", recording, AiConfig.test(), system)
+        .orderBy("id").select("response").as[String].collect().toSeq
+    assert(responses(Some("SYS")) ==
+      Seq("system:SYS|user:About AI", "system:SYS|user:About Python"))
+    assert(responses(None) == Seq("user:About AI", "user:About Python"))
+  }
+
   test("BatchPipeline grouped mode + file-order mode run end-to-end") {
     val df = Seq(("AI", "Teachers", "High"), ("Python", "Students", "Medium"))
       .toDF("topic", "audience", "priority")
@@ -81,7 +106,7 @@ class EnrichSpec extends SparkSpec {
       mapping = MappingConfig(mainContent = "topic", groupBy = Some("priority")),
       prompt = PromptTemplate("Write an article about {topic} for {audience}"),
       output = OutputConfig(includePrompt = true, includeTimestamp = true))
-    val (results, bad) = BatchPipeline.run(df, cfg, DeterministicEnricher())
+    val (results, bad, _) = BatchPipeline.run(df, cfg, DeterministicEnricher())
     val rows = results.collect()
     assert(rows.length == 2 && bad.count() == 0)
     assert(results.columns.toSeq == Seq("group", "main_content", "audience", "priority",
@@ -297,7 +322,7 @@ class EnrichSpec extends SparkSpec {
       mapping = MappingConfig(mainContent = "topic", groupBy = Some("priority")),
       prompt = PromptTemplate("Write about {topic} for {audience}"),
       output = OutputConfig(includePrompt = true, includeTimestamp = false))
-    val (results, bad) = BatchPipeline.run(df, cfg, DeterministicEnricher())
+    val (results, bad, _) = BatchPipeline.run(df, cfg, DeterministicEnricher())
     val rows = results.orderBy("row_index").collect()
     assert(rows.length == 2 && bad.count() == 0)
     assert(rows(0).getAs[String]("prompt") == "Write about héllo wörld for 日本語のテキスト")
@@ -317,4 +342,14 @@ class EnrichSpec extends SparkSpec {
       PipelineConfig(AiConfig.test(), MappingConfig("zzz"), PromptTemplate("{a}"))
         .validateAgainst(Seq("a", "b")))
   }
+}
+
+/** Fails the first call whose last message is `prompt` with a retryable
+  * server error, then answers like [[DeterministicEnricher]]. */
+final class FailOnceEnricher(prompt: String) extends Enricher {
+  private val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  def enrich(ms: Seq[Message], c: AiConfig): String =
+    if (ms.last.content == prompt && failed.compareAndSet(false, true))
+      throw new RuntimeException("server overloaded (503)")
+    else DeterministicEnricher().enrich(ms, c)
 }

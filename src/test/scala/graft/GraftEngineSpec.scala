@@ -11,6 +11,7 @@ import graft.model._
 class GraftEngineSpec extends SparkSpec {
 
   test("upload -> process -> status -> export both -> reset") {
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val engine = new GraftEngine(spark)
     val dir = Files.createTempDirectory("graft_engine")
     val csv = dir.resolve("articles.csv")
@@ -40,6 +41,8 @@ class GraftEngineSpec extends SparkSpec {
 
     engine.reset()
     assert(!spark.catalog.tableExists("articles"))
+    // results and the enrichment output they derive from are unpersisted
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore)
     intercept[RuntimeException](engine.status(job.jobId))
   }
 }

@@ -106,19 +106,19 @@ class SketchOpsSpec extends SparkSpec {
 
   test("vector cache: every entry point populates a FRESH cache") {
     // regression surface of the nested-computeIfAbsent bug (round 11):
-    // sharedFullFit/sharedSubFits/sharedIvfPqIndex each depend on other
-    // cache entries; populating the chain from ANY starting point on an
-    // empty cache must never throw (the former shape died with
-    // IllegalStateException "Recursive update" whenever two keys
-    // collided into one hash bin). Building the DataFrame is enough —
-    // the caches populate at plan-construction time.
+    // sharedFullFit/sharedSubFits/sharedIvfPqIndex each read other
+    // artifacts from inside their build; populating the chain from ANY
+    // starting point on an empty store must never throw (the former
+    // shape died with IllegalStateException "Recursive update" whenever
+    // two keys collided into one hash bin). Building the DataFrame is
+    // enough — the artifacts build at plan-construction time.
     val entryPoints: Seq[(String, () => Any)] = Seq(
       "q77_fullfit" -> (() => graft.queries.SketchQueries.q77Kmeans(spark, sf)),
       "q107_subfits" -> (() => graft.queries.SketchQueries.q107Pq(spark, sf)),
       "q110_ivfpq" -> (() => graft.queries.SketchQueries.q110IvfPq(spark, sf)),
       "q164_recall" -> (() => graft.queries.SketchQueries.q164IvfPqRecall(spark, sf)))
     entryPoints.foreach { case (name, build) =>
-      graft.queries.SketchQueries.vecCacheClear()
+      graft.queries.SessionArtifacts.clear()
       try build()
       catch {
         case e: IllegalStateException =>

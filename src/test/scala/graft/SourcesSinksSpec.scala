@@ -86,6 +86,15 @@ class SourcesSinksSpec extends SparkSpec {
       df.orderBy("group").collect().map(_.toSeq).toSeq)
   }
 
+  test("CSV sink keeps leading and trailing cell whitespace (csv.DictWriter parity)") {
+    val df = Seq(("g1", " a "), ("g2", "b ")).toDF("group", "response")
+    val out = Files.createTempDirectory("graft_csv_ws").toString + "/out"
+    Sinks.writeCsv(df, out, singleFile = true)
+    val back = spark.read.option("header", "true").csv(out)
+    assert(back.orderBy("group").select("response").as[String].collect().toSeq ==
+      Seq(" a ", "b "))
+  }
+
   test("JSON sink writes export layout; readable back") {
     val df = Seq(("g1", "m", "v", "resp", 1L)).toDF("group", "main_content", "zz", "response", "row_index")
     val out = Files.createTempDirectory("graft_json").toString + "/out"

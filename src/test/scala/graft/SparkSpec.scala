@@ -5,11 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session (one per suite, lazy). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = SparkSpec.session()
+  lazy val sf: String = "/root/testdata/sf0.001"
+}
+
+object SparkSpec {
+  /** The shared session, created if none is running. */
+  def session(): SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
-  lazy val sf: String = "/root/testdata/sf0.001"
 }
