@@ -59,24 +59,25 @@ object EnrichCheckpoint {
       landed => Seq("cursor" ->
         certificate(landed("results")).withColumn("cursor_pos", lit(cursorPos))))
 
-  /** The most recent resume's cached frame, per session — unpersisted
+  /** The most recent resume's cached frames, per session — unpersisted
     * when the NEXT resume in that session lands, so a long-lived
-    * session running many resumes holds at most one resumed cache at a
-    * time instead of accumulating partitions forever. Stopped sessions
-    * are purged on access (their storage died with the context).
-    * Resumes are serial per session by the same single-operator
-    * contract as [[graft.ext.ArtifactRegistry.publish]]. */
+    * session running many resumes holds one resume's caches at a time
+    * instead of accumulating partitions forever. Stopped sessions are
+    * purged on access (their storage died with the context). Resumes
+    * are serial per session by the same single-operator contract as
+    * [[graft.ext.ArtifactRegistry.publish]]. */
   private val lastResumed =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, Seq[DataFrame]]()
 
-  /** Register a freshly cached resumed frame, unpersisting the
-    * previous one for the same session (shared by the row-wise and
-    * grouped resume paths). */
-  private[enrich] def trackResumedCache(s: SparkSession, resumed: DataFrame): Unit = {
+  /** Register a resume's cached frames (the resumed frame, plus the
+    * prior results a row-wise resume caches), unpersisting the
+    * previous resume's for the same session (shared by the row-wise
+    * and grouped resume paths). */
+  private[enrich] def trackResumedCache(s: SparkSession, cached: DataFrame*): Unit = {
     val it = lastResumed.keySet.iterator()
     while (it.hasNext) if (it.next().sparkContext.isStopped) it.remove()
-    Option(lastResumed.put(s, resumed))
-      .foreach(prev => prev.unpersist(blocking = false))
+    Option(lastResumed.put(s, cached))
+      .foreach(_.foreach(_.unpersist(blocking = false)))
   }
 
   /** Resume from loaded artifacts with verification: re-fold the
@@ -106,17 +107,18 @@ object EnrichCheckpoint {
       .collect()
     val resumedPlan = EnrichRunner.resumeEnrichment(
       indexed, loadedResults, promptCol, enricher, config, metrics)
-    if (verdictRows.isEmpty)
+    if (verdictRows.isEmpty) {
+      loadedResults.unpersist(blocking = false) // refused: nothing reads the prior
       resumedPlan.limit(0)
         .withColumn("cursor_pos", lit(null).cast("long"))
         .withColumn("n_prior", lit(null).cast("long"))
-    else {
+    } else {
       // cache: callers sort the resumed frame (order restore), and a
       // sort's range-sampling pass would otherwise run the fresh
       // enrichment a second time — 2× external API calls at scale (the
       // BatchPipeline.run discipline, pipeline/BatchPipeline.scala:68)
       val resumed = resumedPlan.cache()
-      trackResumedCache(indexed.sparkSession, resumed)
+      trackResumedCache(indexed.sparkSession, resumed, loadedResults)
       resumed.withColumn("cursor_pos", lit(verdictRows(0).getLong(0)))
         .withColumn("n_prior", lit(verdictRows(0).getLong(1)))
     }

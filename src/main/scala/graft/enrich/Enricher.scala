@@ -17,10 +17,11 @@ trait Enricher extends Serializable {
     * client/connection (reference: client built once per job,
     * main.py:314-318).
     *
-    * Thread-safety: `enrich` is called serially per partition by the
-    * sequential runners, but `EnrichRunner.mapWithResponseAsync` calls
-    * it from up to `concurrency` threads concurrently — implementations
-    * used with the async path must be thread-safe. */
+    * Thread-safety: every `EnrichRunner` runner calls `enrich` from a
+    * per-task pool, up to `min(rateLimit, 10)` calls at once (only the
+    * turns of one conversation are serial), so implementations must be
+    * thread-safe. `TaskContext.get()` inside `enrich` is the calling
+    * task's. */
   def open(): Unit = ()
   /** messages = full conversation so far, last entry the user prompt. */
   def enrich(messages: Seq[Message], config: AiConfig): String
@@ -68,7 +69,7 @@ object NondeterministicEnricher {
 }
 
 /** Error-injecting wrapper for retry/quarantine tests (E2/E3).
-  * Atomic counter: safe under the async runner's concurrent calls. */
+  * Atomic counter: safe under the runners' concurrent calls. */
 final class FlakyEnricher(inner: Enricher, failEvery: Int, transient: Boolean)
     extends Enricher {
   private val callCounter = new java.util.concurrent.atomic.AtomicInteger(0)

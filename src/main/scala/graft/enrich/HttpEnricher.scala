@@ -35,7 +35,7 @@ final class EnrichHttpException(val status: Int, message: String)
   * retry duty is throwing messages the classifier understands. It is
   * Serializable (state = strings), builds its `HttpClient` in `open()`
   * per partition, and is thread-safe (JDK HttpClient + a shared
-  * immutable ObjectMapper), as the async runner requires.
+  * immutable ObjectMapper), as the concurrent runners require.
   *
   * The oracle gate never exercises this class — `DeterministicEnricher`
   * stays the data plane's default; specs drive this against a local

@@ -63,10 +63,10 @@ object CorpusQueries {
       |ORDER BY doc_id""".stripMargin
   }
 
-  /** q36: the async bounded-concurrency enrichment path (E4) through
-    * the correctness gate — same deterministic enricher semantics as
-    * the sequential runner, so the pipelined iterator's order
-    * preservation is oracle-verified on 15k rows. */
+  /** q36: the bounded-concurrency enrichment window (E4) through the
+    * correctness gate — `AiConfig.test()` keeps 10 calls in flight per
+    * task, so the window's order preservation is oracle-verified on
+    * 15k rows. */
   def q36AsyncEnrich(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.enrich.{DeterministicEnricher, EnrichRunner}
@@ -83,8 +83,7 @@ object CorpusQueries {
         lit(" order "), $"o_orderkey".cast("string")))
       .repartitionByRange($"o_orderkey")
       .sortWithinPartitions($"o_orderkey")
-    EnrichRunner.mapWithResponseAsync(o, "prompt", DeterministicEnricher(),
-        AiConfig.test(), concurrency = 8)
+    EnrichRunner.mapWithResponse(o, "prompt", DeterministicEnricher(), AiConfig.test())
       .select($"o_orderkey", $"prompt", $"response")
   }
 

@@ -1,9 +1,13 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.enrich._
 import graft.model.{AiConfig, MappingConfig, OutputConfig, PipelineConfig, PromptTemplate}
 import graft.pipeline.BatchPipeline
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 class EnrichSpec extends SparkSpec {
   import spark.implicits._
@@ -18,6 +22,27 @@ class EnrichSpec extends SparkSpec {
     assert(waited == 59000L && slept == Vector(59000L))
     now += 1000 // t=61000: the t=1000 entry has left the window — no wait
     assert(rl.acquire() == 0L)
+  }
+
+  test("rate limiter holds its trailing window under 8 concurrent callers (E1)") {
+    // a ticking clock: every read advances it 1 ms, a sleep by its length;
+    // each thread notes the last time it read, which is the time the
+    // limiter records for its acquisition
+    val clock = new java.util.concurrent.atomic.AtomicLong(0)
+    val lastRead = new ThreadLocal[Long]
+    val rl = new SlidingWindowRateLimiter(5,
+      () => { val t = clock.incrementAndGet(); lastRead.set(t); t },
+      ms => clock.addAndGet(ms))
+    val stamps = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val callers = (1 to 8).map(_ => new Thread(() =>
+      (1 to 25).foreach { _ => rl.acquire(); stamps.add(lastRead.get) }))
+    callers.foreach(_.start()); callers.foreach(_.join())
+    val times = stamps.asScala.toVector.sorted
+    assert(times.size == 200)
+    // any 6 acquisitions in a row span a whole minute: no trailing 60 s
+    // window holds more than 5
+    assert(times.sliding(6).forall(w => w.last - w.head >= 60000L),
+      times.sliding(6).find(w => w.last - w.head < 60000L).toString)
   }
 
   test("retry classification + backoff match main.py:571-604") {
@@ -115,27 +140,103 @@ class EnrichSpec extends SparkSpec {
     assert(rows(0).getAs[String]("group") == "High")
   }
 
-  test("async enrichment keeps N in flight and preserves input order (E4)") {
-    val slowEnricher = new Enricher {
-      def enrich(ms: Seq[Message], c: AiConfig): String = {
-        Thread.sleep(50); "r:" + ms.last.content
-      }
-    }
-    val df = (1 to 20).map(i => (i.toLong, s"p$i")).toDF("id", "prompt")
+  test("the window keeps min(rate, 10) calls in flight per task, in input order (E4)") {
+    val df = (1 to 40).map(i => (i.toLong, s"p$i")).toDF("id", "prompt")
       .repartition(1).sortWithinPartitions("id")
-    // compare against the sequential runner on the same plan shape so
-    // session/codegen overhead cancels out
-    val t0 = System.currentTimeMillis()
-    EnrichRunner.mapWithResponse(df, "prompt", slowEnricher, AiConfig.test()).collect()
-    val seqMs = System.currentTimeMillis() - t0
-    val t1 = System.currentTimeMillis()
-    val out = EnrichRunner.mapWithResponseAsync(df, "prompt", slowEnricher,
-      AiConfig.test(), concurrency = 10).collect()
-    val asyncMs = System.currentTimeMillis() - t1
-    assert(out.length == 20)
-    assert(out.map(_.getAs[String]("response")).toSeq == (1 to 20).map(i => s"r:p$i"))
-    // sequential pays 20*50ms of sleeps serially; 10-way pipelining ~2 waves
-    assert(asyncMs < seqMs * 0.6, s"no pipelining observed: async=${asyncMs}ms seq=${seqMs}ms")
+    def run(cfg: AiConfig): (Seq[String], Int) = {
+      CallProbe.reset()
+      val out = EnrichRunner.mapWithResponse(df, "prompt", new ProbedEnricher(50), cfg)
+        .select("response").as[String].collect().toSeq
+      (out, CallProbe.peak("all"))
+    }
+    val expected = (1 to 40).map(i => s"r:p$i")
+    assert(run(AiConfig.test()) == ((expected, 10)))
+    assert(run(AiConfig.test().copy(rateLimit = 3)) == ((expected, 3)))
+  }
+
+  test("grouped window: a sequential fold's answers, concurrent across groups only (E5)") {
+    val cfg = AiConfig.test()
+    val rows = for (g <- 0 until 12; t <- 1 to 1 + g % 5)
+      yield (s"g$g", t.toLong, s"g$g:" + "x" * (g + t))
+    val expected = rows.groupBy(_._1).toSeq.flatMap { case (g, turns) =>
+      turns.sortBy(_._2).foldLeft((Vector.empty[Message], Vector.empty[(String, Long, String)])) {
+        case ((history, out), (_, t, prompt)) =>
+          val messages = history :+ Message("user", prompt)
+          val resp = ConversationalTestEnricher().enrich(messages, cfg)
+          (messages :+ Message("assistant", resp), out :+ ((g, t, resp)))
+      }._2
+    }.sortBy(r => (r._1, r._2))
+    CallProbe.reset()
+    val out = EnrichRunner.runConversations(rows.toDF("grp", "ord", "prompt"), "grp",
+        Seq("ord"), "prompt", new JitteryEnricher(ConversationalTestEnricher()), cfg)
+      .select("grp", "ord", "response").as[(String, Long, String)].collect()
+      .sortBy(r => (r._1, r._2)).toSeq
+    assert(out == expected)
+    val peaks = CallProbe.peaks
+    assert(peaks.collect { case (("group", _), n) => n }.toSet == Set(1),
+      s"two turns of one conversation ran at once: $peaks")
+    assert(peaks.collect { case (("task", _), n) => n }.max > 1,
+      s"no task ran two groups' calls at once: $peaks")
+  }
+
+  test("enrich calls on pool threads see their task's context") {
+    val df = (1 to 30).map(i => (i.toLong, i % 3, s"p$i")).toDF("id", "grp", "prompt")
+      .repartition(3)
+    def seen(run: Enricher => org.apache.spark.sql.DataFrame): Seq[Int] = {
+      PartitionLog.calls.clear()
+      assert(run(new PartitionRecordingEnricher).count() == 30)
+      PartitionLog.calls.asScala.toSeq.map(_.intValue)
+    }
+    val ungrouped = seen(EnrichRunner.mapWithResponse(df, "prompt", _, AiConfig.test()))
+    assert(ungrouped.size == 30 && ungrouped.toSet == Set(0, 1, 2))
+    val grouped = seen(EnrichRunner.runConversations(df, "grp", Seq("id"), "prompt",
+      _, AiConfig.test()))
+    assert(grouped.size == 30 && grouped.forall(_ >= 0), s"no task context: $grouped")
+  }
+
+  test("resumeConversations replays prior turns without a call; a wrong turn trips the fold") {
+    val df = Seq(("A", 1L, "alpha"), ("A", 2L, "bee"), ("A", 3L, "cedar"), ("B", 1L, "solo"))
+      .toDF("grp", "ord", "prompt")
+    def fold(in: org.apache.spark.sql.DataFrame) =
+      EnrichRunner.runConversations(in, "grp", Seq("ord"), "prompt",
+        ConversationalTestEnricher(), AiConfig.test())
+    val prior = fold(df.filter($"ord" <= 2)).select("grp", "ord", "turn_number", "response")
+    def resume(p: org.apache.spark.sql.DataFrame) =
+      EnrichRunner.resumeConversations(df, "grp", Seq("ord"), "prompt", p,
+          new PromptRecordingEnricher(ConversationalTestEnricher()), AiConfig.test())
+        .select("grp", "ord", "response").as[(String, Long, String)]
+    PromptLog.prompts.clear()
+    assert(resume(prior).collect().sortBy(r => (r._1, r._2)).toSeq ==
+      fold(df).select("grp", "ord", "response").as[(String, Long, String)]
+        .collect().sortBy(r => (r._1, r._2)).toSeq)
+    assert(PromptLog.prompts.asScala.toSeq == Seq("cedar"), "replayed turns must not call")
+    val shifted = prior.withColumn("turn_number", $"turn_number" + 1)
+    val e = intercept[org.apache.spark.SparkException](resume(shifted).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(
+        "resume requires the verified complete prefix")), e.toString)
+  }
+
+  test("stop cancels a windowed run; the enricher closes only after the pool drains") {
+    val df = (1 to 400).map(i => (i.toLong, s"p$i")).toDF("id", "prompt").repartition(1)
+    DrainProbe.reset()
+    val stopper = new Thread(() => {
+      while (DrainProbe.started.get < 15) Thread.sleep(5)
+      graft.pipeline.JobControl.stop(spark, "jg-window")
+    })
+    stopper.start()
+    val result = graft.pipeline.JobControl.runCancellable(spark, "jg-window") {
+      EnrichRunner.mapWithResponse(df, "prompt", new DrainProbeEnricher, AiConfig.test()).count()
+    }
+    stopper.join()
+    assert(result.isLeft, s"expected cancellation, got $result")
+    val deadline = System.currentTimeMillis() + 30000
+    while (DrainProbe.closed.get == 0 && System.currentTimeMillis() < deadline) Thread.sleep(10)
+    assert(DrainProbe.closed.get == 1, "the enricher was not closed")
+    val startedAtClose = DrainProbe.started.get
+    Thread.sleep(300)
+    assert(DrainProbe.started.get == startedAtClose && startedAtClose < 400)
+    assert(DrainProbe.violations.isEmpty, DrainProbe.violations.asScala.mkString("; "))
   }
 
   test("resumeEnrichment reuses prior rows and enriches only the remainder (T6)") {
@@ -199,6 +300,38 @@ class EnrichSpec extends SparkSpec {
     // a tampered cursor position → complete-prefix check fails → refuse
     assert(resume(results,
       cursor.withColumn("cursor_pos", lit(7L))).count() == 0)
+  }
+
+  test("a resume drops the previous resume's caches, its prior results included (T6)") {
+    val indexed = (0L until 10L).map(i => (i, s"p$i")).toDF("row_index", "prompt")
+    val root = s"${System.getProperty("java.io.tmpdir")}/graft-index/" +
+      s"leakckpt-${java.util.UUID.randomUUID.toString.take(8)}"
+    val reg = graft.ext.ArtifactRegistry
+    def checkpoint(cursor: Long) = {
+      val pre = EnrichRunner.mapWithResponse(indexed.filter($"row_index" < cursor),
+        "prompt", DeterministicEnricher(), AiConfig.test()).drop("error")
+      val v = EnrichCheckpoint.publish(spark, root, "ckpt", pre, cursorPos = cursor)
+      (reg.read(spark, root, "ckpt", v, "results"), reg.read(spark, root, "ckpt", v, "cursor"))
+    }
+    val (results4, cursor4) = checkpoint(4L)
+    val (results6, cursor6) = checkpoint(6L)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    def resume(results: org.apache.spark.sql.DataFrame,
+        cursor: org.apache.spark.sql.DataFrame): Set[Int] = {
+      assert(EnrichCheckpoint.resumeVerified(indexed, results, cursor, "prompt",
+        DeterministicEnricher(), AiConfig.test()).collect().length == 10)
+      persisted -- before
+    }
+    val first = resume(results4, cursor4)
+    val second = resume(results6, cursor6)
+    assert(first.nonEmpty && second.size == first.size)
+    assert((first & second).isEmpty, s"the first resume's caches leaked: ${first & second}")
+    // a refused resume leaves its prior results uncached
+    assert(EnrichCheckpoint.resumeVerified(indexed, results4,
+      cursor4.withColumn("cursor_pos", lit(7L)), "prompt",
+      DeterministicEnricher(), AiConfig.test()).count() == 0)
+    assert(results4.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
   test("grouped conversation pause→resume restores mid-group history; corruption refused") {
@@ -352,4 +485,88 @@ final class FailOnceEnricher(prompt: String) extends Enricher {
     if (ms.last.content == prompt && failed.compareAndSet(false, true))
       throw new RuntimeException("server overloaded (503)")
     else DeterministicEnricher().enrich(ms, c)
+}
+
+/** JVM-wide call probe (local mode: every task runs in the test JVM):
+  * counts the calls running under each key and keeps each key's peak. */
+object CallProbe {
+  private val running = new java.util.concurrent.ConcurrentHashMap[Any, AtomicInteger]()
+  private val peak = new java.util.concurrent.ConcurrentHashMap[Any, AtomicInteger]()
+  def reset(): Unit = { running.clear(); peak.clear() }
+  def during[T](keys: Any*)(body: => T): T = {
+    keys.foreach { k =>
+      val n = running.computeIfAbsent(k, _ => new AtomicInteger).incrementAndGet()
+      peak.computeIfAbsent(k, _ => new AtomicInteger).accumulateAndGet(n, math.max)
+    }
+    try body finally keys.foreach(k => running.get(k).decrementAndGet())
+  }
+  def peak(key: Any): Int = Option(peak.get(key)).fold(0)(_.get)
+  def peaks: Map[Any, Int] = peak.asScala.map { case (k, n) => k -> n.get }.toMap
+}
+
+/** Answers `r:<prompt>` after `ms` milliseconds, counted under "all". */
+final class ProbedEnricher(ms: Long) extends Enricher {
+  def enrich(ms0: Seq[Message], c: AiConfig): String =
+    CallProbe.during("all") { Thread.sleep(ms); "r:" + ms0.last.content }
+}
+
+/** Delays each call by a random 1-24 ms, counted under its group (the
+  * prompt's prefix up to ':') and its task. */
+final class JitteryEnricher(inner: Enricher) extends Enricher {
+  def enrich(ms: Seq[Message], c: AiConfig): String = {
+    val group = ms.last.content.takeWhile(_ != ':')
+    val task = org.apache.spark.TaskContext.get().taskAttemptId()
+    CallProbe.during(("group", group), ("task", task)) {
+      Thread.sleep(java.util.concurrent.ThreadLocalRandom.current().nextLong(1, 25))
+      inner.enrich(ms, c)
+    }
+  }
+}
+
+object PartitionLog {
+  val calls = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+}
+
+/** Records the partition id of the task each call runs in (-1: none). */
+final class PartitionRecordingEnricher extends Enricher {
+  def enrich(ms: Seq[Message], c: AiConfig): String = {
+    val tc = org.apache.spark.TaskContext.get()
+    PartitionLog.calls.add(if (tc == null) -1 else tc.partitionId())
+    "ok"
+  }
+}
+
+object PromptLog {
+  val prompts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+
+/** Records the user prompt of every call it forwards. */
+final class PromptRecordingEnricher(inner: Enricher) extends Enricher {
+  def enrich(ms: Seq[Message], c: AiConfig): String = {
+    PromptLog.prompts.add(ms.last.content)
+    inner.enrich(ms, c)
+  }
+}
+
+/** Watches the window's shutdown: a call that starts after `close()`,
+  * or a `close()` while calls still run, is a violation. */
+object DrainProbe {
+  val started = new AtomicInteger(0)
+  val running = new AtomicInteger(0)
+  val closed = new AtomicInteger(0)
+  val violations = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def reset(): Unit = { started.set(0); running.set(0); closed.set(0); violations.clear() }
+}
+
+final class DrainProbeEnricher extends Enricher {
+  def enrich(ms: Seq[Message], c: AiConfig): String = {
+    if (DrainProbe.closed.get > 0) DrainProbe.violations.add("a call started after close()")
+    DrainProbe.running.incrementAndGet(); DrainProbe.started.incrementAndGet()
+    try { Thread.sleep(100); "ok" } finally DrainProbe.running.decrementAndGet()
+  }
+  override def close(): Unit = {
+    if (DrainProbe.running.get > 0)
+      DrainProbe.violations.add(s"close() with ${DrainProbe.running.get} calls running")
+    DrainProbe.closed.incrementAndGet()
+  }
 }
