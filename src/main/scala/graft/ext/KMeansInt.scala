@@ -1,6 +1,9 @@
 package graft.ext
 
+import graft.functions.VectorKernels
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,15 +29,16 @@ import org.apache.spark.sql.functions._
   * converging; `maxRounds` turns that into a loud failure.
   *
   * Scale design: centroids are k×dim integers — CONSTANT-size state,
-  * collected to the driver each round (the q128-τ one-row-stats class;
-  * MLlib's k-means does exactly this) and re-embedded as literals. So
-  * a round is ONE job: the map-only reassignment (argmin over the k
-  * literal centroids, a lazily-checkpointed constant-size plan)
-  * materialized by the map-side-combined (cluster, d) sums aggregation
-  * — the only shuffle, k×dim partials per partition — which also
-  * carries the changed-count. Nothing corpus-sized shuffles in any
-  * round; the codes table is read from its checkpoint each pass.
-  * Empty clusters keep their previous centroid, so k is stable.
+  * merged on the driver each round (the q128-τ one-row-stats class;
+  * MLlib's k-means does exactly this) and shipped in the next round's
+  * closure. So a round is ONE RDD `aggregate` job and no per-round
+  * query plan: the map-only reassignment (argmin over the k centroids,
+  * a lazily-checkpointed state RDD) materialized by the job that folds
+  * each partition into k×dim sums plus the changed-count — no shuffle
+  * at all, one k×dim partial per partition to the driver. Nothing
+  * corpus-sized moves in any round; each pass reads the previous
+  * state's checkpoint blocks. Empty clusters keep their previous
+  * centroid, so k is stable.
   *
   * Determinism contract: ties in the argmin break toward the smaller
   * cluster id; centroid means use floor integer division (codes are
@@ -65,8 +69,8 @@ object KMeansInt {
   /** Nearest-centroid assignment: (id, cluster, dist2), dist2 = exact
     * integer Σ_d (c_d − m_d)². cent is (cluster, d, m), broadcast.
     * Used for single-pass assignment against FIXED centroid tables
-    * (PQ encodeWith / LUT paths); the training loop embeds its
-    * constant centroids as literals instead — see [[bestOf]]. */
+    * (PQ encodeWith / LUT paths); the training loop runs the literal
+    * argmin kernel instead — see [[bestOf]]. */
   def assign(expl: DataFrame, cent: DataFrame): DataFrame = {
     val byDist = Window.partitionBy(col("id")).orderBy(col("dist2"), col("cluster"))
     expl.join(broadcast(cent), Seq("d"))
@@ -78,12 +82,13 @@ object KMeansInt {
   }
 
   /** struct(dist2, cluster) of the nearest of the k LITERAL centroids
-    * to the `codes` array column — the row-local argmin the training
-    * loop maps over the corpus (no join, no shuffle): one native
-    * codegen'd JVM loop per row ([[graft.functions.KmNearest]]; ties
-    * toward the smaller cluster id — the same contract as [[assign]]).
-    * The HOF formulation (aggregate ∘ zip_with per candidate) is
-    * interpreted per element and dominated every Lloyd round. */
+    * to the `codes` array column — the row-local argmin (no join, no
+    * shuffle) that defines a fit's assignment and PQ encoding: one
+    * native codegen'd JVM loop per row ([[graft.functions.KmNearest]],
+    * whose kernel the training rounds call directly; ties toward the
+    * smaller cluster id — the same contract as [[assign]]). The HOF
+    * formulation (aggregate ∘ zip_with per candidate) is interpreted
+    * per element and dominated every Lloyd round. */
   def bestOf(cents: Seq[(Long, Seq[Long])], codes: Column): Column = {
     val sorted = cents.sortBy(_._1)
     val shim = org.apache.spark.sql.GraftShim
@@ -178,40 +183,59 @@ object KMeansInt {
           val cl = asg(ci); ns(cl) += 1
           var j = 0; while (j < dim) { sums(cl)(j) += cands(ci)._3(j); j += 1 }
         }
-        cents = Array.tabulate(k) { cl =>
-          if (ns(cl) == 0L) cents(cl)
-          else Array.tabulate(dim)(j => sums(cl)(j) / ns(cl))
-        }
+        cents = lloydUpdate(cents, sums, ns)
         prevAsg = asg
       }
     }
     cents.toSeq.zipWithIndex.map { case (m, i) => (i.toLong, m.toSeq) }
   }
 
-  /** One action over the current state: per-(cluster, d) code sums and
-    * member counts (k×dim map-side-combined partials — the only
-    * shuffle in a round) PLUS, piggybacked on the d=1 slice, how many
-    * rows the LAST reassignment changed — so convergence detection
-    * costs no extra job. Returns the floor-mean updated centroids
-    * (clusters with no members keep their previous centroid) and the
-    * changed-count. */
-  private def updatedCents(state: DataFrame, prev: Seq[(Long, Seq[Long])]): (Seq[(Long, Seq[Long])], Long) = {
-    val rows = state
-      .select(col("cluster"), col("changed"), posexplode(col("codes")).as(Seq("d0", "c")))
-      .groupBy(col("cluster"), (col("d0") + 1L).as("d"))
-      .agg(sum(col("c")).as("s"), count(lit(1)).as("n"),
-        count(when(col("changed") && col("d0") === 0, 1)).as("nch"))
-      .collect()
-    val changed = rows.iterator.map(_.getLong(4)).sum
-    val sums = rows.iterator
-      .map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3))))
-      .toMap
-    val cents = prev.map { case (cl, m) =>
-      (cl, m.indices.map { i =>
-        sums.get((cl, i + 1L)).map { case (s, n) => s / n }.getOrElse(m(i))
-      })
+  /** Lloyd's update step, the ONE definition both loops apply (the seed
+    * mini-Lloyd in [[seedCents]] and the distributed rounds of
+    * [[fitConvergedAssign]]): each centroid becomes the floor mean of
+    * its members (`sums(cl)(d) / ns(cl)`, integer division — codes are
+    * non-negative, so truncation is floor), and a cluster with no
+    * members keeps its previous centroid, so k is stable. */
+  private def lloydUpdate(cents: Array[Array[Long]], sums: Array[Array[Long]],
+      ns: Array[Long]): Array[Array[Long]] =
+    Array.tabulate(cents.length) { cl =>
+      if (ns(cl) == 0L) cents(cl) else sums(cl).map(_ / ns(cl))
     }
-    (cents, changed)
+
+  /** One vector's round state: its (id, codes) row, its nearest
+    * centroid and exact squared distance to it, and whether the
+    * reassignment that produced this state moved it. */
+  private final case class Pt(row: InternalRow, cluster: Long, dist2: Long,
+      changed: Boolean)
+
+  /** Per-cluster code sums and member counts over a state, plus how
+    * many of its vectors the last reassignment moved — the k×dim
+    * partials one round's job merges on the driver. */
+  private final class Tally(k: Int, dim: Int) extends Serializable {
+    val sums: Array[Array[Long]] = Array.fill(k, dim)(0L)
+    val ns: Array[Long] = new Array[Long](k)
+    var changed: Long = 0L
+    def add(p: Pt): Tally = {
+      val cl = p.cluster.toInt
+      val codes = p.row.getArray(1)
+      val s = sums(cl)
+      var j = 0
+      while (j < dim) { s(j) += codes.getLong(j); j += 1 }
+      ns(cl) += 1
+      if (p.changed) changed += 1
+      this
+    }
+    def merge(o: Tally): Tally = {
+      var cl = 0
+      while (cl < k) {
+        var j = 0
+        while (j < dim) { sums(cl)(j) += o.sums(cl)(j); j += 1 }
+        ns(cl) += o.ns(cl)
+        cl += 1
+      }
+      changed += o.changed
+      this
+    }
   }
 
   /** Converged training state: the fixed-point centroids (cluster, d,
@@ -224,45 +248,75 @@ object KMeansInt {
     * fixed point (see object scaladoc): update → reassign until a
     * reassignment changes zero rows, THROW past `maxRounds` (too few
     * rounds silently degrades downstream ANN recall, so running out is
-    * an error). Per round exactly ONE job: the reassignment is a LAZY
-    * local checkpoint (constant-size LogicalRDD plan — no per-round
-    * lineage or analysis growth) whose first materialization IS the
-    * constant-size sums+changed collect — so a round costs one
-    * (narrow map + tiny agg) job and a driver round-trip of k×dim
-    * integers. Earlier rounds' checkpoint blocks are reclaimed by the
-    * context cleaner as their references drop. */
+    * an error).
+    *
+    * A round is ONE RDD `aggregate` job and no query plan: the state
+    * is an RDD of [[Pt]] whose reassignment (a narrow map running
+    * [[graft.functions.VectorKernels.kmNearestElkan]], the kernel
+    * [[graft.functions.KmNearest]] calls, against the round's k×dim
+    * centroids shipped in the closure) is lazily `localCheckpoint`ed,
+    * so the round's aggregate both materializes it (truncating the
+    * lineage) and returns the k×dim sums, member counts and changed
+    * count the driver merges into the next centroids
+    * ([[lloydUpdate]]). The previous round's blocks are dropped once
+    * the new state is materialized. Beyond the rounds, a fit runs the
+    * codes checkpoint and the seed-sample collect.
+    *
+    * The assignment is the final state's (id, cluster, dist2),
+    * presented as the checkpoint of the literal-centroid argmin over
+    * the codes ([[bestOf]]) — the values that plan would compute, with
+    * its statistics, partitioning and ordering — so every consumer
+    * plans against the same size estimate without re-running the
+    * argmin. */
   def fitConvergedAssign(codes: DataFrame, k: Int, maxRounds: Int): FitResult = {
     val spark = codes.sparkSession
     val mat = codes.select(col("id"), col("codes")).localCheckpoint(true)
-    def reassign(from: DataFrame, cents: Seq[(Long, Seq[Long])], withPrev: Boolean) =
-      from
-        .withColumn("best", bestOf(cents, col("codes")))
-        .select(col("id"), col("codes"),
-          col("best.cluster").as("cluster"), col("best.dist2").as("dist2"),
-          (if (withPrev) col("best.cluster") =!= col("cluster") else lit(true))
-            .as("changed"))
-        .localCheckpoint(false)
-    var cents = seedCents(mat, k)
-    var state = reassign(mat.withColumn("cluster", lit(-1L)), cents, withPrev = false)
+    def reassign(from: RDD[Pt], cents: Array[Array[Long]]): RDD[Pt] = {
+      val clusters = Array.tabulate(cents.length)(_.toLong)
+      val ccd2 = VectorKernels.pairwiseD2(cents)
+      val next = from.map { p =>
+        val best = VectorKernels.kmNearestElkan(p.row.getArray(1), clusters, cents, ccd2)
+        val cl = best.getLong(1)
+        Pt(p.row, cl, best.getLong(0), cl != p.cluster)
+      }
+      next.localCheckpoint()
+    }
+    var cents = seedCents(mat, k).map(_._2.toArray).toArray
+    val dim = cents(0).length
+    // cluster −1 marks "unassigned", so the first reassignment changes
+    // every row
+    var state = reassign(
+      mat.queryExecution.toRdd.map(r => Pt(r.copy(), -1L, 0L, changed = true)), cents)
+    var prev: RDD[Pt] = null
     var rounds = 0
     var converged = false
     while (!converged) {
-      // ONE action: materializes `state` (truncating its lineage) and
-      // returns the k×dim sums, the changed-count of the last
-      // reassignment, and so the next centroids in one pass
-      val (next, changed) = updatedCents(state, cents)
-      if (rounds > 0 && changed == 0L) converged = true
+      // ONE job: materializes `state` and returns the k×dim sums and the
+      // changed-count of the reassignment that produced it
+      val t = state.aggregate(new Tally(k, dim))(_ add _, _ merge _)
+      if (prev != null) prev.unpersist(blocking = false)
+      if (rounds > 0 && t.changed == 0L) converged = true
       else {
         rounds += 1
-        if (rounds > maxRounds) throw new IllegalStateException(
-          s"k-means did not reach the assignment fixed point in $maxRounds rounds")
-        cents = next
-        state = reassign(state, cents, withPrev = true)
+        if (rounds > maxRounds) {
+          state.unpersist(blocking = false)
+          throw new IllegalStateException(
+            s"k-means did not reach the assignment fixed point in $maxRounds rounds")
+        }
+        cents = lloydUpdate(cents, t.sums, t.ns)
+        prev = state
+        state = reassign(state, cents)
       }
     }
-    val asg = state.select(col("id"), col("cluster"), col("dist2"))
+    val centSeq = cents.toSeq.zipWithIndex.map { case (m, i) => (i.toLong, m.toSeq) }
+    val argmin = mat
+      .withColumn("best", bestOf(centSeq, col("codes")))
+      .select(col("id"), col("best.cluster").as("cluster"), col("best.dist2").as("dist2"))
+    val idType = mat.schema("id").dataType
+    val asg = org.apache.spark.sql.GraftShim.checkpointedAs(
+      state.map(p => InternalRow(p.row.get(0, idType), p.cluster, p.dist2)), argmin)
     import spark.implicits._
-    val centRows = cents.flatMap { case (cl, m) =>
+    val centRows = centSeq.flatMap { case (cl, m) =>
       m.zipWithIndex.map { case (v, i) => (cl, (i + 1).toLong, v) }
     }.toDF("cluster", "d", "m")
     FitResult(centRows, asg, rounds)

@@ -69,6 +69,21 @@ object GraftShim {
         isStreaming = false)(spark))
   }
 
+  /** Present `rdd` as the local checkpoint of `like`: `rdd` must hold,
+    * partition for partition and in order, exactly the rows `like`
+    * computes. The frame carries `like`'s output, statistics,
+    * partitioning and ordering — the `LogicalRDD` that
+    * `Dataset.localCheckpoint` builds — without running `like`'s plan.
+    * For rows a driver loop already computed (an iterative kernel's
+    * final state), where a bare `createDataFrame` would carry no size
+    * statistics and change the join strategy of every consumer. */
+  def checkpointedAs(rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      like: DataFrame): DataFrame = {
+    val ds = like.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false))
+  }
+
   /** Append a 0-based dense long index column reflecting the current
     * partition order (partition i's rows precede partition i+1's).
     * One extra count job (zipWithIndex) whose shuffle dependencies are

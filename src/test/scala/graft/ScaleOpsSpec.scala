@@ -61,6 +61,53 @@ class ScaleOpsSpec extends SparkSpec {
     assert(labels.count() == n)
   }
 
+  test("connected components: driver rounds equal the distributed rounds, partial labels included") {
+    // force each path through the bound: Long.MaxValue keeps every edge
+    // list on the driver, -1 none
+    def both(vertices: org.apache.spark.sql.DataFrame, edges: org.apache.spark.sql.DataFrame,
+        maxIter: Int, requireConvergence: Boolean = false) =
+      Seq(Long.MaxValue, -1L).map { bound =>
+        ConnectedComponents.assignBounded(vertices, "id", edges, "src", "dst",
+          maxIter, requireConvergence, bound)
+          .select($"id".cast("long"), $"cluster_id".cast("long"))
+          .as[(Long, Long)].collect().sorted.toSeq
+      }
+    var partialRuns = 0
+    for (seed <- 1 to 2) {
+      val rnd = new scala.util.Random(seed)
+      val n = 80
+      // a shuffled 30-vertex path (several pointer-jump rounds), random
+      // chords among the rest, self-loops, duplicate and reversed
+      // edges, and vertices 81-85 left isolated
+      val path = rnd.shuffle((1 to 30).toList)
+      val chords = Seq.fill(40)((31 + rnd.nextInt(n - 30), 1 + rnd.nextInt(n)))
+      val raw = path.zip(path.tail) ++ chords ++ chords.take(5).map(_.swap) :+ ((7, 7))
+      val ids = 1 to n + 5
+      // seed 2 keeps INT ids, so the driver path's cast back is covered
+      val (vertices, edges) =
+        if (seed == 2) (ids.toDF("id"), raw.toDF("src", "dst"))
+        else (ids.map(_.toLong).toDF("id"), raw.map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst"))
+      val Seq(full, fullJobs) = both(vertices, edges, maxIter = 25)
+      assert(full == fullJobs, s"seed=$seed: converged labels differ between paths")
+      val Seq(partial, partialJobs) = both(vertices, edges, maxIter = 1)
+      assert(partial == partialJobs, s"seed=$seed: maxIter=1 partial labels differ between paths")
+      if (partial != full) partialRuns += 1
+      assert(full.map(_._1) == ids.map(_.toLong), s"seed=$seed: every vertex labeled once")
+    }
+    assert(partialRuns == 2, "every maxIter=1 run must stop before convergence")
+    // non-convergence is loud on both paths
+    val n = 32
+    val vertices = (1 to n).map(_.toLong).toDF("id")
+    val edges = (1 until n).map(i => (i.toLong, i.toLong + 1)).toDF("src", "dst")
+    Seq(Long.MaxValue, -1L).foreach { bound =>
+      val e = intercept[IllegalStateException] {
+        ConnectedComponents.assignBounded(vertices, "id", edges, "src", "dst",
+          maxIter = 1, requireConvergence = true, driverEdges = bound)
+      }
+      assert(e.getMessage.contains("did not converge"), s"bound=$bound")
+    }
+  }
+
   test("profiler rejects unknown columns up front and handles dotted/colliding names") {
     val e = intercept[IllegalArgumentException] {
       Profiler.profile(Seq((1, "x")).toDF("a", "b"), Seq("a", "nope"))

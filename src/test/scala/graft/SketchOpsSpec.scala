@@ -127,6 +127,29 @@ class SketchOpsSpec extends SparkSpec {
     }
   }
 
+  test("kmeans runs one Spark job per Lloyd round") {
+    val codes = Quantize.sq8Codes(
+      Tables.load(spark, sf, "embeddings"), "vec_id", "embedding")
+      .localCheckpoint(true)
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val fit = try {
+      val f = KMeansInt.fitConvergedAssign(codes, k = 8,
+        maxRounds = KMeansInt.MaxRounds)
+      org.apache.spark.GraftTestShim.waitListeners(spark.sparkContext)
+      f
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(fit.rounds >= 2, s"too shallow to tell rounds from fixed cost: ${fit.rounds}")
+    // one job per round, plus the codes checkpoint, the seed-sample
+    // collect and the round that confirms the fixed point; the
+    // assignment is served from the final state without a job
+    assert(jobs <= fit.rounds + 3, s"$jobs jobs for ${fit.rounds} rounds")
+  }
+
   test("kmeans keeps previous centroid for emptied clusters") {
     // seed 1 = (9,9) attracts nothing once points re-assign to seed
     // 0's updated mean; k stays 2 and assignment still totals all rows

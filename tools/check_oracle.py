@@ -6,9 +6,15 @@ mirrors what the driver does with Verify's output: run each oracle SQL in
 DuckDB over the same parquet tables, then compare against the Spark
 result parquet — columns sorted by name, exact value equality.
 
-Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check_oracle.py [--only q1,q2,...] [--memory-limit 8GB]
+           <sfDir> <verifyOutDir>
+
+--only checks just the named queries, each in its own fresh DuckDB
+connection (so one query's memory is released before the next starts);
+--memory-limit sets DuckDB's memory_limit on every connection. Without
+--only, every query in <verifyOutDir> is checked over one connection.
 """
-import sys, json, glob, math
+import argparse, sys, json, glob, math
 import duckdb
 import pandas as pd
 
@@ -64,43 +70,64 @@ def compare(name, spark_df, duck_df, sort_rows):
         return "VALUE MISMATCH\n    " + "\n    ".join(bad)
     return None
 
-def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
+def connect(sf_dir, memory_limit):
     con = duckdb.connect()
+    if memory_limit:
+        con.sql(f"SET memory_limit = '{memory_limit}'")
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    with open(f"{out_dir}/oracle_sql.json") as f:
+    return con
+
+def check(con, out_dir, oracle, name):
+    """Check one query's Spark output against its oracle; True = pass."""
+    parts = sorted(glob.glob(f"{out_dir}/{name}/part-*.parquet"))
+    if not parts:
+        print(f"[FAIL] {name}: no spark output parts")
+        return False
+    spark_df = pd.concat([pd.read_parquet(p) for p in parts], ignore_index=True)
+    if name not in oracle:
+        print(f"[rows] {name}: no oracle; rows={len(spark_df)} "
+              + ("OK" if len(spark_df) > 0 else "EMPTY(FAIL)"))
+        return len(spark_df) > 0
+    try:
+        duck_df = con.sql(oracle[name]).df()
+    except Exception as e:
+        print(f"[FAIL] {name}: oracle SQL error: {e}")
+        return False
+    err = compare(name, spark_df, duck_df, sort_rows=False)
+    if err and compare(name, spark_df, duck_df, sort_rows=True) is None:
+        err = f"order-only mismatch (values match when row-sorted): {err.splitlines()[0]}"
+    if err:
+        print(f"[FAIL] {name}: {err}")
+        return False
+    print(f"[OK]   {name}: {len(spark_df)} rows hash-match")
+    return True
+
+def main():
+    ap = argparse.ArgumentParser(description="Compare Verify output against the DuckDB oracles.")
+    ap.add_argument("sf_dir")
+    ap.add_argument("out_dir")
+    ap.add_argument("--only", help="comma-separated query names, each checked in its own connection")
+    ap.add_argument("--memory-limit", help="DuckDB memory_limit for every connection, e.g. 8GB")
+    args = ap.parse_args()
+    with open(f"{args.out_dir}/oracle_sql.json") as f:
         oracle = json.load(f)
     failures = 0
-    result_dirs = sorted(glob.glob(f"{out_dir}/*/"))
+    if args.only:
+        for name in [n for n in args.only.split(",") if n]:
+            con = connect(args.sf_dir, args.memory_limit)
+            try:
+                if not check(con, args.out_dir, oracle, name):
+                    failures += 1
+            finally:
+                con.close()
+        sys.exit(1 if failures else 0)
+    con = connect(args.sf_dir, args.memory_limit)
+    result_dirs = sorted(glob.glob(f"{args.out_dir}/*/"))
     names = [p.rstrip("/").split("/")[-1] for p in result_dirs]
     for name in names:
-        parts = sorted(glob.glob(f"{out_dir}/{name}/part-*.parquet"))
-        if not parts:
-            print(f"[FAIL] {name}: no spark output parts")
+        if not check(con, args.out_dir, oracle, name):
             failures += 1
-            continue
-        spark_df = pd.concat([pd.read_parquet(p) for p in parts], ignore_index=True)
-        if name not in oracle:
-            print(f"[rows] {name}: no oracle; rows={len(spark_df)} "
-                  + ("OK" if len(spark_df) > 0 else "EMPTY(FAIL)"))
-            if len(spark_df) == 0:
-                failures += 1
-            continue
-        try:
-            duck_df = con.sql(oracle[name]).df()
-        except Exception as e:
-            print(f"[FAIL] {name}: oracle SQL error: {e}")
-            failures += 1
-            continue
-        err = compare(name, spark_df, duck_df, sort_rows=False)
-        if err and compare(name, spark_df, duck_df, sort_rows=True) is None:
-            err = f"order-only mismatch (values match when row-sorted): {err.splitlines()[0]}"
-        if err:
-            print(f"[FAIL] {name}: {err}")
-            failures += 1
-        else:
-            print(f"[OK]   {name}: {len(spark_df)} rows hash-match")
     missing = set(oracle) - set(names)
     for m in missing:
         print(f"[FAIL] {m}: oracle present but no spark output")
