@@ -170,8 +170,11 @@ object ScaleStress {
     sys.env.get("SPARK_GRAFT_SCALE_OUT").foreach { path =>
       def n(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
       val mode = if (distinctText) "distinct" else "clones"
+      // the source corpus's directory name (e.g. sf0.01): the scale the
+      // factor multiplies
+      val base = java.nio.file.Paths.get(srcDir).getFileName
       val json = rows.map { case (q, b, g, e) =>
-        s"""{"factor":$factor,"reps":$reps,"mode":"$mode","artifacts":"rebuilt","query":"$q","base_s":${n(b)},"big_s":${n(g)},"exponent":${n(e)}}"""
+        s"""{"base":"$base","factor":$factor,"reps":$reps,"mode":"$mode","artifacts":"rebuilt","query":"$q","base_s":${n(b)},"big_s":${n(g)},"exponent":${n(e)}}"""
       }.mkString("", "\n", "\n")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(path), json,
         java.nio.file.StandardOpenOption.CREATE,

@@ -26,12 +26,14 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * truncates the iterative lineage so plans don't grow with round
   * count. The convergence probe is a sum of labels (cheap aggregate).
   *
-  * Small edge lists skip the jobs: one bounded count decides, and an
+  * Small edge lists skip the jobs: one count job decides, and an
   * edge list of at most [[DriverEdgeBound]] rows is collected and run
   * through the SAME rounds on in-memory arrays ([[driverRounds]]) —
   * same step, same jump, same `maxIter`, same stop, so the labels are
   * identical either way, partial labels included. Above the bound the
-  * distributed loop runs as before, plus that one count job.
+  * distributed loop runs as before, plus that one count job. The bound
+  * caps what the driver holds; see [[DriverEdgeBound]] for the
+  * measurement behind it.
   */
 object ConnectedComponents {
 
@@ -39,21 +41,26 @@ object ConnectedComponents {
 
   /** Rows of the symmetric, deduplicated edge list up to which the
     * rounds run on the driver ([[driverRounds]]) instead of as Spark
-    * jobs: 2^18 = 262,144 rows, about 10 MB of primitive arrays on the
-    * driver.
+    * jobs: 2^21 = 2,097,152 rows. It is a cap on what the driver holds,
+    * not a speed crossover: the driver path was faster at every size
+    * measured, so the distributed loop exists only for edge lists above
+    * the cap. At the cap the driver path holds at most about 70 bytes
+    * of primitive arrays per row at once (≈ 150 MB), plus the labels it
+    * returns (about 40 bytes per endpoint).
     *
-    * Measured in local[4] on 4 cores (groups of 8 vertices with random
-    * intra-group edges, 7-8 rounds): a distributed round costs 0.9-1.1 s
-    * whatever the size (its joins, aggregate and probe are several
-    * jobs), while the driver path's collect job plus all of its rounds
-    * cost 0.18-0.25 s at 83k rows, 1.0-1.3 s at 833k and 2.8-3.6 s at
-    * 3.3M. So the driver path is faster at every size tried; the bound
-    * keeps its one-threaded cost under about half of ONE distributed
-    * round (≈ 0.35 s at 2^18 rows), so it cannot lose to a cluster
-    * whose rounds are much cheaper, and it bounds what the driver
-    * holds. The gated near-dup graphs sit far below it (q47 sf0.01: 50
-    * rows; sf0.1: 514; factor-10 clones of sf0.01: 50,000). */
-  private val DriverEdgeBound = 1L << 18
+    * Measured in local[4] on 4 cores in a 4 GB JVM unless noted, the
+    * whole `assign` timed (the edge-list build included), on random
+    * graphs of 8-vertex groups:
+    * 235k rows, driver path 2.7-5.2 s against 10.3-14.5 s for the
+    * distributed loop; 939k rows, 6.2-8.0 s against 24-25 s; 2.10M
+    * rows in a 3 GB JVM (the heap the benchmark gives the program), the
+    * driver path 16-21 s while the distributed loop failed (its label
+    * joins could not build their broadcast); 3.76M rows in a 4 GB JVM,
+    * 23-24 s against 77-89 s. So 2^21 is about the largest edge list
+    * shown to fit the driver path in a 3 GB driver. The gated near-dup
+    * graphs sit far below it (q47 sf0.01: 50 rows; sf0.1: 514;
+    * factor-10 clones of sf0.1: 501,400). */
+  private val DriverEdgeBound = 1L << 21
 
   /** Label every vertex with the smallest vertex id reachable from it.
     *
@@ -102,12 +109,14 @@ object ConnectedComponents {
       .join(vertexIds.withColumnRenamed("vid", "dst"), Seq("dst"), "left_semi")
       .distinct()
       .cache()
-    val idType = vertexIds.schema("vid").dataType
-    val integral = Seq(ByteType, ShortType, IntegerType, LongType).contains(idType)
+    // the distributed loop's labels keep the edge list's id type, so the
+    // driver path decides on, and casts back to, that type
+    val edgeType = sym.schema("src").dataType
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType).contains(edgeType)
     val onDriver = integral &&
       sym.select(col("src")).queryExecution.toRdd.count() <= driverEdges
     val (labels, endpoints, converged) =
-      if (onDriver) driverRounds(sym, idType, maxIter) else distributedRounds(sym, maxIter)
+      if (onDriver) driverRounds(sym, edgeType, maxIter) else distributedRounds(sym, maxIter)
     sym.unpersist()
     if (!converged) {
       val msg = s"ConnectedComponents.assign did not converge in $maxIter rounds; " +
@@ -201,8 +210,8 @@ object ConnectedComponents {
     * labels included. (A union-find would always converge, so it could
     * not reproduce a `maxIter`-limited run.) Endpoints are renumbered by
     * ascending id, so a label is an index and index order is id order.
-    * `idType` is integral. */
-  private def driverRounds(sym: DataFrame, idType: DataType, maxIter: Int)
+    * `edgeType`, the type of `sym`'s columns, is integral. */
+  private def driverRounds(sym: DataFrame, edgeType: DataType, maxIter: Int)
       : (DataFrame, DataFrame, Boolean) = {
     val parts = sym.select(col("src").cast("long"), col("dst").cast("long"))
       .queryExecution.toRdd.mapPartitions { it =>
@@ -212,8 +221,14 @@ object ConnectedComponents {
         Iterator((src.result(), dst.result()))
       }.collect()
     val srcIds = parts.flatMap(_._1)
-    // sym is symmetric: its sources are all the endpoints
-    val ids = srcIds.distinct.sorted
+    // sym is symmetric: its sources are all the endpoints. Sorted and
+    // deduplicated in place on primitives (`distinct` would box every id)
+    val ids = {
+      val sorted = srcIds.sorted
+      var n = 0
+      for (v <- sorted) if (n == 0 || v != sorted(n - 1)) { sorted(n) = v; n += 1 }
+      java.util.Arrays.copyOf(sorted, n)
+    }
     val src = srcIds.map(java.util.Arrays.binarySearch(ids, _))
     val dst = parts.flatMap(_._2).map(java.util.Arrays.binarySearch(ids, _))
     var labels = Array.range(0, ids.length)
@@ -246,7 +261,7 @@ object ConnectedComponents {
     val labeled = spark.sparkContext
       .parallelize(ids.indices.map(v => (ids(v), ids(labels(v)))))
       .toDF("id", "cluster_id")
-      .select(col("id").cast(idType), col("cluster_id").cast(idType))
-    (labeled, ids.toSeq.toDF("vid").select(col("vid").cast(idType)), converged)
+      .select(col("id").cast(edgeType), col("cluster_id").cast(edgeType))
+    (labeled, ids.toSeq.toDF("vid").select(col("vid").cast(edgeType)), converged)
   }
 }

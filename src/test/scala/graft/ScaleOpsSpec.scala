@@ -67,13 +67,16 @@ class ScaleOpsSpec extends SparkSpec {
     def both(vertices: org.apache.spark.sql.DataFrame, edges: org.apache.spark.sql.DataFrame,
         maxIter: Int, requireConvergence: Boolean = false) =
       Seq(Long.MaxValue, -1L).map { bound =>
-        ConnectedComponents.assignBounded(vertices, "id", edges, "src", "dst",
+        val out = ConnectedComponents.assignBounded(vertices, "id", edges, "src", "dst",
           maxIter, requireConvergence, bound)
-          .select($"id".cast("long"), $"cluster_id".cast("long"))
-          .as[(Long, Long)].collect().sorted.toSeq
+        // names and types: only the distributed loop's aggregate marks
+        // cluster_id nullable, and neither path outputs a null
+        (out.schema.map(f => (f.name, f.dataType)),
+          out.select($"id".cast("long"), $"cluster_id".cast("long"))
+          .as[(Long, Long)].collect().sorted.toSeq)
       }
     var partialRuns = 0
-    for (seed <- 1 to 2) {
+    for (seed <- 1 to 3) {
       val rnd = new scala.util.Random(seed)
       val n = 80
       // a shuffled 30-vertex path (several pointer-jump rounds), random
@@ -83,18 +86,23 @@ class ScaleOpsSpec extends SparkSpec {
       val chords = Seq.fill(40)((31 + rnd.nextInt(n - 30), 1 + rnd.nextInt(n)))
       val raw = path.zip(path.tail) ++ chords ++ chords.take(5).map(_.swap) :+ ((7, 7))
       val ids = 1 to n + 5
-      // seed 2 keeps INT ids, so the driver path's cast back is covered
-      val (vertices, edges) =
-        if (seed == 2) (ids.toDF("id"), raw.toDF("src", "dst"))
-        else (ids.map(_.toLong).toDF("id"), raw.map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst"))
+      // seed 2 keeps INT ids and seed 3 has INT vertices with LONG
+      // edges, so the driver path's cast back and the union's widening
+      // are covered: both paths must return the same column types too
+      val longEdges = raw.map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst")
+      val (vertices, edges) = seed match {
+        case 1 => (ids.map(_.toLong).toDF("id"), longEdges)
+        case 2 => (ids.toDF("id"), raw.toDF("src", "dst"))
+        case _ => (ids.toDF("id"), longEdges)
+      }
       val Seq(full, fullJobs) = both(vertices, edges, maxIter = 25)
       assert(full == fullJobs, s"seed=$seed: converged labels differ between paths")
       val Seq(partial, partialJobs) = both(vertices, edges, maxIter = 1)
       assert(partial == partialJobs, s"seed=$seed: maxIter=1 partial labels differ between paths")
-      if (partial != full) partialRuns += 1
-      assert(full.map(_._1) == ids.map(_.toLong), s"seed=$seed: every vertex labeled once")
+      if (partial._2 != full._2) partialRuns += 1
+      assert(full._2.map(_._1) == ids.map(_.toLong), s"seed=$seed: every vertex labeled once")
     }
-    assert(partialRuns == 2, "every maxIter=1 run must stop before convergence")
+    assert(partialRuns == 3, "every maxIter=1 run must stop before convergence")
     // non-convergence is loud on both paths
     val n = 32
     val vertices = (1 to n).map(_.toLong).toDF("id")

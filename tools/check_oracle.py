@@ -9,10 +9,10 @@ result parquet — columns sorted by name, exact value equality.
 Usage: python3 tools/check_oracle.py [--only q1,q2,...] [--memory-limit 8GB]
            <sfDir> <verifyOutDir>
 
---only checks just the named queries, each in its own fresh DuckDB
-connection (so one query's memory is released before the next starts);
---memory-limit sets DuckDB's memory_limit on every connection. Without
---only, every query in <verifyOutDir> is checked over one connection.
+Every query runs in its own fresh in-memory DuckDB connection, so one
+query's memory is released before the next starts. --only checks just
+the named queries; --memory-limit sets DuckDB's memory_limit on every
+connection.
 """
 import argparse, sys, json, glob, math
 import duckdb
@@ -78,9 +78,10 @@ def connect(sf_dir, memory_limit):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con
 
-def check(con, out_dir, oracle, name):
-    """Check one query's Spark output against its oracle; True = pass."""
-    parts = sorted(glob.glob(f"{out_dir}/{name}/part-*.parquet"))
+def check(args, oracle, name):
+    """Check one query's Spark output against its oracle, run in a fresh
+    DuckDB connection; True = pass."""
+    parts = sorted(glob.glob(f"{args.out_dir}/{name}/part-*.parquet"))
     if not parts:
         print(f"[FAIL] {name}: no spark output parts")
         return False
@@ -89,11 +90,14 @@ def check(con, out_dir, oracle, name):
         print(f"[rows] {name}: no oracle; rows={len(spark_df)} "
               + ("OK" if len(spark_df) > 0 else "EMPTY(FAIL)"))
         return len(spark_df) > 0
+    con = connect(args.sf_dir, args.memory_limit)
     try:
         duck_df = con.sql(oracle[name]).df()
     except Exception as e:
         print(f"[FAIL] {name}: oracle SQL error: {e}")
         return False
+    finally:
+        con.close()
     err = compare(name, spark_df, duck_df, sort_rows=False)
     if err and compare(name, spark_df, duck_df, sort_rows=True) is None:
         err = f"order-only mismatch (values match when row-sorted): {err.splitlines()[0]}"
@@ -107,31 +111,18 @@ def main():
     ap = argparse.ArgumentParser(description="Compare Verify output against the DuckDB oracles.")
     ap.add_argument("sf_dir")
     ap.add_argument("out_dir")
-    ap.add_argument("--only", help="comma-separated query names, each checked in its own connection")
+    ap.add_argument("--only", help="comma-separated query names to check (default: all)")
     ap.add_argument("--memory-limit", help="DuckDB memory_limit for every connection, e.g. 8GB")
     args = ap.parse_args()
     with open(f"{args.out_dir}/oracle_sql.json") as f:
         oracle = json.load(f)
-    failures = 0
+    # every output dir and every oracle, so an oracle without output
+    # fails in check() like any other missing output
+    names = sorted({p.rstrip("/").split("/")[-1]
+                    for p in glob.glob(f"{args.out_dir}/*/")} | set(oracle))
     if args.only:
-        for name in [n for n in args.only.split(",") if n]:
-            con = connect(args.sf_dir, args.memory_limit)
-            try:
-                if not check(con, args.out_dir, oracle, name):
-                    failures += 1
-            finally:
-                con.close()
-        sys.exit(1 if failures else 0)
-    con = connect(args.sf_dir, args.memory_limit)
-    result_dirs = sorted(glob.glob(f"{args.out_dir}/*/"))
-    names = [p.rstrip("/").split("/")[-1] for p in result_dirs]
-    for name in names:
-        if not check(con, args.out_dir, oracle, name):
-            failures += 1
-    missing = set(oracle) - set(names)
-    for m in missing:
-        print(f"[FAIL] {m}: oracle present but no spark output")
-        failures += 1
+        names = [n for n in args.only.split(",") if n]
+    failures = sum(not check(args, oracle, name) for name in names)
     sys.exit(1 if failures else 0)
 
 if __name__ == "__main__":
