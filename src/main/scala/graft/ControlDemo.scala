@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.enrich.{DeterministicEnricher, EnrichMetrics, EnrichRunner}
 import graft.model.AiConfig
 import graft.pipeline.JobControl
@@ -10,12 +9,7 @@ import graft.pipeline.JobControl
   * enrichment map and report rate/ETA. `runMain graft.ControlDemo`. */
 object ControlDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSessions.create(cpusOverride = Some(4), logLevel = "ERROR")
     import spark.implicits._
 
     val slow = spark.range(0, 200000, 1, 8).as[Long]

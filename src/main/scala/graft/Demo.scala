@@ -3,7 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import graft.enrich.DeterministicEnricher
 import graft.model._
 import graft.pipeline.BatchPipeline
@@ -17,12 +16,7 @@ import graft.sources.Sources
 object Demo {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse(Files.createTempDirectory("graft_demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSessions.create(cpusOverride = Some(4))
 
     val csv = Files.createTempFile("upload", ".csv")
     Files.write(csv, "topic,audience,priority\nAI,Teachers,High\nPython,Students,Medium\n"

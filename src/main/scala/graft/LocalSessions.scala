@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Single factory for the local sessions used by every runnable main
-  * (Verify, Bench, ExplainTmp, PlanAudit) — one place for the configs
-  * that must agree with the graded gate (shuffle partitions = cores,
-  * AQE, 64 MB broadcast threshold, UTC timezone). Builder mains were
-  * drifting hand-copied config blocks before this. */
+  * (Verify, Bench, PlanAudit, the demos, ...) — one place for the
+  * configs that must agree with the graded gate (shuffle partitions =
+  * cores, AQE, 64 MB broadcast threshold, UTC timezone) and for the
+  * SQL names of the native functions ([[graft.functions.GraftExtensions]],
+  * which every `newSession()` child inherits). */
 object LocalSessions {
 
   /** cpus defaults to SPARK_GRAFT_CPUS (the driver's knob), then 4.
@@ -29,6 +30,7 @@ object LocalSessions {
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     preexisting.foreach { _ =>
       // include the parity-critical settings (a reused session with a

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import graft.streaming.Streaming
 
 /** Usage example + runtime drive for the streaming module: windowed
@@ -13,12 +12,7 @@ object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val ckpt = Files.createTempDirectory("graft_ckpt").toString
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSessions.create(cpusOverride = Some(4))
 
     val outDir = Files.createTempDirectory("graft_stream_out").toString
     // parquet sink: supports checkpoint recovery (memory sink does not)

@@ -45,7 +45,6 @@ object CountMin {
   /** Build the sketch from a key column: (row, cell, cnt) — one row
     * per touched cell (untouched cells are implicitly 0). */
   def sketch(df: DataFrame, key: Column): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(explode(cells(key)).as("rc"))
       .select(col("rc.row").as("row"), col("rc.cell").as("cell"))
       .groupBy(col("row"), col("cell")).agg(count(lit(1)).as("cnt"))
@@ -55,7 +54,6 @@ object CountMin {
     * (key…, est) with est = min over the d matching cells. The ≤ d·w-row
     * sketch broadcasts; each key probes its own d cells. */
   def estimates(sk: DataFrame, keys: DataFrame, key: Column): DataFrame = {
-    graft.functions.GraftFunctions.register(keys.sparkSession)
     val kc = keys.select(key.as("key"), explode(cells(key)).as("rc"))
       .select(col("key"), col("rc.row").as("row"), col("rc.cell").as("cell"))
     kc.join(broadcast(sk), Seq("row", "cell"))

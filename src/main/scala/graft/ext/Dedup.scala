@@ -87,7 +87,6 @@ object Dedup {
   def decontaminate(
       docs: DataFrame, idCol: String, textCol: String,
       benchmark: DataFrame, n: Int = 8): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     def sh(c: Column) = graft.functions.VectorFunctions.hashedShingles(c, n, ShingleHashMod)
     val benchShingles = benchmark.select(explode(sh(col(textCol))).as("sh")).distinct()
     val contaminatedIds = docs
@@ -132,7 +131,6 @@ object Dedup {
     * dominant upstream cost of the family. */
   def hashedShingleSets(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"),
       graft.functions.VectorFunctions
         .hashedShingles(col(textCol), n, ShingleHashMod).as("sh_set"))
@@ -293,19 +291,6 @@ object Dedup {
     containmentPairsFromSets(hashedShingleSets(df, idCol, textCol, n),
       thresholdBp, minShingles, maxShingleDf)
 
-  /** Exact |A ∩ B| of two sorted hashed shingle sets — the native
-    * two-pointer kernel ([[graft.functions.VectorKernels
-    * .intersectSizeSortedLong]]); the builtin `array_intersect`
-    * materializes the intersection array through a per-row hash set
-    * just to take its size, and on ~300-element sets over millions of
-    * candidate pairs that allocation IS the containment family's hot
-    * loop. */
-  private def intersectSize(a: Column, b: Column): Column = {
-    val shim = org.apache.spark.sql.GraftShim
-    shim.column(graft.functions.ArrayIntersectSizeLong(
-      shim.expression(a), shim.expression(b)))
-  }
-
   /** [[containmentPairs]] over precomputed [[hashedShingleSets]].
     *
     * PRECONDITION: every `sh_set` array must be ASCENDING-sorted and
@@ -350,7 +335,8 @@ object Dedup {
       // size is the exact integer overlap — computed ONCE per unordered
       // pair, then fanned into the two directed tests
       .select(col("id_a"), col("id_b"),
-        intersectSize(col("set_a"), col("set_b")).as("inter"),
+        graft.functions.VectorFunctions
+          .arrayIntersectSizeLong(col("set_a"), col("set_b")).as("inter"),
         size(col("set_a")).cast("long").as("n_a"),
         size(col("set_b")).cast("long").as("n_b"))
     scored
@@ -379,8 +365,6 @@ object Dedup {
     * strings shuffled are the blocks themselves, once each. */
   def blockDedup(df: DataFrame, idCol: String, textCol: String,
       blockWords: Int = 20): DataFrame = {
-    val s = df.sparkSession
-    graft.functions.GraftFunctions.register(s)
     val docs = df
       .select(col(idCol).as("doc_id"),
         graft.functions.TextFunctions.tokens(col(textCol)).as("t"))
@@ -413,7 +397,6 @@ object Dedup {
     * block. */
   def blockHashes(corpus: DataFrame, textCol: String,
       blockWords: Int = 20): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     corpus
       .select(graft.functions.TextFunctions.tokens(col(textCol)).as("t"))
       .filter(size(col("t")) > 0)
@@ -437,7 +420,6 @@ object Dedup {
     * partitioned — nothing broadcasts), one per-doc reassembly agg. */
   def blockDedupAgainstCorpus(fresh: DataFrame, idCol: String, textCol: String,
       knownHashes: DataFrame, blockWords: Int = 20): DataFrame = {
-    graft.functions.GraftFunctions.register(fresh.sparkSession)
     val blocks = fresh
       .select(col(idCol).as("doc_id"),
         graft.functions.TextFunctions.tokens(col(textCol)).as("t"))
@@ -554,7 +536,8 @@ object Dedup {
     cand.join(docs.hint("merge"), Seq("doc_id"))
       .join(sets.hint("merge"), Seq("corpus_id"))
       .select(col("doc_id"), col("corpus_id"),
-        intersectSize(col("sh_set"), col("set_c")).as("n_inter"),
+        graft.functions.VectorFunctions
+          .arrayIntersectSizeLong(col("sh_set"), col("set_c")).as("n_inter"),
         size(col("sh_set")).cast("long").as("n_doc"),
         size(col("set_c")).cast("long").as("n_corpus"))
       .filter(col("n_inter") * 10000L >=

@@ -90,7 +90,6 @@ object Dsir {
   private def tokenBuckets(
       docs: DataFrame, idCol: String, textCol: String,
       targetPred: Column, carryCols: Seq[String]): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     docs.filter(trim(col(textCol)) =!= "")
       .select(col(idCol) +: carryCols.map(col) :+ targetPred.as("is_target") :+
         explode(tokens(lower(col(textCol)))).as("t"): _*)

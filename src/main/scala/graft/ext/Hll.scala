@@ -55,8 +55,6 @@ object Hll {
     * r = max rho of keys hashed there; 0 for untouched buckets). */
   def registers(df: DataFrame, key: Column): DataFrame = {
     val spark = df.sparkSession
-    graft.functions.GraftFunctions.register(spark) // polyhash
-
     val hit = df
       .select(hash31(key).as("h"))
       .select((col("h") % M).as("bucket"), rho(expr("h DIV 256")).as("rho"))
@@ -105,7 +103,6 @@ object Hll {
     * data size). */
   def groupRegisters(df: DataFrame, grp: Column, key: Column): DataFrame = {
     val spark = df.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val hit = df
       .select(grp.as("grp"), hash31(key).as("h"))
       .select(col("grp"), (col("h") % M).as("bucket"), rho(expr("h DIV 256")).as("rho"))
@@ -131,7 +128,6 @@ object Hll {
     * [[groupEstimateSparse]] with identical arithmetic. One partial
     * aggregation, shuffle bytes bounded by the same min. */
   def groupRegistersSparse(df: DataFrame, grp: Column, key: Column): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(grp.as("grp"), hash31(key).as("h"))
       .select(col("grp"), (col("h") % M).as("bucket"), rho(expr("h DIV 256")).as("rho"))
       .groupBy(col("grp"), col("bucket")).agg(max(col("rho")).as("r"))

@@ -131,7 +131,6 @@ object KMeansInt {
     * mini-Lloyd is a [[SeedRounds]]-unrolled chain over the C
     * candidate rows. */
   private def seedCents(mat: DataFrame, k: Int): Seq[(Long, Seq[Long])] = {
-    graft.functions.GraftFunctions.register(mat.sparkSession)
     val cands = mat
       .select(col("id"), Hll.hash31(col("id").cast("string")).as("h"), col("codes"))
       .orderBy(col("h"), col("id"))

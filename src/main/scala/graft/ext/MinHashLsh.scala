@@ -37,15 +37,14 @@ object MinHashLsh {
     * K mins in a single JVM loop, no intermediate arrays. (The
     * composed-HOF version was 60x slower: `transform`/`array_min` are
     * interpreted.) Semantics identical to min over the distinct shingle
-    * set. Requires [[graft.functions.VectorFunctions.registerMinhash]]
-    * with (n, A, B, P) — [[signatures]] does it. */
-  def signature(text: Column): Column =
-    graft.functions.VectorFunctions.minhashSig(text)
+    * set, with this object's coefficients (A, B, P) over n-char
+    * shingles. */
+  def signature(text: Column, n: Int = 8): Column =
+    graft.functions.VectorFunctions.minhashSig(text, n, A, B, P)
 
   def signatures(df: DataFrame, idCol: String, textCol: String, n: Int = 8): DataFrame = {
-    graft.functions.VectorFunctions.registerMinhash(df.sparkSession, n, A, B, P)
     df.filter(length(col(textCol)) >= n)
-      .select(col(idCol).as("id"), signature(col(textCol)).as("sig"))
+      .select(col(idCol).as("id"), signature(col(textCol), n).as("sig"))
   }
 
   /** Banded signature index: (id, sig, band, bslice) — [[Bands]] rows
@@ -80,10 +79,9 @@ object MinHashLsh {
     * lookup. Stream-safe: row-local signature + explode, no state. */
   def bandedIndexWith(df: DataFrame, idCol: String, textCol: String,
       carry: Seq[String], n: Int = 8): DataFrame = {
-    graft.functions.VectorFunctions.registerMinhash(df.sparkSession, n, A, B, P)
     banded(df.filter(length(col(textCol)) >= n)
       .select(col(idCol).as("id") +: carry.map(col) :+
-        signature(col(textCol)).as("sig"): _*), carry)
+        signature(col(textCol), n).as("sig"): _*), carry)
   }
 
   /** Count of agreeing signature positions (16·est_sim, exact integer)

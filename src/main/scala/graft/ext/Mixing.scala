@@ -30,7 +30,6 @@ object Mixing {
   def stratifiedSample(
       df: DataFrame, idCol: String, strataCol: String,
       ratesBp: Map[String, Int], defaultBp: Int = 10000): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     require((ratesBp.values ++ Seq(defaultBp)).forall(r => r >= 0 && r <= 10000),
       "rates are basis points in [0, 10000]")
     val rate: Column = ratesBp.foldLeft(lit(defaultBp)) { case (acc, (k, v)) =>
@@ -118,7 +117,6 @@ object Mixing {
     * temperature sampling are the constant-rate-per-stratum special
     * cases. A pure filter: no shuffle, runs in the scan stage. */
   def importanceSample(df: DataFrame, idCol: String, rateBpCol: String): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df.filter(keyBp(col(idCol)) < col(rateBpCol))
   }
 
@@ -153,7 +151,6 @@ object Mixing {
     * rates table is #strata rows — broadcast). */
   def sampleWithRates(
       df: DataFrame, idCol: String, strataCol: String, rates: DataFrame): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df.join(broadcast(rates.select(col(strataCol), col("rate_bp"))), strataCol)
       .filter(keyBp(col(idCol)) < col("rate_bp"))
       .drop("rate_bp")

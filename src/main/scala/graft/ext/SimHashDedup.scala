@@ -36,7 +36,6 @@ object SimHashDedup {
   val WideBitsPerBand = 16
 
   def simhashes(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"), simhash32(col(textCol)).as("sh"))
   }
 

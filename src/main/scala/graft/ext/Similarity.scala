@@ -33,7 +33,6 @@ object Similarity {
   def bruteForceTopK(
       candidates: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(candidates.sparkSession)
     val cand = candidates.select(col(idCol).as("neighbor_id"), vecD(col(vecCol)).as("ce"))
       .withColumn("cnrm", norm(col("ce")))
     val q = queries.select(col(idCol).as("query_id"), vecD(col(vecCol)).as("qe"))
@@ -55,7 +54,6 @@ object Similarity {
     * identical result through an equi-join (spec-pinned parity) and is
     * what q24 runs. */
   def exactNearDupPairs(df: DataFrame, idCol: String, vecCol: String, minCos: Double): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val v = df.select(col(idCol).as("id"), vecD(col(vecCol)).as("e"))
       .withColumn("nrm", norm(col("e")))
     v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
@@ -98,7 +96,6 @@ object Similarity {
   def blockedNearDupPairs(
       df: DataFrame, idCol: String, vecCol: String, minCos: Double,
       blocks: Int = 16): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val spark = df.sparkSession
     import spark.implicits._
     val v = df.select(col(idCol).as("id"), vecD(col(vecCol)).as("e"))
@@ -140,7 +137,6 @@ object Similarity {
       .reduce(_ + _)
 
   def withBuckets(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"), vecD(col(vecCol)).as("e"))
       .withColumn("bucket", lshBucket(col("e")))
   }
@@ -199,7 +195,6 @@ object Similarity {
   def approxTopK(
       df: DataFrame, idCol: String, vecCol: String, queryPred: Column, k: Int,
       tables: Int = 4, bitsPerTable: Int = 8): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     bucketedTopK(multiTableBuckets(df, idCol, vecCol, tables, bitsPerTable), queryPred, k)
   }
 
@@ -214,7 +209,6 @@ object Similarity {
   def hardNegatives(
       candidates: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, labelCol: String, k: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(candidates.sparkSession)
     val cand = candidates.select(col(idCol).as("neighbor_id"),
       col(labelCol).as("neighbor_label"), vecD(col(vecCol)).as("ce"))
       .withColumn("cnrm", norm(col("ce")))
@@ -242,7 +236,6 @@ object Similarity {
   def lshNearDupPairs(
       df: DataFrame, idCol: String, vecCol: String, minCos: Double,
       tables: Int = 4, bitsPerTable: Int = 8): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val bucketed = multiTableBuckets(df, idCol, vecCol, tables, bitsPerTable)
     // dedup candidate id pairs BEFORE scoring: true near-dups collide in
     // ~every table, so scoring first would pay the dot product `tables`
@@ -275,7 +268,6 @@ object Similarity {
   def signBandTopK(
       df: DataFrame, idCol: String, vecCol: String, queryPred: Column, k: Int,
       bands: Int = 2, bitsPerBand: Int = 8): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val need = bands * bitsPerBand
     // fail FAST and loudly on short vectors: without the guard, ANSI-off
     // sessions would read nulls past the array end, every band-1 bucket
@@ -335,7 +327,6 @@ object Similarity {
     * consumer. */
   private def ivfAssignWithSeeds(df: DataFrame, idCol: String, vecCol: String,
       seeds: Array[org.apache.spark.sql.Row]): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val v = df.select(col(idCol).as("id"), vecD(col(vecCol)).as("e"))
       .withColumn("nrm", norm(col("e")))
     // nClusters driver-side seed rows (the loaded-globals class): the
@@ -372,7 +363,6 @@ object Similarity {
       candidates: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nClusters: Int = 16, nProbe: Int = 4): DataFrame = {
-    graft.functions.VectorFunctions.register(candidates.sparkSession)
     // ONE driver-side seed collect serves BOTH the corpus assignment
     // and the per-query probe ranking (r18 made the assignment
     // row-local; the probe ranking still re-scanned the corpus for the

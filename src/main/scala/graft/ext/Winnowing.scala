@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the
@@ -46,9 +46,12 @@ object Winnowing {
   def fingerprints(df: DataFrame, idCol: String, textCol: String,
       k: Int = K, w: Int = W): DataFrame = {
     require(k >= 1 && w >= 1, s"need k, w >= 1; got k=$k w=$w")
-    val shim = org.apache.spark.sql.GraftShim
-    val fps = shim.column(graft.functions.WinnowFps(
-      shim.expression(col(textCol)), k, w, 1000000007L, PosScale))
-    df.select(col(idCol).as("id"), explode(fps).as("fp"))
+    df.select(col(idCol).as("id"), explode(fingerprintSet(col(textCol), k, w)).as("fp"))
   }
+
+  /** The distinct selected fingerprints of one text, as an
+    * array<long> — the row-local kernel behind [[fingerprints]]. */
+  def fingerprintSet(text: Column, k: Int = K, w: Int = W): Column =
+    org.apache.spark.sql.GraftShim.column(graft.functions.WinnowFps(
+      org.apache.spark.sql.GraftShim.expression(text), k, w, 1000000007L, PosScale))
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -299,7 +298,8 @@ case class GramStats(child: Expression) extends UnaryExpression {
   * (filter/aggregate/transform are CodegenFallback; at corpus scale
   * they evaluate an expression tree per token). The watch list is
   * bound at plan time (exact strings — commas in words are fine via
-  * the Scala API; only the SQL registration route joins on commas). */
+  * the Scala API; only the SQL name, [[GraftExtensions]]' `token_stats`,
+  * joins them on commas). */
 case class TokenStats(child: Expression, words: Seq[String]) extends UnaryExpression {
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     if (child.dataType == org.apache.spark.sql.types.StringType)
@@ -409,101 +409,27 @@ case class HashEmbed(child: Expression, dims: Int) extends UnaryExpression {
   override def prettyName: String = "hash_embed"
 }
 
-/** Column wrappers + SQL registration for the custom expressions.
-  * Spark 4 keeps `Expression -> Column` private, so the public route is
-  * the function registry: [[register]] installs the builders (idempotent)
-  * and the wrappers emit `call_function` nodes resolved at analysis.
-  * Operators call `register(df.sparkSession)` before building columns. */
+/** Column helpers for the custom hash and text expressions. Each builds
+  * its Catalyst expression directly (Spark 4 keeps `Expression -> Column`
+  * private; [[org.apache.spark.sql.GraftShim]] bridges it), so it works
+  * on any session's DataFrames, like a builtin, with nothing registered
+  * first. The SQL-text names are [[GraftExtensions]]' concern. */
 object GraftFunctions {
-  def polyhash(c: Column, mod: Long = 1000000007L): Column =
-    call_function("polyhash", c, lit(mod))
+  private def column(e: Expression): Column = org.apache.spark.sql.GraftShim.column(e)
+  private def expr(c: Column): Expression = org.apache.spark.sql.GraftShim.expression(c)
 
-  def simhash32(c: Column): Column =
-    call_function("simhash32", c)
+  def polyhash(c: Column, mod: Long = 1000000007L): Column = column(PolyHash(expr(c), mod))
 
-  /** Registration-free (expression→Column bridge), like [[tokenStats]]. */
-  def simhash64(c: Column): Column =
-    org.apache.spark.sql.GraftShim.column(
-      SimHash64(org.apache.spark.sql.GraftShim.expression(c)))
+  def simhash32(c: Column): Column = column(SimHash32(expr(c)))
 
-  /** Registration-free (built via the expression→Column bridge): works
-    * on any session's DataFrames, like a builtin. The registry entry
-    * below additionally exposes it to SQL text. */
-  def tokenStats(c: Column, words: Seq[String]): Column =
-    org.apache.spark.sql.GraftShim.column(
-      TokenStats(org.apache.spark.sql.GraftShim.expression(c), words))
+  def simhash64(c: Column): Column = column(SimHash64(expr(c)))
 
-  /** Registration-free (expression→Column bridge): one-pass per-row
-    * term frequencies of a token-array column. */
-  def tokenCounts(c: Column): Column =
-    org.apache.spark.sql.GraftShim.column(
-      TokenCounts(org.apache.spark.sql.GraftShim.expression(c)))
+  def tokenStats(c: Column, words: Seq[String]): Column = column(TokenStats(expr(c), words))
 
-  /** Registration-free, like [[tokenStats]]. */
-  def gramStats(c: Column): Column =
-    org.apache.spark.sql.GraftShim.column(
-      GramStats(org.apache.spark.sql.GraftShim.expression(c)))
+  /** One-pass per-row term frequencies of a token-array column. */
+  def tokenCounts(c: Column): Column = column(TokenCounts(expr(c)))
 
-  /** Registration-free, like [[tokenStats]]. */
-  def hashEmbed(c: Column, dims: Int = 16): Column =
-    org.apache.spark.sql.GraftShim.column(
-      HashEmbed(org.apache.spark.sql.GraftShim.expression(c), dims))
+  def gramStats(c: Column): Column = column(GramStats(expr(c)))
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("polyhash",
-      exprs => {
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"polyhash expects (text, mod), got ${exprs.length} arguments")
-        PolyHash(exprs.head, exprs(1) match {
-          case Literal(v: Long, _) => v
-          case Literal(v: Int, _) => v.toLong
-          case other => throw new IllegalArgumentException(s"polyhash mod must be a literal, got $other")
-        })
-      }, "built-in")
-    registry.createOrReplaceTempFunction("simhash32",
-      exprs => SimHash32(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("gram_stats",
-      exprs => GramStats(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("token_counts",
-      exprs => TokenCounts(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("hash_embed",
-      exprs => {
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"hash_embed expects (text, dims), got ${exprs.length} arguments")
-        HashEmbed(exprs.head, exprs(1) match {
-          case Literal(v: Int, _) => v
-          case Literal(v: Long, _) => v.toInt
-          case other => throw new IllegalArgumentException(
-            s"hash_embed dims must be an integer literal, got $other")
-        })
-      }, "built-in")
-    registry.createOrReplaceTempFunction("token_stats",
-      exprs => {
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"token_stats expects (text, 'w1,w2,...'), got ${exprs.length} arguments")
-        TokenStats(exprs.head, exprs(1) match {
-          case Literal(v: UTF8String, _) =>
-            // SQL route: comma-joined list. Words containing commas or
-            // the empty string are inexpressible in this encoding, so a
-            // literal that would decode lossily (empty segment from a
-            // leading/trailing/double comma) is rejected rather than
-            // silently altered — such watch lists need the Scala API
-            // (tokenStats), which passes exact strings.
-            val segs = v.toString.split(",", -1).toSeq
-            if (segs.exists(_.isEmpty))
-              throw new IllegalArgumentException(
-                s"token_stats words literal '${v.toString}' contains an empty segment " +
-                  "(leading/trailing/double comma). Empty words and words containing " +
-                  "commas cannot be encoded in SQL — use the Scala API " +
-                  "(GraftFunctions.tokenStats) for exact strings.")
-            segs
-          case other => throw new IllegalArgumentException(
-            s"token_stats words must be a string literal, got $other")
-        })
-      }, "built-in")
-  }
+  def hashEmbed(c: Column, dims: Int = 16): Column = column(HashEmbed(expr(c), dims))
 }

@@ -124,7 +124,7 @@ case class MisraGriesAgg(
 }
 
 object MgFunctions {
-  /** Per-group Misra-Gries candidate array (registration-free Column). */
+  /** Per-group Misra-Gries candidate array. */
   def mgCandidates(c: Column, k: Int): Column =
     org.apache.spark.sql.GraftShim.column(
       MisraGriesAgg(org.apache.spark.sql.GraftShim.expression(c), k)

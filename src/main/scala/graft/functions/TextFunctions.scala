@@ -21,9 +21,7 @@ object TextFunctions {
   /** Native one-pass token statistics ([[TokenStats]]) — semantics
     * identical to the HOF chains they replace (spec-checked against
     * them); the per-row [n_tokens, watch, punct, chars] array is
-    * shared across the derived stats via subexpression elimination.
-    * Registration-free: built through the expression→Column bridge, so
-    * these helpers stay pure Column functions usable on any session. */
+    * shared across the derived stats via subexpression elimination. */
   private def tokenStatsArr(c: Column, words: Seq[String]): Column =
     GraftFunctions.tokenStats(c, words)
 

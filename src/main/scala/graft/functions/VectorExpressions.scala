@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -522,46 +521,31 @@ case class KmNearest(child: Expression, clusters: Array[Long],
   override def prettyName: String = "km_nearest"
 }
 
-/** Column wrappers via the function registry (see GraftFunctions). */
+/** Column helpers for the vector and shingle expressions. Each builds
+  * its Catalyst expression directly, so it works on any session's
+  * DataFrames with nothing registered first; the SQL-text names are
+  * [[GraftExtensions]]' concern. */
 object VectorFunctions {
-  def vecdot(a: Column, b: Column): Column = call_function("vecdot", a, b)
-  def arrayJaccard(a: Column, b: Column): Column = call_function("array_jaccard", a, b)
-  def minhashSig(text: Column): Column = call_function("minhash_sig", text)
-  def charShingles(text: Column, n: Int): Column = call_function("char_shingles", text, lit(n))
+  private def column(e: Expression): Column = org.apache.spark.sql.GraftShim.column(e)
+  private def expr(c: Column): Expression = org.apache.spark.sql.GraftShim.expression(c)
+
+  def vecdot(a: Column, b: Column): Column = column(VecDot(expr(a), expr(b)))
+  def arrayJaccard(a: Column, b: Column): Column = column(ArrayJaccard(expr(a), expr(b)))
+  /** The coefficient set is the caller's ([[graft.ext.MinHashLsh]]
+    * passes its own `A`/`B`/`P`). */
+  def minhashSig(text: Column, n: Int, as: Seq[Long], bs: Seq[Long], p: Long): Column =
+    column(MinHashSig(expr(text), n, as.toArray, bs.toArray, p))
+  def charShingles(text: Column, n: Int): Column = column(CharShingles(expr(text), n))
   def hashedShingles(text: Column, n: Int, mod: Long): Column =
-    call_function("hashed_shingles", text, lit(n), lit(mod))
-  def arrayJaccardLong(a: Column, b: Column): Column = call_function("array_jaccard_long", a, b)
+    column(HashedShingles(expr(text), n, mod))
+  def arrayJaccardLong(a: Column, b: Column): Column =
+    column(ArrayJaccardLong(expr(a), expr(b)))
+  /** Exact |A ∩ B| of two ascending distinct long arrays (hashed
+    * shingle sets) — the two-pointer kernel; the builtin
+    * `array_intersect` materializes the intersection through a per-row
+    * hash set just to take its size, and on ~300-element sets over
+    * millions of candidate pairs that allocation is the containment
+    * family's hot loop. */
   def arrayIntersectSizeLong(a: Column, b: Column): Column =
-    call_function("array_intersect_size_long", a, b)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("vecdot",
-      exprs => VecDot(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("array_jaccard",
-      exprs => ArrayJaccard(exprs(0), exprs(1)), "built-in")
-    def litInt(e: Expression): Int = e match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(s"expected literal int, got $other")
-    }
-    def litLong(e: Expression): Long = e match {
-      case Literal(v: Long, _) => v
-      case Literal(v: Int, _) => v.toLong
-      case other => throw new IllegalArgumentException(s"expected literal long, got $other")
-    }
-    registry.createOrReplaceTempFunction("char_shingles",
-      exprs => CharShingles(exprs(0), litInt(exprs(1))), "built-in")
-    registry.createOrReplaceTempFunction("hashed_shingles",
-      exprs => HashedShingles(exprs(0), litInt(exprs(1)), litLong(exprs(2))), "built-in")
-    registry.createOrReplaceTempFunction("array_jaccard_long",
-      exprs => ArrayJaccardLong(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("array_intersect_size_long",
-      exprs => ArrayIntersectSizeLong(exprs(0), exprs(1)), "built-in")
-  }
-
-  /** MinHash registration carries the coefficient set (caller-owned). */
-  def registerMinhash(spark: org.apache.spark.sql.SparkSession,
-      n: Int, as: Seq[Long], bs: Seq[Long], p: Long): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("minhash_sig",
-      exprs => MinHashSig(exprs.head, n, as.toArray, bs.toArray, p), "built-in")
+    column(ArrayIntersectSizeLong(expr(a), expr(b)))
 }

@@ -19,12 +19,13 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * prefix correspondence (position + name + type), remaps attribute ids,
   * and moves the filter under the barrier.
   *
-  * OPT-IN: install via [[GraftPlans.install]] (runtime
-  * `spark.experimental.extraOptimizations`) or builder-time
-  * [[GraftExtensions]]. General `mapPartitions` need not be
-  * prefix-preserving (it may drop/aggregate rows), in which case
-  * pushing a filter below changes semantics — only enable on sessions
-  * running this engine's runners.
+  * Installed per session by [[GraftPlans.install]] (runtime
+  * `spark.experimental.extraOptimizations`), which [[graft.GraftEngine]]
+  * calls, so it is on by default for engine sessions. It is deliberately
+  * not part of [[graft.functions.GraftExtensions]]: general
+  * `mapPartitions` need not be prefix-preserving (it may drop/aggregate
+  * rows), in which case pushing a filter below changes semantics — only
+  * enable it on sessions running this engine's runners.
   *
   * At 100 TB this is the difference between enriching the corpus and
   * enriching the slice you keep: the filter reaches the parquet scan
@@ -59,12 +60,6 @@ object EnrichmentFilterPushdown extends Rule[LogicalPlan] {
         } else f
       }
   }
-}
-
-/** Builder-time installation: `.withExtensions(new GraftExtensions)`. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    e.injectOptimizerRule(_ => EnrichmentFilterPushdown)
 }
 
 /** Runtime installation on an existing session (idempotent). */

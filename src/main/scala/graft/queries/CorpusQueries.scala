@@ -552,7 +552,6 @@ object CorpusQueries {
     val agg = BpeTrain.docWords(released, "text", carry = Seq("doc_id"))
       .join(broadcast(BpeTrain.tokenCounts(trained)), "word")
       .groupBy($"doc_id").agg(sum($"n_bpe").as("n_bpe_tokens"))
-    GraftFunctions.register(s)
     released.select($"doc_id", $"n_tokens", $"quality")
       .join(agg, Seq("doc_id"), "left")
       .select($"doc_id", $"n_tokens", $"quality",

@@ -441,7 +441,6 @@ object CurationQueries {
     * stratum smaller than k yields all its rows. */
   def q101StratifiedK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val k = 20
     // q70's mix recipe: polyhash of the id string, LCG-avalanched
     val mixed = (GraftFunctions.polyhash($"doc_id".cast("string")) * 1103515245L
@@ -899,7 +898,6 @@ object CurationQueries {
     * never disagree on a key or a shard boundary. */
   private def epochKeyed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     Tables.load(s, dir, "documents")
       .select($"doc_id", explode(array((0 until 3).map(lit): _*)).as("epoch"))
       .select($"epoch", $"doc_id",
@@ -1058,7 +1056,6 @@ object CurationQueries {
     * one (epoch, shard) exchange, shard-bounded rank window). */
   def q192Curriculum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val sens = graft.ext.SurprisalScore.ccnetBucketsFrom(
         MiningQueries.sharedSurprisal(s, dir),
         Tables.load(s, dir, "documents"), "doc_id", "lang")

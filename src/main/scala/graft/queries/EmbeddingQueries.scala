@@ -150,7 +150,6 @@ object EmbeddingQueries {
     * excluded on both sides (cos would be NULL/NaN). */
   def q94TextAnn(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s) // vecdot used below pre-analysis
     val emb = Tables.load(s, dir, "documents")
       .filter(length(trim($"text")) > 0)
       .select($"doc_id",

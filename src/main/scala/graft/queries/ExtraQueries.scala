@@ -41,7 +41,6 @@ object ExtraQueries {
   def q31Fingerprint(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.load(s, dir, "documents")
-    GraftFunctions.register(s)
     docs.select($"doc_id", GraftFunctions.polyhash($"text").as("fingerprint"))
       .orderBy($"doc_id")
   }

@@ -992,7 +992,6 @@ object MiningQueries {
     * sample itself never shuffles. */
   def q181MixMaterialize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val tagged = mixTagged(s, dir) // session-cached, already checkpointed
     val perSrc = tagged.groupBy($"source")
       .agg(sum($"is_uniq" * $"cal_keep" * $"n_tokens").as("tok_kept_unique"))
@@ -1089,7 +1088,6 @@ object MiningQueries {
     * the fusion join and final re-rank touch ≤ 300 rows total. */
   def q188QualityEnsemble(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val n = 100
     val docs = Tables.load(s, dir, "documents")
     // ties broken by the engine-wide avalanched hash, NOT by doc_id: a

@@ -92,7 +92,6 @@ object ScaleQueries {
   def q153LeakageSafeSplit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.ext.Mixing
-    GraftFunctions.register(s) // keyBp's polyhash resolves at analysis
     val labels = HashDedupQueries.sharedLshCcLabels(s, dir)
     labels
       .withColumn("hk", Mixing.keyBp($"cluster_id"))
@@ -196,7 +195,6 @@ object ScaleQueries {
     * out of hash uniformity (verified per language here). */
   def q50HashSplit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.register(s)
     val docs = Tables.load(s, dir, "documents")
     docs.withColumn("bucket", GraftFunctions.polyhash($"doc_id".cast("string")) % 100)
       .withColumn("split",

@@ -584,7 +584,6 @@ object SketchQueries {
     * no sort exchange; N rows collectable at any corpus scale). */
   private def recallQuerySample(s: SparkSession, codes: DataFrame): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s) // polyhash behind hash31
     codes
       .select($"id", $"codes", Hll.hash31($"id".cast("string")).as("qh"))
       .orderBy($"qh", $"id")
@@ -1088,7 +1087,6 @@ object SketchQueries {
     * branches mirrored in the oracle). All outputs exact integers. */
   def q125KmvOverlap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s) // polyhash behind hash31
     val orders = Tables.load(s, dir, "orders")
     def sketch(df: DataFrame): DataFrame =
       df.select(Hll.hash31($"k".cast("string")).as("h")).distinct()
@@ -1170,7 +1168,6 @@ object SketchQueries {
     * (justified) single-partition window. */
   def q128PrioritySample(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val k = 32
     val pri = Tables.load(s, dir, "lineitem")
       .select(concat($"l_orderkey", lit("_"), $"l_linenumber").as("key"),

@@ -697,7 +697,6 @@ object TextQueries {
     * per-doc rollup joins hashes, never text. */
   def q139Novelty(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val sh = Tables.load(s, dir, "documents")
       .filter(length($"text") >= 8)
       .select($"doc_id",

@@ -469,7 +469,6 @@ object Streaming {
     * the batch q141 numbers exactly — spec-pinned against the batch
     * register build on the same events. */
   def slidingHllRegisters(events: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(events.sparkSession) // polyhash
     events
       .withWatermark("event_time", "30 minutes")
       .select(window(col("event_time"), "30 minutes", "10 minutes").as("win"),
@@ -483,7 +482,7 @@ object Streaming {
   /** Streaming twin of q146's span-level decontamination: FRESH
     * documents stream in (the crawl-ingest shape), their winnowing
     * fingerprints are computed ROW-locally (the native
-    * [[graft.ext.Winnowing.fingerprints]] kernel — no shuffle, no
+    * [[graft.ext.Winnowing.fingerprintSet]] kernel — no shuffle, no
     * state for selection), probe the STATIC eval-slice fingerprint set
     * (the q120 stream-static discipline), and each doc's contamination
     * stats — n_fp, n_shared, integer-ppm ratio, flag — emit once its
@@ -494,11 +493,7 @@ object Streaming {
     val fps = docs
       .withWatermark("event_time", "10 minutes")
       .select(col("doc_id"), col("event_time"),
-        explode(org.apache.spark.sql.GraftShim.column(
-          graft.functions.WinnowFps(
-            org.apache.spark.sql.GraftShim.expression(col("text")),
-            graft.ext.Winnowing.K, graft.ext.Winnowing.W,
-            1000000007L, graft.ext.Winnowing.PosScale))).as("fp"))
+        explode(graft.ext.Winnowing.fingerprintSet(col("text"))).as("fp"))
     // distinct the static probe side: duplicate eval fp rows would
     // multiply the left join and inflate n_fp AND n_shared, silently
     // diverging from batch q146 (which dedups its eval set internally)
@@ -520,16 +515,19 @@ object Streaming {
     * trigger), candidates dedup per event-time window (bounded
     * per-(window, doc, corpus-doc) state, watermark-GC'd), and the
     * exact verification joins the static full shingle sets once per
-    * candidate. Verdict arithmetic is the batch operator's all-integer
-    * test verbatim, so the emitted rows are bit-identical to the batch
-    * probe over the same documents (spec-pinned).
+    * candidate with the batch operator's two-pointer intersect kernel
+    * (both sets are ascending and distinct: the stream side is
+    * `hashedShingles` output through `first`, `set_c` is
+    * [[graft.ext.Dedup.hashedShingleSets]]). Verdict arithmetic is the
+    * batch operator's all-integer test verbatim, so the emitted rows are
+    * bit-identical to the batch probe over the same documents
+    * (spec-pinned).
     *
     * `docs` must carry (doc_id, text, event_time); `postings`/`sets`
     * come from [[graft.ext.Dedup.containmentCorpusIndex]]. */
   def containmentProbeStream(
       docs: DataFrame, postings: DataFrame, sets: DataFrame,
       n: Int = 8, thresholdBp: Int = 9000, minShingles: Int = 20): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val shaped = docs
       .withWatermark("event_time", "10 minutes")
       .withColumn("sh_set", graft.functions.VectorFunctions
@@ -547,7 +545,8 @@ object Streaming {
       .agg(first(col("sh_set")).as("sh_set"))
     cand.join(sets, Seq("corpus_id"))
       .select(col("doc_id"), col("corpus_id"),
-        size(array_intersect(col("sh_set"), col("set_c"))).cast("long").as("n_inter"),
+        graft.functions.VectorFunctions
+          .arrayIntersectSizeLong(col("sh_set"), col("set_c")).as("n_inter"),
         size(col("sh_set")).cast("long").as("n_doc"),
         size(col("set_c")).cast("long").as("n_corpus"))
       .filter(col("n_inter") * 10000L >=
@@ -570,7 +569,6 @@ object Streaming {
     * (spec-pinned). `docs` must carry (doc_id, text, event_time). */
   def blockDedupStream(docs: DataFrame, knownHashes: DataFrame,
       blockWords: Int = 20): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val blocks = docs
       .withWatermark("event_time", "10 minutes")
       .withColumn("t", graft.functions.TextFunctions.tokens(col("text")))
@@ -897,7 +895,6 @@ object Streaming {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(liftPpm.length == graft.ext.Dsir.Buckets,
       s"liftPpm must have ${graft.ext.Dsir.Buckets} entries, got ${liftPpm.length}")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = graft.functions.TextFunctions.tokens(lower(col(textCol)))
     val score = aggregate(
       transform(toks, t => element_at(typedLit(liftPpm.toSeq),
@@ -966,7 +963,6 @@ object Streaming {
   def curriculumRouteStream(docs: DataFrame, model: DataFrame,
       thresholds: DataFrame,
       shards: Long = graft.ext.Mixing.ShuffleShards): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     ccnetBucketStream(docs, model, thresholds)
       .withColumn("stage",
         when(col("bucket") === "head", 0).when(col("bucket") === "middle", 1)

@@ -8,7 +8,6 @@ class HashDedupSpec extends SparkSpec {
   import spark.implicits._
 
   test("polyhash: codegen and interpreted agree with the pinned semantics") {
-    GraftFunctions.register(spark)
     // hand-computed: "ab" -> ((0*31+97)%m*31+98)%m = 3105
     val df = Seq("ab", "", "abc").toDF("s")
     val got = df.select(GraftFunctions.polyhash($"s").as("h")).as[Long].collect()
@@ -21,7 +20,6 @@ class HashDedupSpec extends SparkSpec {
   }
 
   test("simhash32 is deterministic, order-insensitive to duplicate tokens sign") {
-    GraftFunctions.register(spark)
     val df = Seq("the quick fox", "the quick fox", "completely different words here")
       .toDF("s")
     val hs = df.select(GraftFunctions.simhash32($"s").as("h")).as[Long].collect()

@@ -126,7 +126,6 @@ class PlanQualitySpec extends SparkSpec {
 
   test("custom hash expressions participate in whole-stage codegen") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val df = Tables.load(spark, sf, "documents")
       .select(graft.functions.GraftFunctions.simhash32(col("text")).as("h"))
     // formatted mode marks whole-stage-codegen participants with

@@ -286,7 +286,6 @@ class PropertySpec extends SparkSpec {
     // >= 13 so within 31-bit values they are bijective) with odd
     // multiplications mod 2^31 (bijective): distinct inputs must never
     // collide, and outputs must stay within the 31-bit register domain
-    graft.functions.GraftFunctions.register(spark)
     val keys = (1L to 3000L).map(i => i * 2654435761L % 1000000007L).distinct
     val out = keys.toDF("p")
       .select(graft.ext.Hll.hash31($"p").as("h"))

@@ -131,8 +131,6 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("token_stats SQL route rejects lossy comma literals with a clear error") {
-    import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val df = Seq("the end").toDF("t")
     df.createOrReplaceTempView("ts_in")
     // well-formed literal works
@@ -148,7 +146,6 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("native token_stats matches the HOF formulation it replaced") {
     import graft.functions.{GraftFunctions, TextFunctions}
-    GraftFunctions.register(spark)
     val texts = Seq(Some(""), Some("   "), Some("\nabc "), Some("a.b, c! d?"),
       Some("The THE the end"), Some("x\ty\nz\r"), Some("one"),
       Some(" lead trail "), Some("abc\n"), Some("and?of;the:"), None,

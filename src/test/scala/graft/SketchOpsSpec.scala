@@ -375,7 +375,6 @@ class SketchOpsSpec extends SparkSpec {
 
   test("KMV order-statistic estimate tracks true cardinality; under-full is exact") {
     import graft.ext.Hll
-    graft.functions.GraftFunctions.register(spark)
     def est(keys: Seq[Long], k: Int): Long = {
       val sk = keys.toDF("k")
         .select(Hll.hash31($"k".cast("string")).as("h")).distinct()

@@ -16,5 +16,6 @@ object SparkSpec {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .withExtensions(new graft.functions.GraftExtensions)
     .getOrCreate()
 }

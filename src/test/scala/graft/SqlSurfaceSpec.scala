@@ -1,8 +1,5 @@
 package graft
 
-import graft.functions.{GraftFunctions, VectorFunctions}
-import org.apache.spark.sql.functions._
-
 /** The engine is SQL-first usable: tables registered as views, custom
   * expressions registered as SQL functions — `spark.sql` gets the same
   * plans and results as the DataFrame API. */
@@ -26,10 +23,6 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("custom expressions are callable from SQL (polyhash, simhash32, minhash, shingles)") {
     Tables.registerAll(spark, sf)
-    GraftFunctions.register(spark)
-    VectorFunctions.register(spark)
-    VectorFunctions.registerMinhash(spark, 8,
-      graft.ext.MinHashLsh.A, graft.ext.MinHashLsh.B, graft.ext.MinHashLsh.P)
     val row = spark.sql(
       """SELECT polyhash(text, 1000000007) AS ph, simhash32(text) AS sh,
         |  size(minhash_sig(text)) AS k, size(char_shingles(text, 8)) AS ns,

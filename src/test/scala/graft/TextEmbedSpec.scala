@@ -35,7 +35,6 @@ class TextEmbedSpec extends SparkSpec {
   }
 
   test("Column and SQL routes agree with the kernel") {
-    GraftFunctions.register(spark)
     val df = Seq((1L, "alpha beta gamma"), (2L, "delta")).toDF("id", "text")
     val viaColumn = df.select($"id", GraftFunctions.hashEmbed($"text", 16).as("e"))
       .as[(Long, Seq[Long])].collect().toMap
@@ -51,7 +50,6 @@ class TextEmbedSpec extends SparkSpec {
   test("embeddings feed the similarity stack: self-cosine is 1") {
     val df = Seq((1L, "the quick brown fox"), (2L, "jumps over the lazy dog"))
       .toDF("doc_id", "text")
-    graft.functions.VectorFunctions.register(spark)
     val emb = df.select($"doc_id", GraftFunctions.hashEmbed($"text", 16).as("e"))
     val cos = emb.select(
       (Similarity.dot(Similarity.vecD($"e"), Similarity.vecD($"e")) /
@@ -75,7 +73,6 @@ class TextEmbedSpec extends SparkSpec {
   }
 
   test("signBandTopK fails fast on vectors too short for the band layout") {
-    graft.functions.VectorFunctions.register(spark)
     val tiny = Seq((1L, Seq(1L, -1L, 2L, -2L)), (2L, Seq(3L, 1L, -1L, 2L)))
       .toDF("id", "e") // 4 dims, default layout needs 16
     val ex = intercept[Exception] {
