@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Catalog façade over the driver's parquet tables (TESTDATA.md).
   *
@@ -37,15 +39,18 @@ object Tables {
     * is pinned to UTC (LocalSessions) — the same naive reading DuckDB's
     * epoch(ts) applies on the oracle side. */
   def loadEvents(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.expr
     val raw = load(spark, dir, "events")
-    val withUs = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => // nanos-as-long
-        raw.withColumn("us", expr("CAST(ts DIV 1000 AS BIGINT)"))
-      case _ => // TimestampType or TimestampNTZType, micros precision
-        raw.withColumn("us", expr("unix_micros(CAST(ts AS TIMESTAMP))"))
-    }
-    withUs.withColumn("sec", expr("CAST(us DIV 1000000 AS BIGINT)"))
+    raw.withColumn("us", eventsUs(raw.schema("ts").dataType))
+      .withColumn("sec", expr("CAST(us DIV 1000000 AS BIGINT)"))
+  }
+
+  /** Epoch microseconds of the events `ts` column, given the type
+    * [[load]] read it as — the one cast site of [[loadEvents]], shared
+    * by the event-time column of
+    * [[graft.streaming.Streaming.eventsStream]]. */
+  private[graft] def eventsUs(tsType: DataType): Column = tsType match {
+    case LongType => expr("CAST(ts DIV 1000 AS BIGINT)") // nanos-as-long
+    case _ => expr("unix_micros(CAST(ts AS TIMESTAMP))") // micros, LTZ or NTZ
   }
 
   /** Register every table as a temp view so `spark.sql` works too. */

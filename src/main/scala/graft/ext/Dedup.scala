@@ -417,17 +417,27 @@ object Dedup {
     * exactly reproducible by the streaming twin one doc at a time).
     * Scale shape: the fresh batch explodes to (hash, block) rows, one
     * equi-join against the known hashes (the corpus-sized side stays
-    * partitioned — nothing broadcasts), one per-doc reassembly agg. */
+    * partitioned — nothing broadcasts), one per-doc reassembly agg.
+    *
+    * `keys` are pass-through columns of `fresh` (empty for a batch),
+    * carried through the row-local stage and put in front of the
+    * per-doc `groupBy`: the streaming twin
+    * ([[graft.streaming.Streaming.blockDedupStream]]) passes its
+    * event-time window, so the reassembly becomes its windowed
+    * aggregate. */
   def blockDedupAgainstCorpus(fresh: DataFrame, idCol: String, textCol: String,
-      knownHashes: DataFrame, blockWords: Int = 20): DataFrame = {
+      knownHashes: DataFrame, blockWords: Int = 20,
+      keys: Seq[String] = Nil): DataFrame = {
+    val keyCols = keys.map(col)
     val blocks = fresh
-      .select(col(idCol).as("doc_id"),
-        graft.functions.TextFunctions.tokens(col(textCol)).as("t"))
+      .select((col(idCol).as("doc_id") +: keyCols) :+
+        graft.functions.TextFunctions.tokens(col(textCol)).as("t"): _*)
       .filter(size(col("t")) > 0)
       .withColumn("bs", expr(
         s"transform(sequence(0, (size(t) - 1) DIV $blockWords), " +
           s"i -> array_join(slice(t, i * $blockWords + 1, $blockWords), ' '))"))
-      .select(col("doc_id"), col("bs"), posexplode(col("bs")).as(Seq("idx", "block")))
+      .select((col("doc_id") +: keyCols) ++
+        Seq(col("bs"), posexplode(col("bs")).as(Seq("idx", "block"))): _*)
       // within-doc first occurrence, decided inside the row
       .withColumn("first_in_doc", expr("array_position(bs, block) = idx + 1"))
       .drop("bs")
@@ -436,7 +446,7 @@ object Dedup {
       .join(knownHashes.select(col("h")).distinct()
         .withColumn("known", lit(1)), Seq("h"), "left")
       .withColumn("keep", (col("first_in_doc") && col("known").isNull).cast("int"))
-      .groupBy(col("doc_id"))
+      .groupBy(keyCols :+ col("doc_id"): _*)
       .agg(count(lit(1)).as("n_blocks"),
         sum(col("keep")).as("n_kept"),
         count(col("known")).as("n_known"),
@@ -530,11 +540,21 @@ object Dedup {
     * arithmetic cannot fork. */
   private[graft] def containmentVerifyProbe(
       cand: DataFrame, docs: DataFrame, sets: DataFrame,
-      thresholdBp: Int): DataFrame = {
+      thresholdBp: Int): DataFrame =
     // same no-broadcast contract as candidateSetPairs: both set sides
     // carry inflated hash arrays the scan-size estimate cannot see
-    cand.join(docs.hint("merge"), Seq("doc_id"))
-      .join(sets.hint("merge"), Seq("corpus_id"))
+    containmentVerdict(cand.join(docs.hint("merge"), Seq("doc_id"))
+      .join(sets.hint("merge"), Seq("corpus_id")), thresholdBp)
+
+  /** The verdict of [[containmentVerifyProbe]] over candidate rows that
+    * already carry both full sets (doc_id, corpus_id, sh_set, set_c):
+    * the two-pointer intersection, the all-integer either-direction
+    * threshold and both ppm ratios. The streaming twin
+    * ([[graft.streaming.Streaming.containmentProbeStream]]) applies it
+    * to its windowed candidates. */
+  private[graft] def containmentVerdict(withSets: DataFrame,
+      thresholdBp: Int): DataFrame =
+    withSets
       .select(col("doc_id"), col("corpus_id"),
         graft.functions.VectorFunctions
           .arrayIntersectSizeLong(col("sh_set"), col("set_c")).as("n_inter"),
@@ -544,5 +564,4 @@ object Dedup {
         lit(thresholdBp.toLong) * least(col("n_doc"), col("n_corpus")))
       .withColumn("doc_in_corpus_ppm", expr("n_inter * 1000000L DIV n_doc"))
       .withColumn("corpus_in_doc_ppm", expr("n_inter * 1000000L DIV n_corpus"))
-  }
 }

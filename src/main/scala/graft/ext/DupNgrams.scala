@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.functions.TextFunctions.tokens
 
 /** Corpus-wide EXACT duplicated n-gram detection — the token-level
@@ -19,7 +18,7 @@ import graft.functions.TextFunctions.tokens
   * memorization-sensitive pipeline prunes on.
   *
   * Scale design (100 TB): everything is explode → one hash-shuffle on
-  * the gram key → window over (doc, pos). No pair emission, no
+  * the gram key → one per-doc aggregate. No pair emission, no
   * cartesian; the shuffle is n_tokens·N gram keys. Grams here travel
   * as their token strings, which keeps the semantics collision-free
   * and oracle-checkable; at 100 TB the drop-in lever is replacing the
@@ -28,8 +27,8 @@ import graft.functions.TextFunctions.tokens
   * suffix-array construction of the paper avoids the N× blowup
   * entirely but is a sequential external-memory build, not a fit for
   * a shuffle-based engine. Coverage per doc is an interval-union
-  * computed by ONE window pass (sum of min(N, gap)), not by expanding
-  * spans to positions.
+  * folded over the doc's sorted starts (sum of min(N, gap)), not by
+  * expanding spans to positions.
   */
 object DupNgrams {
 
@@ -41,34 +40,36 @@ object DupNgrams {
   val DefaultN = 8
 
   /** SQL text of the (pos, gram) struct array over a tokens column —
-    * the ONE place the gram recipe lives on the engine side (batch
-    * [[gramPositions]] and the streaming twin must never fork it).
-    * Caller guarantees `size(tokCol) >= n` (Spark's `sequence` runs
+    * the ONE place the gram recipe lives on the engine side
+    * ([[gramPositions]] and [[coverageAgainstDict]] must never fork
+    * it). Caller guarantees `size(tokCol) >= n` (Spark's `sequence` runs
     * DESCENDING when start > stop, which would fabricate grams). */
-  private[graft] def gramStructsExpr(tokCol: String, n: Int): String =
+  private def gramStructsExpr(tokCol: String, n: Int): String =
     s"transform(sequence(1, size($tokCol) - ${n - 1}), " +
     s"i -> struct(cast(i as bigint) as pos, array_join(slice($tokCol, i, $n), ' ') as gram))"
 
-  /** (id, pos, gram) for every token n-gram of every document; `pos`
-    * is the 1-based index of the gram's FIRST token. Tokenization is
-    * the engine-wide whitespace split of the lower-cased text (the
-    * [[Dedup]]/q43 discipline). Docs shorter than `n` emit nothing. */
+  /** (id, keys..., pos, gram) for every token n-gram of every
+    * document, with the pass-through `keys` columns of `df` carried
+    * along; `pos` is the 1-based index of the gram's FIRST token.
+    * Tokenization is the engine-wide whitespace split of the
+    * lower-cased text (the [[Dedup]]/q43 discipline). Docs shorter
+    * than `n` emit nothing. */
   def gramPositions(df: DataFrame, idCol: String, textCol: String,
-      n: Int = DefaultN): DataFrame = {
+      n: Int = DefaultN, keys: Seq[String] = Nil): DataFrame = {
     val toks = tokens(lower(col(textCol)))
-    df.select(col(idCol).as("id"), toks.as("__t"))
+    val keyCols = keys.map(col)
+    df.select((col(idCol).as("id") +: keyCols) :+ toks.as("__t"): _*)
       .filter(size(col("__t")) >= n)
-      .select(col("id"), explode(expr(gramStructsExpr("__t", n))).as("g"))
-      .select(col("id"), col("g.pos").as("pos"), col("g.gram").as("gram"))
+      .select((col("id") +: keyCols) :+ explode(expr(gramStructsExpr("__t", n))).as("g"): _*)
+      .select((col("id") +: keyCols) ++ Seq(col("g.pos").as("pos"), col("g.gram").as("gram")): _*)
   }
 
   /** Row-local interval-union cover of SORTED 1-based span starts,
     * each spanning `n` tokens: first start contributes n, each later
-    * one min(n, gap to its predecessor) — the same arithmetic
-    * [[coverageFromStarts]] runs as a window pass, expressed over an
-    * array so a streaming aggregate can apply it AFTER collecting a
-    * doc's starts (no second shuffle). Empty array → 0. */
-  private[graft] def coveredFromSortedStarts(ps: Column, n: Int): Column = {
+    * one min(n, gap to its predecessor), folded over the array
+    * [[coverageAgainstDict]] collects per doc (no window pass, no
+    * second shuffle). Empty array → 0. */
+  private def coveredFromSortedStarts(ps: Column, n: Int): Column = {
     val nn = lit(n.toLong)
     when(size(ps) === 0, lit(0L)).otherwise(
       aggregate(
@@ -110,58 +111,59 @@ object DupNgrams {
         (coalesce(col("__c0"), lit(0L)) + coalesce(col("__cb"), lit(0L)))
           .as("n_occ"))
 
-  /** Duplicated-gram start positions per document: (id, pos) for each
-    * gram of the doc present in `dict`. The join is a left-semi on the
-    * gram key — only (id, pos) survives the shuffle back. */
-  def dupStarts(grams: DataFrame, dict: DataFrame): DataFrame =
+  /** Duplicated-gram start positions per document: (id, keys..., pos)
+    * for each gram of the doc present in `dict`, with the pass-through
+    * `keys` columns of [[gramPositions]] carried along. The join is a
+    * left-semi on the gram key — only (id, pos) survives the shuffle
+    * back. */
+  def dupStarts(grams: DataFrame, dict: DataFrame, keys: Seq[String] = Nil): DataFrame =
     grams.join(dict.select("gram"), Seq("gram"), "left_semi")
-      .select(col("id"), col("pos"))
+      .select((col("id") +: keys.map(col)) :+ col("pos"): _*)
 
   /** Per-doc duplication profile over ALL docs of `df`:
-    * (id, n_tokens, dup_grams, covered_tokens, coverage_ppm).
-    * `covered_tokens` is the exact size of the union of the [pos,
-    * pos+n-1] spans — computed with one per-doc window pass: sorted by
-    * pos, each span adds min(n, pos − previous pos) new tokens.
-    * Integer ppm keeps the output hash-stable. */
+    * (id, n_tokens, dup_grams, covered_tokens, coverage_ppm) — the
+    * probe [[coverageAgainstDict]] against the corpus's own
+    * [[dupGramDict]]. `covered_tokens` is the exact size of the union
+    * of the [pos, pos+n-1] spans: sorted by pos, each span adds
+    * min(n, pos − previous pos) new tokens. Integer ppm keeps the
+    * output hash-stable. */
   def coverage(df: DataFrame, idCol: String, textCol: String,
-      n: Int = DefaultN): DataFrame = {
-    val grams = gramPositions(df, idCol, textCol, n)
-    coverageFromStarts(df, idCol, textCol, n, dupStarts(grams, dupGramDict(grams)))
-  }
-
-  /** Coverage profile given precomputed duplicated-span starts —
-    * shared by the self-contained [[coverage]] and the frozen-dict
-    * probe path ([[coverageAgainstDict]]). */
-  def coverageFromStarts(df: DataFrame, idCol: String, textCol: String,
-      n: Int, starts: DataFrame): DataFrame = {
-    val w = Window.partitionBy("id").orderBy("pos")
-    val perDoc = starts
-      .withColumn("__gap", col("pos") - lag(col("pos"), 1).over(w))
-      .groupBy("id")
-      .agg(count(lit(1)).as("dup_grams"),
-        sum(least(lit(n.toLong), coalesce(col("__gap"), lit(n.toLong))))
-          .as("covered_tokens"))
-    df.select(col(idCol).as("id"),
-        size(tokens(lower(col(textCol)))).cast("long").as("n_tokens"))
-      .join(perDoc, Seq("id"), "left")
-      .select(col("id"),
-        col("n_tokens"),
-        coalesce(col("dup_grams"), lit(0L)).as("dup_grams"),
-        coalesce(col("covered_tokens"), lit(0L)).as("covered_tokens"),
-        when(col("n_tokens") > 0,
-          expr("coalesce(covered_tokens, 0L) * 1000000L DIV n_tokens"))
-          .otherwise(lit(0L)).as("coverage_ppm"))
-  }
+      n: Int = DefaultN): DataFrame =
+    coverageAgainstDict(df, idCol, textCol,
+      dupGramDict(gramPositions(df, idCol, textCol, n)), n)
 
   /** Probe an INCREMENTAL batch against a frozen duplicated-gram
     * dictionary: coverage of `fresh` w.r.t. grams already known
-    * duplicated in the standing corpus. Serving-side only — no
-    * dictionary (re)build, the corpus never rescans; `dict` is the
-    * loaded parquet artifact. */
+    * duplicated in the standing corpus, in [[coverage]]'s columns.
+    * Serving-side only — no dictionary (re)build, the corpus never
+    * rescans; `dict` is the loaded [[dupGramDict]] artifact.
+    *
+    * No window pass and no join back: the dictionary's hit starts
+    * ([[dupStarts]]) and one token-count row
+    * per document (so a doc without hits, or shorter than `n`, still
+    * emits its zero profile) union into ONE per-doc aggregate, whose
+    * sorted starts [[coveredFromSortedStarts]] folds. `keys` are
+    * pass-through columns of `fresh` (empty for a batch) put in front
+    * of that `groupBy` — the streaming twin
+    * ([[graft.streaming.Streaming.dupGramProbeStream]]) passes its
+    * event-time window. */
   def coverageAgainstDict(fresh: DataFrame, idCol: String, textCol: String,
-      dict: DataFrame, n: Int = DefaultN): DataFrame =
-    coverageFromStarts(fresh, idCol, textCol, n,
-      dupStarts(gramPositions(fresh, idCol, textCol, n), dict))
+      dict: DataFrame, n: Int = DefaultN, keys: Seq[String] = Nil): DataFrame = {
+    val keyCols = keys.map(col)
+    val docRows = fresh.select((col(idCol).as("id") +: keyCols) :+
+      size(tokens(lower(col(textCol)))).cast("long").as("n_tokens"): _*)
+    val starts = dupStarts(gramPositions(fresh, idCol, textCol, n, keys), dict, keys)
+    docRows.unionByName(starts, allowMissingColumns = true)
+      .groupBy(keyCols :+ col("id"): _*)
+      .agg(max(col("n_tokens")).as("n_tokens"),
+        sort_array(collect_list(col("pos"))).as("__ps"))
+      .select(keyCols ++ Seq(col("id"), col("n_tokens"),
+        size(col("__ps")).cast("long").as("dup_grams"),
+        coveredFromSortedStarts(col("__ps"), n).as("covered_tokens")): _*)
+      .withColumn("coverage_ppm",
+        when(col("n_tokens") > 0, expr("covered_tokens * 1000000L DIV n_tokens"))
+          .otherwise(lit(0L)))
+  }
 
   /** Prune covered spans: rebuild each document keeping only tokens NOT
     * covered by any duplicated n-gram — the destructive half of exact

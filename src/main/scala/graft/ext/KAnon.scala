@@ -29,8 +29,9 @@ import org.apache.spark.sql.functions._
   * bounded by attribute cardinality (langs × sources × buckets), so
   * they broadcast, and [[publish]] is three broadcast LEFT equi-joins
   * plus a row-local level decision — a corpus pass never shuffles in
-  * batch, and the same plan runs stateless stream-static in
-  * [[graft.streaming.Streaming.kAnonServeStream]] (an arrival whose
+  * batch, and the same plan runs stateless stream-static when a
+  * stream of arrivals is passed to `publish(quasi(stream), ...)` (an
+  * arrival whose
   * combination the frozen corpus never saw has anonymity set 0 at
   * that level — the left join's NULL → 0 is the correct verdict,
   * not a missing row).

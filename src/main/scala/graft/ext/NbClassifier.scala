@@ -65,24 +65,30 @@ object NbClassifier {
   }
 
   /** Score docs against a trained (weights, globals) pair:
-    * (id, n_tokens, score_bits, nb_keep). Unknown tokens contribute 0
-    * beyond the n_tokens·D term (left join + coalesce); zero-token
-    * docs score prior only (explode_outer keeps them). */
+    * (keys..., id, n_tokens, score_bits, nb_keep). Unknown tokens
+    * contribute 0 beyond the n_tokens·D term (left join + coalesce);
+    * zero-token docs score prior only (explode_outer keeps them).
+    * `keys` are pass-through columns of `docs` (empty for a batch)
+    * put in front of the per-doc `groupBy` — the streaming twin
+    * ([[graft.streaming.Streaming.nbScoreStream]]) passes its
+    * event-time window. */
   def score(docs: DataFrame, idCol: String, textCol: String,
-      weights: DataFrame, globals: DataFrame): DataFrame = {
+      weights: DataFrame, globals: DataFrame,
+      keys: Seq[String] = Nil): DataFrame = {
+    val keyCols = keys.map(col)
     val base = docs
-      .select(col(idCol).as("id"),
-        graft.functions.TextFunctions.tokens(col(textCol)).as("t"))
-      .select(col("id"), size(col("t")).cast("long").as("n_tokens"),
-        explode_outer(col("t")).as("tok"))
+      .select((col(idCol).as("id") +: keyCols) :+
+        graft.functions.TextFunctions.tokens(col(textCol)).as("t"): _*)
+      .select((col("id") +: keyCols) ++ Seq(size(col("t")).cast("long").as("n_tokens"),
+        explode_outer(col("t")).as("tok")): _*)
     base.join(weights, Seq("tok"), "left")
-      .groupBy(col("id"))
+      .groupBy(keyCols :+ col("id"): _*)
       .agg(first(col("n_tokens")).as("n_tokens"),
         sum(coalesce(col("w_bits"), lit(0L))).as("w_sum"))
       .crossJoin(broadcast(globals))
-      .select(col("id"), col("n_tokens"),
+      .select(keyCols ++ Seq(col("id"), col("n_tokens"),
         (col("prior_bits") + col("n_tokens") * col("d_bits") + col("w_sum"))
-          .as("score_bits"))
+          .as("score_bits")): _*)
       .withColumn("nb_keep", (col("score_bits") > 0).cast("int"))
   }
 }

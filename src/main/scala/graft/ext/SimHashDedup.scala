@@ -92,7 +92,10 @@ object SimHashDedup {
     * No bucket cap or guard here: the cross-split bucket cost is
     * |corpus bucket| × |fresh bucket|, and the q205 composition
     * controls both by exact-dedup upstream on each side — clone mass
-    * never reaches the band join. */
+    * never reaches the band join. Signing and banding are row-local
+    * and first-match-band is a pure predicate, so the same call over a
+    * document STREAM is a stateless stream-static probe with the
+    * batch semantics (StreamingSpec pins the parity). */
   def nearDupAgainstIndex(
       fresh: DataFrame,
       idCol: String,

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Integer surprisal scoring — a language-model quality filter (the
@@ -38,12 +38,40 @@ object SurprisalScore {
       .otherwise(transform(sequence(lit(0), size(t) - 2),
         i => concat(element_at(t, i + 1), lit(" "), element_at(t, i + 2))))
 
-  /** (id, g): every adjacent token-bigram occurrence (duplicates kept —
-    * counts, not sets, make a language model). */
-  private def bigrams(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol).as("id"),
-        graft.functions.TextFunctions.tokens(col(textCol)).as("t"))
-      .select(col("id"), explode(bigramArray(col("t"))).as("g"))
+  /** (id, keys..., g): every adjacent token-bigram occurrence
+    * (duplicates kept — counts, not sets, make a language model), with
+    * the pass-through `keys` columns of `df` carried along. */
+  private def bigrams(df: DataFrame, idCol: String, textCol: String,
+      keys: Seq[String] = Nil): DataFrame = {
+    val keyCols = keys.map(col)
+    df.select((col(idCol).as("id") +: keyCols) :+
+        graft.functions.TextFunctions.tokens(col(textCol)).as("t"): _*)
+      .select((col("id") +: keyCols) :+ explode(bigramArray(col("t"))).as("g"): _*)
+  }
+
+  /** The per-document surprisal fold over bigram occurrences already
+    * joined to their count `c` and the model total `n_total`:
+    * (by..., n_bigrams, surprisal_bits). The one copy of the bit-length
+    * sum — the self-trained [[tokenBigramSurprisal]], the loaded-model
+    * serve (q176) and [[scoreAgainst]] all fold through it. */
+  private[graft] def surprisalFold(scored: DataFrame, by: Seq[Column]): DataFrame =
+    scored.groupBy(by: _*)
+      .agg(count(lit(1)).as("n_bigrams"),
+        sum(length(bin(col("n_total"))).cast("long") - length(bin(col("c"))).cast("long"))
+          .as("surprisal_bits"))
+
+  /** Documents scored against a STATIC model ([[bigramModel]], trained
+    * offline): (keys..., id, n_bigrams, surprisal_bits). Bigrams the
+    * model never saw carry no evidence and drop from the inner join,
+    * so a document with no known bigram emits no row. `keys` are
+    * pass-through columns of `df` put in front of the per-doc fold —
+    * the streaming scorers ([[graft.streaming.Streaming.ccnetBucketStream]],
+    * `calibrationStream`, `mixMonitorStream`) pass their event-time
+    * window and the document's tag columns. */
+  private[graft] def scoreAgainst(df: DataFrame, idCol: String, textCol: String,
+      model: DataFrame, keys: Seq[String] = Nil): DataFrame =
+    surprisalFold(bigrams(df, idCol, textCol, keys).join(model, Seq("g")),
+      keys.map(col) :+ col("id"))
 
   /** The static bigram LM table a streaming scorer joins: (g, c,
     * n_total) — trained OFFLINE from a reference corpus. Vocabulary-
@@ -61,12 +89,8 @@ object SurprisalScore {
     val occ = bigrams(df, idCol, textCol)
     val counts = occ.groupBy(col("g")).agg(count(lit(1)).as("c"))
     val total = counts.agg(sum(col("c")).as("n_total"))
-    val scored = occ.join(counts, "g")
-      .crossJoin(broadcast(total))
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(length(bin(col("n_total"))).cast("long") - length(bin(col("c"))).cast("long"))
-          .as("surprisal_bits"))
+    val scored = surprisalFold(occ.join(counts, "g").crossJoin(broadcast(total)),
+      Seq(col("id")))
     df.select(col(idCol).as("id"))
       .join(scored, Seq("id"), "left")
       .select(col("id"),

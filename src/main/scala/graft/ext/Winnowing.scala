@@ -41,13 +41,33 @@ object Winnowing {
   val PosBits = 32
   val PosScale: Long = 1L << PosBits
 
-  /** Distinct selected fingerprints per document: (id, fp). Documents
-    * shorter than k + w − 1 chars have no full window and are absent. */
+  /** Distinct selected fingerprints per document: (id, keys..., fp),
+    * with the pass-through `keys` columns of `df` carried along.
+    * Documents shorter than k + w − 1 chars have no full window and
+    * are absent. */
   def fingerprints(df: DataFrame, idCol: String, textCol: String,
-      k: Int = K, w: Int = W): DataFrame = {
+      k: Int = K, w: Int = W, keys: Seq[String] = Nil): DataFrame = {
     require(k >= 1 && w >= 1, s"need k, w >= 1; got k=$k w=$w")
-    df.select(col(idCol).as("id"), explode(fingerprintSet(col(textCol), k, w)).as("fp"))
+    df.select((col(idCol).as("id") +: keys.map(col)) :+
+      explode(fingerprintSet(col(textCol), k, w)).as("fp"): _*)
   }
+
+  /** The span-level contamination report (q146) of [[fingerprints]]
+    * rows against a DISTINCT eval fingerprint set `evalFps` (fp):
+    * (doc_id, n_fp, n_shared, contam_ppm, is_contaminated), all
+    * integers. A duplicated eval row would multiply the left join and
+    * inflate both counts, so callers pass `evalFps` distinct. `keys`
+    * are pass-through columns put in front of the per-doc `groupBy` —
+    * the streaming twin ([[graft.streaming.Streaming.decontamStream]])
+    * passes its event-time window. */
+  def contamination(fps: DataFrame, evalFps: DataFrame,
+      keys: Seq[String] = Nil): DataFrame =
+    fps.join(evalFps.withColumn("hit", lit(1)), Seq("fp"), "left")
+      .groupBy(keys.map(col) :+ col("id"): _*)
+      .agg(count(lit(1)).as("n_fp"), count(col("hit")).as("n_shared"))
+      .select(col("id").as("doc_id"), col("n_fp"), col("n_shared"),
+        expr("n_shared * 1000000L DIV n_fp").as("contam_ppm"),
+        (col("n_shared") > 0).cast("int").as("is_contaminated"))
 
   /** The distinct selected fingerprints of one text, as an
     * array<long> — the row-local kernel behind [[fingerprints]]. */

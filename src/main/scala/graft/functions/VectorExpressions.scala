@@ -347,6 +347,55 @@ object VectorKernels {
   }
 }
 
+/** Value semantics for expressions that carry literal arrays (hash
+  * coefficients, trained centroids and codebooks). Case-class equality
+  * and TreeNode's hash would compare the arrays by reference, so two
+  * builds from equal arrays would never be semantically equal to
+  * Catalyst, and `explain` would print `[J@<identity hash>`, different
+  * on every run. So arrays compare and hash by content and render as a
+  * short deterministic digest, `long[<n>]#<xxhash64>` (`long[<n>][]#...`
+  * for nested arrays), not in full: the IVF-PQ books run to thousands
+  * of longs, and the rendering lands in every SQL-execution event. */
+trait ArrayArgs extends Expression {
+  override def stringArgs: Iterator[Any] = super.stringArgs.map {
+    case a: Array[_] => ArrayArgs.digest(a)
+    case other => other
+  }
+  override def equals(other: Any): Boolean = other match {
+    case that: ArrayArgs => (that eq this) || (that.getClass == getClass &&
+      productIterator.zip(that.productIterator).forall { case (a, b) =>
+        java.util.Objects.deepEquals(a, b) })
+    case _ => false
+  }
+  @transient private lazy val contentHash: Int =
+    java.util.Arrays.deepHashCode(productIterator.map(_.asInstanceOf[AnyRef]).toArray)
+  override def hashCode(): Int = contentHash
+}
+
+object ArrayArgs {
+  import org.apache.spark.sql.catalyst.expressions.XXH64
+
+  /** `long[512]#<16 hex digits>`: element type, outer length, one `[]`
+    * per nested level, and an xxhash64 over every length and element. */
+  def digest(a: Array[_]): String = {
+    var h = 42L
+    def walk(x: Any): Unit = x match {
+      case ls: Array[Long] =>
+        h = XXH64.hashLong(ls.length.toLong, h)
+        ls.foreach(v => h = XXH64.hashLong(v, h))
+      case xs: Array[_] =>
+        h = XXH64.hashLong(xs.length.toLong, h)
+        xs.foreach(walk)
+      case v => h = XXH64.hashLong(v.##.toLong, h)
+    }
+    walk(a)
+    var c = a.getClass.getComponentType
+    var dims = ""
+    while (c.isArray) { dims += "[]"; c = c.getComponentType }
+    f"${c.getSimpleName}[${a.length}]$dims#$h%016x"
+  }
+}
+
 /** dot(a, b) over array<double> — codegen'd single pass. */
 case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -374,7 +423,7 @@ case class ArrayJaccard(left: Expression, right: Expression) extends BinaryExpre
 /** Full MinHash signature from raw text — shingling + hashing + mins in
   * one pass, no intermediate arrays. */
 case class MinHashSig(child: Expression, n: Int, as: Array[Long], bs: Array[Long], p: Long)
-    extends UnaryExpression {
+    extends UnaryExpression with ArrayArgs {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   @transient private lazy val asArr = as
   @transient private lazy val bsArr = bs
@@ -454,7 +503,7 @@ case class ArrayIntersectSizeLong(left: Expression, right: Expression)
 case class IvfPqLutRows(child: Expression, coarseClusters: Array[Long],
     coarseCents: Array[Array[Long]], bookClusters: Array[Array[Long]],
     bookCents: Array[Array[Array[Long]]], nProbe: Int, subDim: Int,
-    shift: Long) extends UnaryExpression {
+    shift: Long) extends UnaryExpression with ArrayArgs {
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("pc", LongType, nullable = false),
     StructField("sub", LongType, nullable = false),
@@ -501,7 +550,7 @@ case class WinnowFps(child: Expression, k: Int, w: Int, mod: Long,
   * in the expression (constant per Lloyd round, a few KB), so the
   * reassignment map needs no join at all. */
 case class KmNearest(child: Expression, clusters: Array[Long],
-    cents: Array[Array[Long]]) extends UnaryExpression {
+    cents: Array[Array[Long]]) extends UnaryExpression with ArrayArgs {
   @transient private lazy val ccd2: Array[Array[Long]] =
     VectorKernels.pairwiseD2(cents)
   override def dataType: DataType = StructType(Seq(

@@ -568,13 +568,7 @@ object MiningQueries {
     import s.implicits._
     val fps = sharedWinnowFps(s, dir) // feeds the eval set AND the train rollup
     val evalFps = fps.filter($"id" % 10 === 0).select($"fp").distinct()
-    fps.filter($"id" % 10 =!= 0)
-      .join(evalFps.withColumn("hit", lit(1)), Seq("fp"), "left")
-      .groupBy($"id")
-      .agg(count(lit(1)).as("n_fp"), count($"hit").as("n_shared"))
-      .select($"id".as("doc_id"), $"n_fp", $"n_shared",
-        expr("n_shared * 1000000L DIV n_fp").as("contam_ppm"),
-        ($"n_shared" > 0).cast("int").as("is_contaminated"))
+    graft.ext.Winnowing.contamination(fps.filter($"id" % 10 =!= 0), evalFps)
       .orderBy($"doc_id")
   }
 
@@ -860,11 +854,7 @@ object MiningQueries {
         graft.functions.TextFunctions.tokens($"text").as("t"))
       .select($"doc_id", $"source",
         explode(SurprisalScore.bigramArray($"t")).as("g"))
-    occ.join(lm, Seq("g"))
-      .groupBy($"doc_id", $"source")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(length(bin($"n_total")).cast("long") - length(bin($"c")).cast("long"))
-          .as("surprisal_bits"))
+    SurprisalScore.surprisalFold(occ.join(lm, Seq("g")), Seq($"doc_id", $"source"))
       .withColumn("mb", expr("surprisal_bits * 1000 DIV n_bigrams"))
       .withColumn("bkt", expr(s"mb DIV ${SurprisalScore.CalibW}"))
       .join(broadcast(calib), Seq("source", "bkt"))

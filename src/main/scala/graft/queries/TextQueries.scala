@@ -659,16 +659,26 @@ object TextQueries {
     val tf = tfidfTf(s, dir)
     val scored = tf.join(tfidfRarity(s, dir), "token")
       .withColumn("score", $"tf" * $"rarity")
-    scored
-      .groupBy($"doc_id")
-      .agg(graft.functions.TopKFunctions.topK(
-        struct((-$"score").as("ns"), $"token", $"tf", $"df", $"score"), 3).as("top"))
-      .select($"doc_id", posexplode($"top").as(Seq("pos", "t")))
-      .select($"doc_id", ($"pos" + 1).cast("long").as("rank"),
-        $"t.token".as("token"), $"t.tf".as("tf"), $"t.df".as("df"),
-        $"t.score".as("score"))
-      .orderBy($"doc_id", $"rank")
+    tfidfTop3(scored).orderBy($"doc_id", $"rank")
   }
+
+  /** q163's ranking tail over scored (doc_id, token, tf, df, score)
+    * rows: each document's top-3 by score DESC, token ASC through the
+    * bounded-state [[graft.functions.TopKFunctions.topK]] aggregate,
+    * as (doc_id, rank, token, tf, df, score). `keys` are pass-through
+    * columns put in front of the per-doc `groupBy` — the streaming
+    * twin ([[graft.streaming.Streaming.tfidfKeywordStream]]) passes its
+    * event-time window. */
+  private[graft] def tfidfTop3(scored: DataFrame, keys: Seq[String] = Nil): DataFrame =
+    scored
+      .groupBy(keys.map(col) :+ col("doc_id"): _*)
+      .agg(graft.functions.TopKFunctions.topK(
+        struct((-col("score")).as("ns"), col("token"), col("tf"), col("df"),
+          col("score")), 3).as("top"))
+      .select(col("doc_id"), posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("doc_id"), (col("pos") + 1).cast("long").as("rank"),
+        col("t.token").as("token"), col("t.tf").as("tf"), col("t.df").as("df"),
+        col("t.score").as("score"))
 
   val q163Sql: String =
     """WITH toks AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS token

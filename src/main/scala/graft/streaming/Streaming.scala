@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -8,7 +8,22 @@ import graft.enrich.{Enricher, Message}
 import graft.model.AiConfig
 
 /** Structured Streaming twins of the engine's batch operators
-  * (SURVEY.md §2.8). The reference's streaming-shaped behaviors map to:
+  * (SURVEY.md §2.8).
+  *
+  * A stream differs from a batch in three ways: it carries a
+  * watermark, it carries an event-time window key, and it runs a
+  * windowed aggregate where the batch runs `distinct`. So a windowed
+  * twin is its batch operator's core applied to a [[windowed]] stream:
+  * the core takes the window as a pass-through key and puts it in
+  * front of its per-document `groupBy` (block dedup, exact-substring
+  * coverage, NB scoring, TF-IDF keywords, the surprisal scorers). A
+  * stateless stream-static probe needs no twin at all: the batch call
+  * runs on a stream as it is (`SimHashDedup.nearDupAgainstIndex`,
+  * `KAnon.publish`). What stays here is what is truly streaming: keyed
+  * state in `flatMapGroupsWithState` (as-of, CUSUM, gap-fill, anomaly,
+  * conversation) and the registry-pin rotating serves (`foreachBatch`).
+  *
+  * The reference's streaming-shaped behaviors map to:
   *   T1-T4 progress/error/completion events → StreamingQueryListener /
   *          [[graft.streaming.ProgressListener]]
   *   T5/T6 pause-resume / stop-with-partial → query.stop() + checkpoint
@@ -39,9 +54,11 @@ object Streaming {
     * file lands; once files use the micros encoding the sniff sees
     * them and the fallback never engages. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // the batch loader owns the encoding decision: its read sets the
+    // nanos-as-long conf (before the read, so the fallback path sets it
+    // too) and its epoch-micros column is the event time
     val schema =
-      try spark.read.parquet(s"$dir/events.parquet").schema
+      try graft.Tables.load(spark, dir, "events").schema
       catch {
         case _: org.apache.spark.sql.AnalysisException =>
           StructType(Seq( // legacy generator encoding: ts = long nanos
@@ -49,15 +66,28 @@ object Streaming {
             StructField("user_id", LongType), StructField("event_type", StringType),
             StructField("value", DoubleType), StructField("props", StringType)))
       }
-    val eventTime = schema("ts").dataType match {
-      case LongType => timestamp_micros(expr("CAST(ts DIV 1000 AS BIGINT)"))
-      case _ => col("ts").cast("timestamp") // NTZ wall clock == UTC instant here
-    }
     spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet") // file source needs a dir
       .parquet(dir)
-      .withColumn("event_time", eventTime)
+      .withColumn("event_time", timestamp_micros(graft.Tables.eventsUs(schema("ts").dataType)))
   }
+
+  /** The two things a stream adds to a batch core: a 10-minute
+    * watermark on `event_time`, and the event-time window it closes,
+    * pre-projected as the `window` column. A core takes the window as
+    * a pass-through key ([[WindowKey]]) and puts it in front of its
+    * per-document `groupBy`, which makes that aggregate a windowed one
+    * (the window column carries the watermark, so append mode emits
+    * each group once its window closes and drops its state).
+    * `beforeWindow` runs on the watermarked stream first: a stateful
+    * dedup there must see `event_time` as the only event-time column. */
+  private def windowed(docs: DataFrame,
+      beforeWindow: DataFrame => DataFrame = identity): DataFrame =
+    beforeWindow(docs.withWatermark("event_time", "10 minutes"))
+      .withColumn("window", window(col("event_time"), "10 minutes"))
+
+  /** The pass-through key list of a [[windowed]] stream. */
+  private val WindowKey = Seq("window")
 
   /** Tumbling-window counts with a watermark — the streaming twin of
     * q25. Late data beyond 30 minutes is dropped (watermark state GC
@@ -170,22 +200,6 @@ object Streaming {
       .dropDuplicatesWithinWatermark("__gch")
       .drop("__gch")
   }
-
-  /** Streaming SimHash near-dup probe — the streaming face of q205's
-    * probe stage: arriving docs sign and band ROW-LOCALLY
-    * ([[graft.ext.SimHashDedup.bandedIndex]] is a projection +
-    * explode, stream-safe, zero state) and join the STATIC corpus
-    * band index; first-match-band emission keeps each
-    * (corpus, fresh) pair single with no stream-side dedup state, so
-    * the pigeonhole-exact batch semantics carry over verbatim (same
-    * code path — parity by construction, spec-pinned). Redelivering
-    * sources dedupe upstream (the [[incrementalDedupStream]]
-    * discipline); at scale the index side is the persisted band
-    * snapshot, 18 bytes a row, never text. */
-  def simhashProbeStream(docs: DataFrame, idCol: String, textCol: String,
-      index: DataFrame, maxHamming: Int = 3): DataFrame =
-    graft.ext.SimHashDedup.nearDupAgainstIndex(docs, idCol, textCol,
-      index, maxHamming)
 
   final case class AsofEventT(key: Long, us: Long, isRight: Boolean,
     eventId: Long, payload: Long, eventTime: java.sql.Timestamp)
@@ -481,45 +495,35 @@ object Streaming {
 
   /** Streaming twin of q146's span-level decontamination: FRESH
     * documents stream in (the crawl-ingest shape), their winnowing
-    * fingerprints are computed ROW-locally (the native
-    * [[graft.ext.Winnowing.fingerprintSet]] kernel — no shuffle, no
-    * state for selection), probe the STATIC eval-slice fingerprint set
-    * (the q120 stream-static discipline), and each doc's contamination
-    * stats — n_fp, n_shared, integer-ppm ratio, flag — emit once its
-    * event-time window closes (bounded per-(window, doc) state,
-    * watermark-GC'd). Same numbers as the batch report on the same
-    * documents; spec-pinned. */
-  def decontamStream(docs: DataFrame, evalFps: DataFrame): DataFrame = {
-    val fps = docs
-      .withWatermark("event_time", "10 minutes")
-      .select(col("doc_id"), col("event_time"),
-        explode(graft.ext.Winnowing.fingerprintSet(col("text"))).as("fp"))
-    // distinct the static probe side: duplicate eval fp rows would
-    // multiply the left join and inflate n_fp AND n_shared, silently
-    // diverging from batch q146 (which dedups its eval set internally)
-    fps.join(evalFps.select(col("fp")).distinct().withColumn("hit", lit(1)), Seq("fp"), "left")
-      .groupBy(window(col("event_time"), "10 minutes"), col("doc_id"))
-      .agg(count(lit(1)).as("n_fp"), count(col("hit")).as("n_shared"))
-      .select(col("doc_id"), col("n_fp"), col("n_shared"),
-        expr("n_shared * 1000000L DIV n_fp").as("contam_ppm"),
-        (col("n_shared") > 0).cast("int").as("is_contaminated"))
-  }
+    * fingerprints are computed ROW-locally
+    * ([[graft.ext.Winnowing.fingerprints]] — no shuffle, no state for
+    * selection), probe the STATIC eval-slice fingerprint set (the q120
+    * stream-static discipline), and each doc's contamination stats —
+    * q146's own report, [[graft.ext.Winnowing.contamination]], with
+    * the window as its pass-through key — emit once its event-time
+    * window closes (bounded per-(window, doc) state, watermark-GC'd).
+    * Same numbers as the batch report on the same documents;
+    * spec-pinned. */
+  def decontamStream(docs: DataFrame, evalFps: DataFrame): DataFrame =
+    graft.ext.Winnowing.contamination(
+      graft.ext.Winnowing.fingerprints(windowed(docs), "doc_id", "text", keys = WindowKey),
+      // distinct the static probe side, as q146 dedups its eval set
+      evalFps.select(col("fp")).distinct(), WindowKey)
 
   /** Streaming directed-containment probe — the stream-static twin of
-    * [[graft.ext.Dedup.containmentAgainstCorpus]] (q155's batch shape),
-    * completing the dedup family's streaming coverage beside q120
-    * (near-dup) and q146 (span decontam). Fresh documents stream in;
-    * shingle sets are computed ROW-locally, explode to 8-byte hashes,
-    * equi-join the STATIC df-capped posting index (re-broadcast per
-    * micro-batch, so a corpus index refresh is picked up on the next
-    * trigger), candidates dedup per event-time window (bounded
-    * per-(window, doc, corpus-doc) state, watermark-GC'd), and the
-    * exact verification joins the static full shingle sets once per
-    * candidate with the batch operator's two-pointer intersect kernel
-    * (both sets are ascending and distinct: the stream side is
-    * `hashedShingles` output through `first`, `set_c` is
-    * [[graft.ext.Dedup.hashedShingleSets]]). Verdict arithmetic is the
-    * batch operator's all-integer test verbatim, so the emitted rows are
+    * [[graft.ext.Dedup.containmentAgainstCorpus]] (q155's batch shape).
+    * Fresh documents stream in; shingle sets are computed ROW-locally,
+    * explode to 8-byte hashes and equi-join the STATIC df-capped
+    * posting index (re-planned per micro-batch, so an index refresh is
+    * picked up on the next trigger). Candidates dedup per event-time
+    * window — the windowed aggregate standing in for the batch
+    * `distinct`, bounded per-(window, doc, corpus-doc) state — then
+    * join the static full sets and take the batch operator's own
+    * verdict, [[graft.ext.Dedup.containmentVerdict]] (two-pointer
+    * intersection, all-integer threshold, both ppm ratios). Both sets
+    * are ascending and distinct: the stream side is `hashedShingles`
+    * output through `first`, `set_c` is
+    * [[graft.ext.Dedup.hashedShingleSets]]. Emitted rows are
     * bit-identical to the batch probe over the same documents
     * (spec-pinned).
     *
@@ -528,8 +532,7 @@ object Streaming {
   def containmentProbeStream(
       docs: DataFrame, postings: DataFrame, sets: DataFrame,
       n: Int = 8, thresholdBp: Int = 9000, minShingles: Int = 20): DataFrame = {
-    val shaped = docs
-      .withWatermark("event_time", "10 minutes")
+    val shaped = windowed(docs)
       .withColumn("sh_set", graft.functions.VectorFunctions
         .hashedShingles(col("text"), n, graft.ext.Dedup.ShingleHashMod))
       .filter(size(col("sh_set")) >= minShingles)
@@ -537,64 +540,31 @@ object Streaming {
     // first(sh_set) is well-defined — every exploded row of one doc
     // carries the same set — and saves a stream-side re-join
     val cand = shaped
-      .select(col("doc_id"), col("event_time"), col("sh_set"),
+      .select(col("doc_id"), col("window"), col("sh_set"),
         explode(col("sh_set")).as("sh"))
       .join(postings, Seq("sh"))
-      .groupBy(window(col("event_time"), "10 minutes"),
-        col("doc_id"), col("corpus_id"))
+      .groupBy(col("window"), col("doc_id"), col("corpus_id"))
       .agg(first(col("sh_set")).as("sh_set"))
-    cand.join(sets, Seq("corpus_id"))
-      .select(col("doc_id"), col("corpus_id"),
-        graft.functions.VectorFunctions
-          .arrayIntersectSizeLong(col("sh_set"), col("set_c")).as("n_inter"),
-        size(col("sh_set")).cast("long").as("n_doc"),
-        size(col("set_c")).cast("long").as("n_corpus"))
-      .filter(col("n_inter") * 10000L >=
-        lit(thresholdBp.toLong) * least(col("n_doc"), col("n_corpus")))
-      .withColumn("doc_in_corpus_ppm", expr("n_inter * 1000000L DIV n_doc"))
-      .withColumn("corpus_in_doc_ppm", expr("n_inter * 1000000L DIV n_corpus"))
+    graft.ext.Dedup.containmentVerdict(cand.join(sets, Seq("corpus_id")), thresholdBp)
   }
 
-  /** Streaming incremental block dedup — the ingest twin of
-    * [[graft.ext.Dedup.blockDedupAgainstCorpus]] (q159's batch shape):
-    * fresh documents stream in, split ROW-locally into 20-word blocks
-    * with within-doc repeats marked inside the row, probe the STATIC
-    * known-block hash set (stream-static left join, re-broadcast/
-    * re-planned per micro-batch so an index refresh is picked up on
-    * the next trigger), and each doc's cleaned reassembly emits once
-    * its event-time window closes. The batch operator's verdict for a
-    * document depends only on that document and the static index —
-    * no cross-fresh-doc coupling — so the streamed rows are
-    * bit-identical to the batch probe on the same documents
-    * (spec-pinned). `docs` must carry (doc_id, text, event_time). */
+  /** Streaming incremental block dedup: q159's batch operator
+    * [[graft.ext.Dedup.blockDedupAgainstCorpus]] applied to a
+    * [[windowed]] stream, with the window as its pass-through key.
+    * Blocks split and mark within-doc repeats ROW-locally, probe the
+    * STATIC known-block hash set (stream-static left join, re-planned
+    * per micro-batch so an index refresh is picked up on the next
+    * trigger), and each doc's cleaned reassembly emits once its
+    * event-time window closes. A document's verdict depends only on
+    * that document and the static index, so the streamed rows equal
+    * the batch probe's on the same documents (spec-pinned). `docs`
+    * must carry (doc_id, text, event_time). */
   def blockDedupStream(docs: DataFrame, knownHashes: DataFrame,
-      blockWords: Int = 20): DataFrame = {
-    val blocks = docs
-      .withWatermark("event_time", "10 minutes")
-      .withColumn("t", graft.functions.TextFunctions.tokens(col("text")))
-      .filter(size(col("t")) > 0)
-      .withColumn("bs", expr(
-        s"transform(sequence(0, (size(t) - 1) DIV $blockWords), " +
-          s"i -> array_join(slice(t, i * $blockWords + 1, $blockWords), ' '))"))
-      .select(col("doc_id"), col("event_time"), col("bs"),
-        posexplode(col("bs")).as(Seq("idx", "block")))
-      .withColumn("first_in_doc", expr("array_position(bs, block) = idx + 1"))
-      .drop("bs")
-      .withColumn("h", graft.functions.GraftFunctions.polyhash(col("block")))
-    blocks
-      .join(knownHashes.select(col("h")).distinct()
-        .withColumn("known", lit(1)), Seq("h"), "left")
-      .withColumn("keep", (col("first_in_doc") && col("known").isNull).cast("int"))
-      .groupBy(window(col("event_time"), "10 minutes"), col("doc_id"))
-      .agg(count(lit(1)).as("n_blocks"),
-        sum(col("keep")).as("n_kept"),
-        count(col("known")).as("n_known"),
-        array_join(expr("transform(array_sort(collect_list(" +
-          "CASE WHEN keep = 1 THEN struct(idx, block) END)), x -> x.block)"), " ")
-          .as("clean_text"))
+      blockWords: Int = 20): DataFrame =
+    graft.ext.Dedup.blockDedupAgainstCorpus(windowed(docs), "doc_id", "text",
+        knownHashes, blockWords, WindowKey)
       .select(col("doc_id"), col("n_blocks"), col("n_kept"), col("n_known"),
-        (col("n_blocks") - col("n_kept")).as("n_removed"), col("clean_text"))
-  }
+        col("n_removed"), col("clean_text"))
 
   /** Streaming perceptual image dedup — the ingest twin of q161's
     * batch buckets (the [[blockDedupStream]] q159 form for images):
@@ -620,53 +590,27 @@ object Streaming {
       .withColumn("keep_id", coalesce(col("corpus_keep"), col("doc_id")))
       .drop("corpus_keep", "payload")
 
-  /** Streaming exact-substring probe — the ingest twin of q179: fresh
-    * documents stream in, token n-grams with positions are computed
-    * ROW-locally ([[graft.ext.DupNgrams.gramStructsExpr]] — the ONE
-    * gram recipe, shared with batch), each gram probes the STATIC
-    * duplicated-gram dictionary (stream-static left join, re-planned
-    * per micro-batch so a dictionary refresh lands on the next
-    * trigger), and the doc's coverage profile emits when its
-    * event-time window closes: the q177 columns computed from the
-    * collected sorted starts with the SAME interval-union arithmetic
-    * ([[graft.ext.DupNgrams.coveredFromSortedStarts]]). Gram-less docs
-    * (shorter than n) flow through explode_outer and emit a zero
-    * profile, so emitted rows are bit-identical to the batch
-    * [[graft.ext.DupNgrams.coverageAgainstDict]] over the same
-    * documents (spec-pinned). State is bounded: per (window, doc) one
-    * position list, watermark-GC'd. `docs` must carry (doc_id, text,
-    * event_time); `dict` is the loaded
-    * [[graft.ext.DupNgrams.dupGramDict]] artifact (unique by gram — a
-    * duplicated dictionary row would double-count a start). */
+  /** Streaming exact-substring probe: q179's batch operator
+    * [[graft.ext.DupNgrams.coverageAgainstDict]] applied to a
+    * [[windowed]] stream, with the window as its pass-through key.
+    * Token n-grams with positions are computed ROW-locally, each gram
+    * probes the STATIC duplicated-gram dictionary (stream-static semi
+    * join, re-planned per micro-batch so a dictionary refresh lands on
+    * the next trigger), and the doc's coverage profile emits when its
+    * event-time window closes. Docs without a hit, or shorter than n,
+    * emit a zero profile, as in batch (spec-pinned). State is bounded: per
+    * (window, doc) one position list, watermark-GC'd. `docs` must
+    * carry (doc_id, text, event_time); `dict` is the loaded
+    * [[graft.ext.DupNgrams.dupGramDict]] artifact. */
   def dupGramProbeStream(docs: DataFrame, dict: DataFrame,
-      n: Int = graft.ext.DupNgrams.DefaultN): DataFrame = {
-    val grams = docs
-      .withWatermark("event_time", "10 minutes")
-      .withColumn("__t", graft.functions.TextFunctions.tokens(lower(col("text"))))
-      .select(col("doc_id"), col("event_time"),
-        size(col("__t")).cast("long").as("n_tokens"),
-        explode_outer(expr(
-          s"CASE WHEN size(__t) >= $n THEN ${graft.ext.DupNgrams.gramStructsExpr("__t", n)} " +
-          "ELSE cast(array() as array<struct<pos:bigint,gram:string>>) END")).as("g"))
-      .select(col("doc_id"), col("event_time"), col("n_tokens"),
-        col("g.pos").as("pos"), col("g.gram").as("gram"))
-    grams
-      .join(dict.select(col("gram")).withColumn("__hit", lit(1)), Seq("gram"), "left")
-      .groupBy(window(col("event_time"), "10 minutes"), col("doc_id"))
-      .agg(first(col("n_tokens")).as("n_tokens"),
-        sort_array(collect_list(when(col("__hit") === 1, col("pos")))).as("__ps"))
+      n: Int = graft.ext.DupNgrams.DefaultN): DataFrame =
+    graft.ext.DupNgrams.coverageAgainstDict(windowed(docs), "doc_id", "text",
+        dict, n, WindowKey)
       // window.start stays in the output: a doc_id redelivered in a
       // later window emits a second profile, and the consumer needs
       // the window to tell the emissions apart
-      .select(col("window.start").as("window_start"),
-        col("doc_id").as("id"), col("n_tokens"),
-        size(col("__ps")).cast("long").as("dup_grams"),
-        graft.ext.DupNgrams.coveredFromSortedStarts(col("__ps"), n)
-          .as("covered_tokens"))
-      .withColumn("coverage_ppm",
-        when(col("n_tokens") > 0, expr("covered_tokens * 1000000L DIV n_tokens"))
-          .otherwise(lit(0L)))
-  }
+      .select(col("window.start").as("window_start"), col("id"), col("n_tokens"),
+        col("dup_grams"), col("covered_tokens"), col("coverage_ppm"))
 
   /** Streaming frozen-tokenizer application — the live twin of q185:
     * arriving documents tokenize against the PERSISTED BPE vocabulary
@@ -712,9 +656,9 @@ object Streaming {
     * trigger), accumulate per-(window, qid, doc) scores with the ONE
     * shared contribution formula ([[graft.ext.Bm25.contribExpr]] —
     * corpus constants ride as literals from the loaded globals), and
-    * emit each query's top-`k` (rank by score DESC, id ASC — the
-    * batch `rankTopK` tie-break, realized as a sorted-slice array
-    * reduce) when its window closes. TWO chained stateful
+    * emit each query's top-`k` through [[windowTopK]] (score DESC,
+    * id ASC — the batch `rankTopK` tie-break) when its window
+    * closes. TWO chained stateful
     * aggregations on one watermark (the [[mixMonitorStream]]
     * multi-stateful-op shape). State bound: per (window, qid) the
     * candidate docs sharing ≥1 query term — at web scale the query
@@ -724,31 +668,39 @@ object Streaming {
     * `rankTopK` over the same (qid, term) sets (spec-pinned). */
   def bm25ServeStream(queries: DataFrame, ix: graft.ext.Bm25.Index,
       k: Int = 10): DataFrame = {
-    val terms = queries
-      .withWatermark("event_time", "10 minutes")
-      .select(col("qid"), col("event_time"),
+    val terms = windowed(queries)
+      .select(col("qid"), col("window"),
         explode(array_distinct(graft.functions.TextFunctions.tokens(
           lower(col("qtext"))))).as("term"))
       .filter(col("term") =!= "")
-    val contrib = terms
+    val perDoc = terms
       .join(ix.dfreq.select(col("term"), col("idf_bits")), Seq("term"))
       .join(ix.tf, Seq("term"))
       .join(ix.dl, Seq("id"))
       .withColumn("c", graft.ext.Bm25.contribExpr(ix.n, ix.t))
-    contrib
-      .groupBy(window(col("event_time"), "10 minutes"), col("qid"), col("id"))
+      .groupBy(col("window"), col("qid"), col("id"))
       .agg(sum(col("c")).as("score_fp"))
-      .groupBy(col("window"), col("qid"))
-      .agg(expr(s"slice(array_sort(collect_list(struct(-score_fp AS ns, id))), 1, $k)")
-        .as("top"))
-      .select(col("window"), col("qid"), posexplode(col("top")))
-      // window.start stays in the output: the same qid re-queried in a
-      // later window emits a SECOND ranking, and without the window
-      // column the consumer cannot tell which one is current
-      .select(col("window.start").as("window_start"), col("qid"),
-        (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("id"), (-col("col.ns")).as("score_fp"))
+    windowTopK(perDoc, -col("score_fp"), k)
+      .select(col("window_start"), col("qid"), col("rank"),
+        col("top.id").as("id"), (-col("top.key")).as("score_fp"))
   }
+
+  /** Each query's top-`k` candidates, emitted when its window closes:
+    * `perDoc` rows (window, qid, id) ranked by `key` ASC, then id ASC
+    * (the batch `rankTopK` tie-break), as a sorted-slice array reduce —
+    * the second of the two chained stateful aggregations a serving
+    * twin runs on one watermark. Emits (window_start, qid, rank,
+    * top: struct(key, id)); window.start stays in the output because
+    * the same qid re-queried in a later window emits a SECOND ranking,
+    * and without it the consumer cannot tell which one is current. */
+  private def windowTopK(perDoc: DataFrame, key: Column, k: Int): DataFrame =
+    perDoc
+      .groupBy(col("window"), col("qid"))
+      .agg(slice(array_sort(collect_list(struct(key.as("key"), col("id")))), 1, k)
+        .as("tops"))
+      .select(col("window"), col("qid"), posexplode(col("tops")).as(Seq("pos", "top")))
+      .select(col("window.start").as("window_start"), col("qid"),
+        (col("pos") + 1).cast("long").as("rank"), col("top"))
 
   /** Streaming frozen-codebook PQ encode — the ingest twin of q166:
     * arriving vectors are PQ-encoded ROW-locally against LITERAL
@@ -779,9 +731,9 @@ object Streaming {
     * trained artifacts are a few KB and ride the plan), then the flat
     * LUT rows equi-join the STATIC compressed corpus — the loaded
     * `asg`/`enc` parts, pre-joined to (id, coarse, sub, cluster) — on
-    * (coarse, sub, cluster), and each query's candidates fold through
-    * the [[bm25ServeStream]] shape: per-(window, qid, id) ADC sums,
-    * then the per-query top-k emitted on window close. Two chained
+    * (coarse, sub, cluster), and each query's candidates fold like
+    * [[bm25ServeStream]]'s: per-(window, qid, id) ADC sums, then the
+    * per-query top-k of [[windowTopK]] emitted on window close. Two chained
     * stateful aggregations; self-matches excluded and ties broken by
     * id exactly as the batch search. At 100 TB the stream-static join
     * is the ADC scan itself — candidates shrink by nProbe/K before
@@ -796,45 +748,21 @@ object Streaming {
     val (coarse, asg, booksR, encR) = index
     val coarseLit = pq.collectCoarse(coarse)
     val booksLit = pq.collectBookArrays(booksR)
-    val lutRows = queries
-      .withWatermark("event_time", "10 minutes")
-      .select(col("qid"), col("event_time"),
+    val lutRows = windowed(queries)
+      .select(col("qid"), col("window"),
         explode(pq.ivfPqLutExpr(coarseLit, booksLit, nProbe, col("codes"))).as("l"))
-      .select(col("qid"), col("event_time"), col("l.pc").as("coarse"),
+      .select(col("qid"), col("window"), col("l.pc").as("coarse"),
         col("l.sub").cast("int").as("sub"), col("l.cluster").as("cluster"),
         col("l.lutd2").as("lutd2"))
     val candidates = encR.join(asg, "id") // static: (id, sub, cluster, coarse)
-    lutRows.join(candidates, Seq("coarse", "sub", "cluster"))
+    val perDoc = lutRows.join(candidates, Seq("coarse", "sub", "cluster"))
       .filter(col("id") =!= col("qid"))
-      .groupBy(window(col("event_time"), "10 minutes"), col("qid"), col("id"))
+      .groupBy(col("window"), col("qid"), col("id"))
       .agg(sum(col("lutd2")).as("adc_dist2"))
-      .groupBy(col("window"), col("qid"))
-      .agg(expr(s"slice(array_sort(collect_list(struct(adc_dist2, id))), 1, $topK)")
-        .as("top"))
-      .select(col("window"), col("qid"), posexplode(col("top")))
-      .select(col("window.start").as("window_start"), col("qid"),
-        (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("vec_id"), col("col.adc_dist2").as("adc_dist2"))
+    windowTopK(perDoc, col("adc_dist2"), topK)
+      .select(col("window_start"), col("qid"), col("rank"),
+        col("top.id").as("vec_id"), col("top.key").as("adc_dist2"))
   }
-
-  /** Streaming k-anonymity serve — the live twin of q187
-    * ([[graft.ext.KAnon]]): arriving documents' quasi-identifier
-    * tuples project row-locally, then take the SAME three broadcast
-    * left joins against the FROZEN marginal tables (the release
-    * policy, trained offline on the reference corpus) and the same
-    * row-local ladder decision — the one shared [[KAnon.publish]]
-    * recipe, so batch and stream cannot fork. Stateless, no
-    * watermark: each arrival's published pattern emits immediately.
-    * An arrival whose (lang, source, len_bucket) combination the
-    * frozen corpus never saw counts 0 at that level and falls
-    * through the ladder — the left join's NULL → 0 IS the verdict
-    * (its anonymity set in the reference release is empty), which is
-    * exactly why serving joins must be left, not inner. `docs` must
-    * carry (doc_id, lang, source, n_chars); marginals are
-    * [[KAnon.marginals]] output, bounded by attribute cardinality. */
-  def kAnonServeStream(docs: DataFrame, c0: DataFrame, c1: DataFrame,
-      c2: DataFrame): DataFrame =
-    graft.ext.KAnon.publish(graft.ext.KAnon.quasi(docs), c0, c1, c2)
 
   final case class CusumEventT(userId: Long, us: Long, eventId: Long,
     cents: Long, target: Long)
@@ -913,36 +841,34 @@ object Streaming {
     * ([[graft.ext.SurprisalScore.bigramModel]]) and per-language
     * tercile thresholds ([[graft.ext.SurprisalScore.ccnetThresholds]])
     * are trained OFFLINE and arrive as STATIC tables; each streaming
-    * document is scored by the same integer bit-length arithmetic —
-    * bigrams explode row-locally (the shared `bigramArray`, so batch
-    * and stream can never fork), stream-static join against the model
-    * (a vocabulary-sized table rides a join, never a closure), one
-    * windowed per-doc fold — and bucketed ROW-locally against the
-    * broadcast thresholds via the shared verdict expression. Bigrams
+    * document is scored by the batch scorer's own fold
+    * ([[scoreStream]] over [[graft.ext.SurprisalScore.scoreAgainst]]:
+    * bigrams explode row-locally, join the model — a vocabulary-sized
+    * table rides a join, never a closure — and fold per doc and
+    * window) and bucketed ROW-locally against the broadcast
+    * thresholds via the batch verdict expression. Bigrams
     * the model never saw carry no evidence (they drop from the inner
     * join — a case the self-trained batch query cannot produce, so
     * parity over training-corpus docs is exact, spec-pinned).
     * `docs` must carry (doc_id, text, lang, event_time). */
   def ccnetBucketStream(docs: DataFrame, model: DataFrame,
-      thresholds: DataFrame): DataFrame = {
-    import graft.ext.SurprisalScore
-    val occ = docs
-      .withWatermark("event_time", "10 minutes")
-      .select(col("doc_id"), col("lang"), col("event_time"),
-        graft.functions.TextFunctions.tokens(col("text")).as("t"))
-      .select(col("doc_id"), col("lang"), col("event_time"),
-        explode(SurprisalScore.bigramArray(col("t"))).as("g"))
-    occ.join(model, Seq("g"))
-      .groupBy(window(col("event_time"), "10 minutes"),
-        col("doc_id"), col("lang"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(length(bin(col("n_total"))).cast("long") - length(bin(col("c"))).cast("long"))
-          .as("surprisal_bits"))
-      .withColumn("mb", expr("surprisal_bits * 1000 DIV n_bigrams"))
+      thresholds: DataFrame): DataFrame =
+    scoreStream(windowed(docs), model, "lang")
       .join(broadcast(thresholds), Seq("lang"))
-      .select(col("doc_id"), col("lang"), col("mb"),
-        SurprisalScore.bucketExpr.as("bucket"))
-  }
+      .select(col("id").as("doc_id"), col("lang"), col("mb"),
+        graft.ext.SurprisalScore.bucketExpr.as("bucket"))
+
+  /** The windowed per-doc surprisal score every LM-scoring twin shares:
+    * [[graft.ext.SurprisalScore.scoreAgainst]] over a [[windowed]]
+    * stream, with the event-time window and the `tags` columns as its
+    * pass-through keys, plus the millibit rate `mb`. Emits (window,
+    * tags..., id, n_bigrams, surprisal_bits, mb) when the window
+    * closes. */
+  private def scoreStream(windowedDocs: DataFrame, model: DataFrame,
+      tags: String*): DataFrame =
+    graft.ext.SurprisalScore.scoreAgainst(windowedDocs, "doc_id", "text",
+        model, WindowKey ++ tags)
+      .withColumn("mb", expr("surprisal_bits * 1000 DIV n_bigrams"))
 
   /** Streaming curriculum routing — the ingest twin of q192: an
     * arriving document is scored against the STATIC bigram LM, takes
@@ -1023,19 +949,17 @@ object Streaming {
     * [[graft.ext.MinHashLsh.nearDupAgainstIndex]] does. */
   def sourceOverlapStream(docs: DataFrame, index: DataFrame): DataFrame = {
     import graft.ext.MinHashLsh
-    val fb = MinHashLsh.bandedIndexWith(
-      docs.withWatermark("event_time", "10 minutes"),
-      "doc_id", "text", Seq("source", "event_time"))
+    val fb = MinHashLsh.bandedIndexWith(windowed(docs), "doc_id", "text",
+      Seq("source", "window"))
     index.as("a").join(fb.as("b"),
         col("a.band") === col("b.band") && col("a.bslice") === col("b.bslice") &&
           col("a.id") =!= col("b.id") && MinHashLsh.firstMatchBandPred)
-      .select(col("b.event_time").as("event_time"),
+      .select(col("b.window").as("window"),
         least(col("a.source"), col("b.source")).as("source_a"),
         greatest(col("a.source"), col("b.source")).as("source_b"),
         MinHashLsh.sigMatches(col("a.sig"), col("b.sig")).as("m16"))
       .filter(col("m16") * 2 >= MinHashLsh.K)
-      .groupBy(window(col("event_time"), "10 minutes"),
-        col("source_a"), col("source_b"))
+      .groupBy(col("window"), col("source_a"), col("source_b"))
       .agg(count(lit(1)).as("n_pairs"), sum(col("m16")).cast("long").as("sum_match16"))
       .select(col("window.start").as("window_start"),
         col("source_a"), col("source_b"), col("n_pairs"), col("sum_match16"))
@@ -1043,11 +967,12 @@ object Streaming {
 
   /** Streaming mix-drift monitor — q175's live twin: the per-source
     * contribution dashboard of an ingest pipeline, maintained per
-    * watermark window. Arrivals pass the exact-dedup gate (content
-    * digest anti-joined against the STATIC corpus digest set, then
-    * deduplicated within the watermark for at-least-once redelivery),
-    * score themselves against the STATIC bigram LM (one windowed
-    * per-doc fold — the [[calibrationStream]] shape), take the
+    * watermark window. Arrivals pass the exact-dedup gate
+    * ([[incrementalDedupStream]]: content digest anti-joined against
+    * the STATIC corpus digest set, then deduplicated within the
+    * watermark for at-least-once redelivery),
+    * score themselves against the STATIC bigram LM ([[scoreStream]],
+    * the document's token count riding as a key), take the
     * calibrated-gate verdict from the STATIC calibration table, and
     * roll up per (window, source): unique scored arrivals, calibrated
     * keeps, and kept token mass — exactly the quantities q175
@@ -1063,28 +988,11 @@ object Streaming {
     * event_time). */
   def mixMonitorStream(docs: DataFrame, knownHashes: DataFrame,
       model: DataFrame, calib: DataFrame): DataFrame = {
-    import graft.ext.SurprisalScore
-    import graft.functions.TextFunctions
-    val fresh = docs
-      .withWatermark("event_time", "10 minutes")
-      .withColumn("__gch", TextFunctions.contentHash(col("text")))
-      .join(knownHashes.select(col("content_hash").as("__gch")), Seq("__gch"), "left_anti")
-      .dropDuplicatesWithinWatermark("__gch")
-    val occ = fresh
-      .select(col("doc_id"), col("source"), col("event_time"),
-        TextFunctions.tokens(col("text")).as("t"))
-      .select(col("doc_id"), col("source"), col("event_time"),
-        size(col("t")).cast("long").as("n_tokens"),
-        explode(SurprisalScore.bigramArray(col("t"))).as("g"))
-    val perDoc = occ.join(model, Seq("g"))
-      .groupBy(window(col("event_time"), "10 minutes"),
-        col("doc_id"), col("source"))
-      .agg(first(col("n_tokens")).as("n_tokens"),
-        count(lit(1)).as("n_bigrams"),
-        sum(length(bin(col("n_total"))).cast("long") - length(bin(col("c"))).cast("long"))
-          .as("surprisal_bits"))
-      .withColumn("mb", expr("surprisal_bits * 1000 DIV n_bigrams"))
-      .withColumn("bkt", expr(s"mb DIV ${SurprisalScore.CalibW}"))
+    val fresh = windowed(docs, incrementalDedupStream(_, "text", "event_time", knownHashes))
+      .withColumn("n_tokens",
+        size(graft.functions.TextFunctions.tokens(col("text"))).cast("long"))
+    val perDoc = scoreStream(fresh, model, "source", "n_tokens")
+      .withColumn("bkt", expr(s"mb DIV ${graft.ext.SurprisalScore.CalibW}"))
     perDoc.join(broadcast(calib), Seq("source", "bkt"))
       .withColumn("cal_keep", (col("src_pct_ppm") < 500000).cast("long"))
       .groupBy(col("window"), col("source"))
@@ -1101,8 +1009,9 @@ object Streaming {
     * vocabulary-sized) and the calibration table `calib`
     * ([[graft.ext.SurprisalScore.calibrationTable]], (sources ×
     * buckets)-bounded) — and each arriving document needs one windowed
-    * per-doc aggregation (its surprisal fold) followed by two static
-    * joins and row-local integer arithmetic. The score is quantized to
+    * per-doc aggregation (its surprisal fold, [[scoreStream]])
+    * followed by a static join and row-local integer arithmetic. The
+    * score is quantized to
     * [[graft.ext.SurprisalScore.CalibW]]-wide buckets precisely so the
     * serve-time lookup is an EXACT equi-join: a fresh document's raw mb
     * value need not have occurred offline, but its bucket key has.
@@ -1112,26 +1021,12 @@ object Streaming {
     * exact (spec-pinned). `docs` must carry (doc_id, source, text,
     * event_time). */
   def calibrationStream(docs: DataFrame, model: DataFrame,
-      calib: DataFrame): DataFrame = {
-    import graft.ext.SurprisalScore
-    val occ = docs
-      .withWatermark("event_time", "10 minutes")
-      .select(col("doc_id"), col("source"), col("event_time"),
-        graft.functions.TextFunctions.tokens(col("text")).as("t"))
-      .select(col("doc_id"), col("source"), col("event_time"),
-        explode(SurprisalScore.bigramArray(col("t"))).as("g"))
-    occ.join(model, Seq("g"))
-      .groupBy(window(col("event_time"), "10 minutes"),
-        col("doc_id"), col("source"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(length(bin(col("n_total"))).cast("long") - length(bin(col("c"))).cast("long"))
-          .as("surprisal_bits"))
-      .withColumn("mb", expr("surprisal_bits * 1000 DIV n_bigrams"))
-      .withColumn("bkt", expr(s"mb DIV ${SurprisalScore.CalibW}"))
+      calib: DataFrame): DataFrame =
+    scoreStream(windowed(docs), model, "source")
+      .withColumn("bkt", expr(s"mb DIV ${graft.ext.SurprisalScore.CalibW}"))
       .join(broadcast(calib), Seq("source", "bkt"))
-      .select(col("doc_id"), col("source"), col("mb"), col("bkt"),
+      .select(col("id").as("doc_id"), col("source"), col("mb"), col("bkt"),
         col("src_pct_ppm"), col("glob_pct_ppm"), col("gap_ppm"))
-  }
 
   /** Streaming TF-IDF keyword extraction — q163's deployment split
     * (the q158/q144 discipline): the rarity table
@@ -1145,8 +1040,9 @@ object Streaming {
     * reference corpus never saw carry no evidence (inner join — a case
     * the self-trained batch query cannot produce, so parity over
     * training-corpus docs is exact, spec-pinned). The per-doc top-k is
-    * the same bounded-state [[graft.functions.TopKFunctions.topK]]
-    * aggregate as batch — never a rank window.
+    * q163's own ranking tail ([[graft.queries.TextQueries.tfidfTop3]],
+    * the bounded-state [[graft.functions.TopKFunctions.topK]]
+    * aggregate) with the window as its pass-through key.
     * `docs` must carry (doc_id, text, event_time).
     *
     * ASSUMES each doc_id arrives at most once per watermark window:
@@ -1159,40 +1055,17 @@ object Streaming {
   def tfidfKeywordStream(docs: DataFrame, rarity: DataFrame): DataFrame = {
     // per-row tf in ONE hashed pass (native token_counts — the
     // HOF alternative re-scans the token array per distinct token)
-    val tf = docs
-      .withWatermark("event_time", "10 minutes")
-      .select(col("doc_id"), col("event_time"),
+    val tf = windowed(docs)
+      .select(col("doc_id"), col("window"),
         explode(graft.functions.GraftFunctions.tokenCounts(
           graft.functions.TextFunctions.tokens(col("text")))).as("p"))
-      .select(col("doc_id"), col("event_time"),
+      .select(col("doc_id"), col("window"),
         col("p.token").as("token"), col("p.tf").as("tf"))
-    tf.join(rarity, Seq("token"))
-      .withColumn("score", col("tf") * col("rarity"))
-      .groupBy(window(col("event_time"), "10 minutes"), col("doc_id"))
-      .agg(graft.functions.TopKFunctions.topK(
-        struct((-col("score")).as("ns"), col("token"), col("tf"), col("df"),
-          col("score")), 3).as("top"))
-      .select(col("doc_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("t.token").as("token"), col("t.tf").as("tf"), col("t.df").as("df"),
-        col("t.score").as("score"))
+    graft.queries.TextQueries.tfidfTop3(
+      tf.join(rarity, Seq("token")).withColumn("score", col("tf") * col("rarity")),
+      WindowKey)
   }
 
-  /** Streaming NB quality scoring — q169's deployment split (the
-    * [[tfidfKeywordStream]] discipline): the vocab-sized weight table
-    * ([[graft.ext.NbClassifier.trainWeights]]) arrives static, the two
-    * global integers (per-occurrence constant D and the class prior)
-    * ride as literals — they are the ENTIRE non-vocabulary training
-    * artifact, so serving state is one static table and two numbers.
-    * Each arrival folds its term frequencies row-locally (one hashed
-    * `token_counts` pass), left-joins the static weights (a token the
-    * training corpus never saw carries weight 0 — exactly the batch
-    * scorer's smoothing-constant algebra), and ONE windowed per-doc
-    * aggregation emits (doc_id, n_tokens, score_bits, nb_keep)
-    * bit-identical to [[graft.ext.NbClassifier.score]] (spec-pinned).
-    * Zero-token docs survive via explode_outer and score prior-only.
-    * Same unique-doc-per-window assumption as [[tfidfKeywordStream]]:
-    * redelivering sources must dedupe upstream. */
   /** Registry-pin ROTATION for a live serve — the deployment reason
     * the versioned registry exists, demonstrated on the NB classifier:
     * upgrade a serving stream from generation v1 to v2 (or roll back)
@@ -1232,7 +1105,7 @@ object Streaming {
     * `served_version`, hand to `sink`. One pin-log read + lazy part
     * opens per batch; the generation's data is only scanned by the
     * serve plan itself. */
-  def rotatingServe(stream: DataFrame, root: String, kind: String)(
+  private def rotatingServe(stream: DataFrame, root: String, kind: String)(
       serve: (DataFrame, Long) => DataFrame)(sink: (Long, DataFrame) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
@@ -1620,25 +1493,28 @@ object Streaming {
         batch, nProbe, topK)
     }(sink)
 
+  /** Streaming NB quality scoring — q169's deployment split (the
+    * [[tfidfKeywordStream]] discipline): q169's batch scorer
+    * [[graft.ext.NbClassifier.score]] applied to a [[windowed]] stream,
+    * with the window as its pass-through key. The vocab-sized weight
+    * table ([[graft.ext.NbClassifier.trainWeights]]) arrives static;
+    * the two global integers (per-occurrence constant D and the class
+    * prior) ride as a one-row literal frame — they are the ENTIRE
+    * non-vocabulary training artifact, so serving state is one static
+    * table and two numbers. Each arrival's tokens left-join the static
+    * weights (a token the training corpus never saw carries weight 0)
+    * and ONE windowed per-doc aggregation emits (doc_id, n_tokens,
+    * score_bits, nb_keep), equal to the batch score (spec-pinned).
+    * Zero-token docs survive via explode_outer and score prior-only.
+    * Same unique-doc-per-window assumption as [[tfidfKeywordStream]]:
+    * redelivering sources must dedupe upstream. */
   def nbScoreStream(docs: DataFrame, weights: DataFrame,
-      dBits: Long, priorBits: Long): DataFrame = {
-    val tf = docs
-      .withWatermark("event_time", "10 minutes")
-      .select(col("doc_id"), col("event_time"),
-        explode_outer(graft.functions.GraftFunctions.tokenCounts(
-          graft.functions.TextFunctions.tokens(col("text")))).as("p"))
-      .select(col("doc_id"), col("event_time"),
-        col("p.token").as("token"), col("p.tf").as("tf"))
-    tf.join(weights.withColumnRenamed("tok", "token"), Seq("token"), "left_outer")
-      .groupBy(window(col("event_time"), "10 minutes"), col("doc_id"))
-      .agg(sum(coalesce(col("tf"), lit(0L))).as("n_tokens"),
-        sum(coalesce(col("tf"), lit(0L)) * coalesce(col("w_bits"), lit(0L)))
-          .as("w_sum"))
-      .select(col("doc_id"), col("n_tokens"),
-        (lit(priorBits) + col("n_tokens") * lit(dBits) + col("w_sum"))
-          .as("score_bits"))
-      .withColumn("nb_keep", (col("score_bits") > 0).cast("int"))
-  }
+      dBits: Long, priorBits: Long): DataFrame =
+    graft.ext.NbClassifier.score(windowed(docs), "doc_id", "text", weights,
+        docs.sparkSession.range(1)
+          .select(lit(dBits).as("d_bits"), lit(priorBits).as("prior_bits")),
+        WindowKey)
+      .select(col("id").as("doc_id"), col("n_tokens"), col("score_bits"), col("nb_keep"))
 
   final case class GapEvent(userId: Long, day: Long, cents: Long,
     eventTime: java.sql.Timestamp)

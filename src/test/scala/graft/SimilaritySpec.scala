@@ -85,4 +85,30 @@ class SimilaritySpec extends SparkSpec {
     assert(clusters.subsetOf((0L until 8L).toSet))
     assert(assigned.groupBy("id").count().filter($"count" > 1).count() == 0)
   }
+
+  test("array-argument expressions compare by content and explain as a stable digest") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+    import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
+    import graft.functions.{IvfPqLutRows, KmNearest, MinHashSig}
+    val text = AttributeReference("text", StringType)()
+    val codes = AttributeReference("codes", ArrayType(LongType))()
+    def minhash(shift: Long) = MinHashSig(text, 5,
+      Array.tabulate(512)(i => i * 7L + shift), Array.tabulate(512)(i => i * 3L), 1000003L)
+    // every call allocates fresh arrays: equal contents, distinct objects
+    def builds(): Seq[Expression] = Seq(minhash(1L),
+      KmNearest(codes, Array(0L, 1L), Array(Array(1L, 2L), Array(3L, 4L))),
+      IvfPqLutRows(codes, Array(0L, 1L), Array(Array(1L, 2L), Array(3L, 4L)),
+        Array(Array(0L), Array(0L)), Array(Array(Array(1L)), Array(Array(2L))), 1, 1, 0L))
+    builds().zip(builds()).foreach { case (a, b) =>
+      assert(a.semanticEquals(b), s"$a vs $b")
+      assert(a.hashCode == b.hashCode, a.toString)
+      assert(a.toString == b.toString)
+      assert(!a.toString.contains("@"), s"identity hash rendered: $a")
+    }
+    assert(minhash(1L).toString.contains("long[512]#"), minhash(1L).toString)
+    assert(builds()(1).toString.contains("long[2][]#"), builds()(1).toString)
+    // one changed coefficient is another expression with another digest
+    assert(!minhash(2L).semanticEquals(minhash(1L)))
+    assert(minhash(2L).toString != minhash(1L).toString)
+  }
 }

@@ -398,7 +398,7 @@ class StreamingSpec extends SparkSpec {
     val stream = spark.readStream.schema(docs.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(sf)
       .filter($"doc_id" >= 250)
-    val q = Streaming.simhashProbeStream(stream, "doc_id", "text", index)
+    val q = SimHashDedup.nearDupAgainstIndex(stream, "doc_id", "text", index)
       .writeStream.format("memory").queryName("shprobe").outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
     val streamed = spark.table("shprobe")
@@ -1815,7 +1815,7 @@ class StreamingSpec extends SparkSpec {
       ((999999L, "zz", "web", 100L)) // a combo the corpus never saw
     val input = MemoryStream[(Long, String, String, Long)]
     val stream = input.toDF().toDF("doc_id", "lang", "source", "n_chars")
-    val q = Streaming.kAnonServeStream(stream, f0, f1, f2)
+    val q = KAnon.publish(KAnon.quasi(stream), f0, f1, f2)
       .writeStream.format("memory").queryName("kanon_serve")
       .outputMode("append").start()
     try {
