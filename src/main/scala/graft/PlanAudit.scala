@@ -60,10 +60,10 @@ object PlanAudit {
     // training — the training-side SinglePartition is gone)
     "q174_persisted_nb_score" -> Set(Bnlj),
     // ensemble's NB member is the q174 serve path (loaded one-row
-    // globals broadcast); the three rank windows each run over a
-    // ≤100-row TakeOrdered top-n (the q150/q128 class) and the fused
-    // re-rank over ≤300 rows — none reach SinglePartition because the
-    // limit collapses them first
+    // globals broadcast); each of the three global top-100s is a
+    // bounded top-k aggregate over a TakeOrdered cut that already sits
+    // in one partition, and the fused re-rank groups ≤300 rows by qid
+    // — none reaches SinglePartition
     "q188_quality_ensemble" -> Set(Bnlj),
     // t-closeness global tercile distribution: a one-row rollup OF THE
     // attribute-bounded class table, broadcast back onto it (the
@@ -83,13 +83,6 @@ object PlanAudit {
     // rate table — all constant-size sides; the per-doc keep decision
     // itself is a broadcast-equi-join + row-local filter
     "q181_mix_materialize" -> Set(SinglePartition, Bnlj),
-    // final rank window over the checkpointed 100-row TakeOrdered
-    // top-k (the q128 class); the top-k itself is map-side partial
-    "q150_dsir_topk" -> Set(SinglePartition),
-    // same 100-row rank window as q150 (perturbed-key top-k); the
-    // upstream DSIR lift BNLJ sits behind the checkpointed top-k, so
-    // only the window reaches the audited plan
-    "q154_dsir_gumbel_topk" -> Set(SinglePartition),
     // 1-row domain-stats broadcast onto the scan (q64 class) + the
     // rank-locating non-equi joins against the ≤1024-row cumulative
     // histogram (q83/q82 class) — all constant-size sides
@@ -101,9 +94,6 @@ object PlanAudit {
     // KMV assembly: every frame past the TakeOrdered sketches is ≤ 64
     // rows — the scalar aggs and 1-row crossJoins are the q82 class
     "q125_kmv_overlap" -> Set(SinglePartition, Bnlj),
-    // final ranking window over the checkpointed 33-row top-(k+1)
-    // sample (the top-k itself is TakeOrdered, map-side partial)
-    "q128_priority_sample" -> Set(SinglePartition),
     // 12 per-pair scalar violation rollups (partials map-side over the
     // det-keyed aggregates) — the q02/q51 scalar-final-agg class
     "q134_fd_discovery" -> Set(SinglePartition),
@@ -128,7 +118,7 @@ object PlanAudit {
     // the lazily-checkpointed query workload (RecallQueryCount·64 =
     // 2048 exploded rows from the TakeOrdered sample) scans as a
     // 1-partition ExistingRDD — constant-size per the sample bound,
-    // never data-sized (the q128 checkpointed-sample class); the
+    // never data-sized (a checkpointed constant-size sample); the
     // corpus-side search plan itself is q110's, exchange-free on the
     // candidate path
     "q165_persisted_probe" -> Set(SinglePartition),

@@ -2,13 +2,18 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * `runMain graft.Verify <sfDir> <outDir> [q...]`: named queries
+  * restrict the run and oracle_sql.json to those queries. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [q...]")
+    val sfDir = args(0); val outDir = args(1)
+    val only = if (args.length > 2) Some(args.drop(2).toSet) else None
+    val queries = only.fold(SparkEntry.queries)(_.map(q => q -> SparkEntry.queries(q)).toMap)
     val spark = LocalSessions.create()
-    run(spark, sfDir, outDir, SparkEntry.queries)
-    writeOracleJson(outDir)
+    run(spark, sfDir, outDir, queries)
+    writeOracleJson(outDir, only)
     spark.stop()
   }
 
@@ -91,9 +96,8 @@ object Verify {
     case c => c.toString
   } + "\""
 
-  /** Dump SparkEntry.oracleSql as JSON (shared with [[VerifySome]],
-    * which restricts to the queries it ran so check_oracle's exit code
-    * stays meaningful on subset runs). */
+  /** Dump SparkEntry.oracleSql as JSON, restricted on subset runs to
+    * the queries that ran so check_oracle's exit code stays meaningful. */
   def writeOracleJson(outDir: String, only: Option[Set[String]] = None): Unit = {
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }

@@ -322,16 +322,6 @@ object ArtifactRegistry {
     total
   }
 
-  /** Whether `version` published a part named `part` — resolved from
-    * the manifest (the reader authority), one KB-sized scan. Lets a
-    * reader branch on optional parts (e.g. a generation published
-    * before a derived part existed) without try/catch on [[read]]. */
-  def hasPart(s: SparkSession, root: String, kind: String,
-      version: Long, part: String): Boolean =
-    retryFnf(manifest(s, root, kind)
-      .filter(col("version") === version && col("part") === part)
-      .limit(1).count()) > 0
-
   /** Read one part of a PINNED version as a lazy parquet scan — the
     * serving entry point: execution against the result reads only that
     * generation's immutable files, so a concurrent newer publish

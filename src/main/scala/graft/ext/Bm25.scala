@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.TopKFunctions
+
 /** BM25 ranked retrieval (Robertson-Spärck Jones) on exact integer
   * arithmetic — the ranking function the retrieval-prep chain (q48
   * TF-IDF, q100 chunk corpus) feeds, completing the RAG indexing path:
@@ -55,18 +57,14 @@ object Bm25 {
 
     /** The derived query workload: top nQueries·termsPerQuery terms by
       * (df DESC, term), chopped into consecutive groups — (qid, term,
-      * df, idf_bits). `orderBy.limit` plans TakeOrderedAndProject
-      * (map-side partial top-k, no sort exchange), so the ranking
-      * window only ever sees the ≤ nQueries·termsPerQuery surviving
-      * rows — the vocabulary is never collected to one partition. */
-    def queryTerms(nQueries: Int, termsPerQuery: Int): DataFrame = {
-      val top = dfreq.orderBy(col("df").desc, col("term"))
-        .limit(nQueries * termsPerQuery)
-      val rw = Window.orderBy(col("df").desc, col("term"))
-      top.withColumn("r", row_number().over(rw))
-        .select((((col("r") - 1) / termsPerQuery).cast("long")).as("qid"),
+      * df, idf_bits). A global [[TopKFunctions.ranked]]: map-side
+      * partial top-k, so the vocabulary is never collected to one
+      * partition. */
+    def queryTerms(nQueries: Int, termsPerQuery: Int): DataFrame =
+      TopKFunctions.ranked(dfreq, Nil, Seq(col("df").desc, col("term")),
+          nQueries * termsPerQuery)
+        .select((((col("rank") - 1) / termsPerQuery).cast("long")).as("qid"),
           col("term"), col("df"), col("idf_bits"))
-    }
 
     /** Summed fixed-point BM25 contributions per (qid, id) for docs
       * sharing ≥ 1 query term (inner-join semantics — standard BM25
@@ -153,14 +151,12 @@ object Bm25 {
   }
 
   /** Rank a (qid, id, score_fp) score table to its per-query top `k`:
-    * (qid, rank, id, score_fp), rank 1..k by (score_fp DESC, id). */
-  def rankTopK(score: DataFrame, k: Int): DataFrame = {
-    val kw = Window.partitionBy(col("qid"))
-      .orderBy(col("score_fp").desc, col("id"))
-    score.withColumn("rank", row_number().over(kw).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("id"), col("score_fp"))
-  }
+    * (qid, rank, id, score_fp), rank 1..k by (score_fp DESC, id).
+    * `keys` are pass-through columns ranked apart, in front of qid —
+    * the streaming serve twin passes its event-time window. */
+  def rankTopK(score: DataFrame, k: Int, keys: Seq[String] = Nil): DataFrame =
+    TopKFunctions.ranked(score, keys :+ "qid", Seq(col("score_fp").desc, col("id")), k)
+      .select((keys ++ Seq("qid", "rank", "id", "score_fp")).map(col): _*)
 
   /** Top-`k` corpus rows per derived query: (qid, rank, id, score_fp).
     * `corpus` needs a BIGINT `idCol` and a string `textCol`; rank is
@@ -219,8 +215,8 @@ object Bm25 {
     *   4. PRUNE: a document with S_best(d) < θ_q strictly cannot reach
     *      θ_q, and since the true k-th score is ≥ θ_q it cannot enter
     *      the top-k even on ties (ties need equality, pruning needs
-    *      strict inequality) — dropped before the per-query rank
-    *      window. Survivors' scores are already exact, so the final
+    *      strict inequality) — dropped before the per-query top-k.
+    *      Survivors' scores are already exact, so the final
     *      ranking equals the unpruned one.
     *
     * Fused-pass rationale (r19): the previous 3-phase form ran the
@@ -237,7 +233,7 @@ object Bm25 {
     * already dl-joined the bulk of the postings; the checkpoint moves
     * from the posting-sized `matched` to the strictly smaller
     * (qid, id)-aggregated frame. The prune still bounds what enters
-    * the per-query rank window — on selective (rare-term) real-world
+    * the per-query top-k — on selective (rare-term) real-world
     * queries, most candidates — which is the WAND/MaxScore shape. */
   def topKMaxScore(ix: Index, qterms: DataFrame, k: Int,
       termImpacts: DataFrame): DataFrame = {
@@ -269,10 +265,9 @@ object Bm25 {
     // threshold: k-th best exact score among the top-term docs — ≤
     // nQueries rows, broadcast back. A query with no θ row (fewer than
     // k docs match its top term) prunes nothing.
-    val theta = agg.filter(col("is_top") === 1)
-      .withColumn("r", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("score_fp").desc, col("id"))))
-      .filter(col("r") === k)
+    val theta = rankTopK(
+        agg.filter(col("is_top") === 1).select(col("qid"), col("id"), col("score_fp")), k)
+      .filter(col("rank") === k)
       .select(col("qid"), col("score_fp").as("theta"))
     val survivors = agg.join(broadcast(theta), Seq("qid"), "left_outer")
       .filter(col("theta").isNull || col("best_ub") >= col("theta"))

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.TopKFunctions
+
 /** Product quantization — the third leg of the vector-index toolchain
   * next to scalar quantization ([[Quantize]], q64) and IVF
   * ([[Similarity]]/[[KMeansInt]], q32/q66/q77): split each vector into
@@ -278,7 +280,6 @@ object ProductQuantize {
     * never re-assigns the corpus. */
   def adcTopKEnc(enc: DataFrame, queries: DataFrame, books: DataFrame,
       topK: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // LUT: |queries|·M·K rows of Σ_d (q_d − m_d)² — broadcast-sized
     val qexpl = (0 until NumSub).map { m =>
       KMeansInt.explodedCodes(subCodes(queries, m))
@@ -287,16 +288,19 @@ object ProductQuantize {
     val lut = qexpl.join(broadcast(books), Seq("sub", "d"))
       .groupBy(col("qid"), col("sub"), col("cluster"))
       .agg(sum((col("c") - col("m")) * (col("c") - col("m"))).as("lutd2"))
-    val byDist = Window.partitionBy(col("qid")).orderBy(col("adc_dist2"), col("id"))
-    enc.join(broadcast(lut), Seq("sub", "cluster"))
+    rankByDist(enc.join(broadcast(lut), Seq("sub", "cluster"))
       .filter(col("id") =!= col("qid"))
       .groupBy(col("qid"), col("id"))
-      .agg(sum(col("lutd2")).as("adc_dist2"))
-      .withColumn("rank", row_number().over(byDist))
-      .filter(col("rank") <= topK)
-      .select(col("qid"), col("rank").cast("long").as("rank"),
-        col("id").as("vec_id"), col("adc_dist2"))
+      .agg(sum(col("lutd2")).as("adc_dist2")), topK)
   }
+
+  /** Each query's `topK` nearest of its (keys…, qid, id, adc_dist2)
+    * candidates, rank 1..topK by (adc_dist2, id): (keys…, qid, rank,
+    * vec_id, adc_dist2). */
+  private def rankByDist(scored: DataFrame, topK: Int, keys: Seq[String] = Nil): DataFrame =
+    TopKFunctions.ranked(scored, keys :+ "qid", Seq(col("adc_dist2"), col("id")), topK)
+      .select(keys.map(col) ++ Seq(col("qid"), col("rank"), col("id").as("vec_id"),
+        col("adc_dist2")): _*)
 
   // ---- IVF-PQ (coarse quantizer + PQ on residuals) -------------------
 
@@ -400,14 +404,9 @@ object ProductQuantize {
       .groupBy(col("qid"), col("id"))
       .agg(sum(col("lutd2")).as("adc_dist2"), min(col("rn")).as("rn"))
       .localCheckpoint(false) // one corpus pass feeds every sweep point
-    val byDist = Window.partitionBy(col("qid")).orderBy(col("adc_dist2"), col("id"))
     probes.map { np =>
-      scored.filter(col("rn") <= np)
-        .withColumn("rank", row_number().over(byDist))
-        .filter(col("rank") <= topK)
-        .select(lit(np.toLong).as("n_probe"), col("qid"),
-          col("rank").cast("long").as("rank"), col("id").as("vec_id"),
-          col("adc_dist2"))
+      rankByDist(scored.filter(col("rn") <= np).drop("rn"), topK)
+        .select(lit(np.toLong).as("n_probe"), col("*"))
     }.reduce(_ unionByName _)
   }
 
@@ -415,18 +414,15 @@ object ProductQuantize {
     * search cost is independent of training. */
   def ivfPqTopKWith(index: (DataFrame, DataFrame, DataFrame, DataFrame),
       queries: DataFrame, nProbe: Int, topK: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (coarse, asg, booksR, encR) = index
     val qexpl = KMeansInt.explodedCodes(queries)
       .select(col("id").as("qid"), col("d"), col("c"))
       .localCheckpoint(false)
     // probe set: nProbe nearest coarse centroids per query
-    val byD2 = Window.partitionBy(col("qid")).orderBy(col("d2"), col("pc"))
-    val probes = qexpl.join(broadcast(coarse), Seq("d"))
-      .groupBy(col("qid"), col("cluster").as("pc"))
-      .agg(sum((col("c") - col("m")) * (col("c") - col("m"))).as("d2"))
-      .withColumn("rn", row_number().over(byD2))
-      .filter(col("rn") <= nProbe)
+    val probes = TopKFunctions.ranked(qexpl.join(broadcast(coarse), Seq("d"))
+        .groupBy(col("qid"), col("cluster").as("pc"))
+        .agg(sum((col("c") - col("m")) * (col("c") - col("m"))).as("d2")),
+        Seq("qid"), Seq(col("d2"), col("pc")), nProbe)
       .select(col("qid"), col("pc"))
     // shifted query residual against each probed centroid
     val qr = probes
@@ -442,19 +438,22 @@ object ProductQuantize {
       .join(broadcast(booksR), Seq("sub", "d"))
       .groupBy(col("qid"), col("pc"), col("sub"), col("cluster"))
       .agg(sum((col("c") - col("m")) * (col("c") - col("m"))).as("lutd2"))
-    // candidates = vectors in probed clusters; each contributes exactly
-    // one LUT row per subspace
-    val byDist = Window.partitionBy(col("qid")).orderBy(col("adc_dist2"), col("id"))
-    val lutR = lut.select(col("qid"), col("pc").as("coarse"),
-      col("sub"), col("cluster"), col("lutd2"))
-    encR.join(asg, "id")
+    adcLutTopK(lut.select(col("qid"), col("pc").as("coarse"),
+      col("sub"), col("cluster"), col("lutd2")), encR, asg, topK)
+  }
+
+  /** The IVF-PQ search tail over per-query LUT rows (keys…, qid,
+    * coarse, sub, cluster, lutd2): candidates are the vectors in the
+    * probed cells, each contributing exactly one LUT row per subspace;
+    * their Σ lutd2 ADC distances rank to each query's top-`topK` by
+    * (distance, id), self-matches excluded — (keys…, qid, rank, vec_id,
+    * adc_dist2). `keys` are pass-through columns: the batch search
+    * passes none, the streaming serve twin its event-time window. */
+  private[graft] def adcLutTopK(lutR: DataFrame, encR: DataFrame, asg: DataFrame,
+      topK: Int, keys: Seq[String] = Nil): DataFrame =
+    rankByDist(encR.join(asg, "id")
       .join(broadcast(lutR), Seq("sub", "cluster", "coarse"))
       .filter(col("id") =!= col("qid"))
-      .groupBy(col("qid"), col("id"))
-      .agg(sum(col("lutd2")).as("adc_dist2"))
-      .withColumn("rank", row_number().over(byDist))
-      .filter(col("rank") <= topK)
-      .select(col("qid"), col("rank").cast("long").as("rank"),
-        col("id").as("vec_id"), col("adc_dist2"))
-  }
+      .groupBy((keys ++ Seq("qid", "id")).map(col): _*)
+      .agg(sum(col("lutd2")).as("adc_dist2")), topK, keys)
 }

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Reciprocal-rank fusion (Cormack et al.) — the standard way to merge
@@ -17,7 +16,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each input list is already a per-query top-k (≤ k rows
   * per qid), so the full-outer fusion join and the final re-rank
-  * window touch ≤ lists·k rows per query — constant-bounded work no
+  * touch ≤ lists·k rows per query — constant-bounded work no
   * matter the corpus size behind the retrievers.
   */
 object Rrf {
@@ -41,10 +40,8 @@ object Rrf {
     val rrf = lists.map { case (lbl, _) =>
       coalesce(expr(s"${Scale}L DIV ($K + r_$lbl)"), lit(0L))
     }.reduce(_ + _)
-    val fw = Window.partitionBy(col("qid")).orderBy(col("rrf_fp").desc, col("id"))
-    joined.withColumn("rrf_fp", rrf)
-      .withColumn("rank", row_number().over(fw).cast("long"))
-      .filter(col("rank") <= topK)
+    graft.functions.TopKFunctions.ranked(joined.withColumn("rrf_fp", rrf), Seq("qid"),
+        Seq(col("rrf_fp").desc, col("id")), topK)
       .select(Seq(col("qid"), col("rank"), col("id"), col("rrf_fp")) ++
         lists.map { case (lbl, _) => col(s"r_$lbl") }: _*)
   }

@@ -67,9 +67,6 @@ object SimHashDedup {
   private def bandValG(sh: org.apache.spark.sql.Column, b: Int, bits: Int) =
     shiftrightunsigned(sh, b * bits).bitwiseAND(lit((1L << bits) - 1L))
 
-  private def bandVal(sh: org.apache.spark.sql.Column, b: Int) =
-    bandValG(sh, b, BitsPerBand)
-
   /** Emit a cross pair only at its FIRST agreeing band — a pure
     * predicate over the two signatures already in the join (no dedup
     * shuffle on the pair stream), exact by the pigeonhole bound. */

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: the brute-force path broadcasts the (small) query set
   * and scans candidates once — no shuffle of the candidate table; top-k
-  * is a per-query window. The LSH/IVF paths cut the scanned fraction:
-  * bucket assignment is a pure projection (codegen'd), so candidates
+  * is a per-query bounded top-k aggregate. The LSH/IVF paths cut the
+  * scanned fraction: bucket assignment is a pure projection (codegen'd), so candidates
   * co-shuffle by bucket and only same-bucket pairs are scored. All
   * arithmetic is double with a fixed fold order so results are
   * engine-portable (oracle-checkable).
@@ -27,6 +27,12 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
+  /** Each query's `k` nearest scored rows, rank 1..k by (cos DESC,
+    * neighbor_id) — the one ranking every search path here ends in. */
+  private def byCos(scored: DataFrame, k: Int): DataFrame =
+    graft.functions.TopKFunctions.ranked(scored, Seq("query_id"),
+      Seq(col("cos").desc, col("neighbor_id")), k)
+
   /** Exact top-k neighbors for each query row (queries small enough to
     * broadcast; candidates streamed). Output: query_id, neighbor_id,
     * rank, cos. */
@@ -40,11 +46,7 @@ object Similarity {
     val scored = cand.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         (dot(col("qe"), col("ce")) / (col("qnrm") * col("cnrm"))).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
+    byCos(scored, k).select("query_id", "neighbor_id", "rank", "cos")
   }
 
   /** Exact all-pairs above a cosine threshold via a single inequality
@@ -164,11 +166,7 @@ object Similarity {
       .dropDuplicates("query_id", "neighbor_id")
     val scored = cand.select(col("query_id"), col("neighbor_id"),
       (dot(col("qe"), col("ce")) / (col("qnrm") * col("cnrm"))).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
+    byCos(scored, k).select("query_id", "neighbor_id", "rank", "cos")
   }
 
   /** Multi-table hyperplane bucketing: one row per (vector, table) with
@@ -219,10 +217,7 @@ object Similarity {
       .select(col("query_id"), col("query_label"), col("neighbor_id"),
         col("neighbor_label"),
         (dot(col("qe"), col("ce")) / (col("qnrm") * col("cnrm"))).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    byCos(scored, k)
       .select("query_id", "query_label", "neighbor_id", "neighbor_label", "rank", "cos")
   }
 
@@ -393,10 +388,6 @@ object Similarity {
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id").as("neighbor_id"),
         (dot(col("qe"), col("e")) / (col("qnrm") * col("nrm"))).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
+    byCos(scored, k).select("query_id", "neighbor_id", "rank", "cos")
   }
 }

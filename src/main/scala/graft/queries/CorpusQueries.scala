@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ext.{CorpusPipeline, MinHashLsh}
+import graft.functions.TopKFunctions
 
 /** q34: the composed corpus-cleanup pipeline (quality gate → exact
   * dedup → MinHash near-dup removal) — every stage mirrored in one
@@ -348,10 +349,8 @@ object CorpusQueries {
     val dot = de.crossJoin(broadcast(qvec))
       .select($"qid", $"doc_id".as("id"),
         aggregate(zip_with($"e", $"qe", (x, y) => x * y), lit(0L), _ + _).as("dot"))
-    val kw = org.apache.spark.sql.expressions.Window
-      .partitionBy($"qid").orderBy($"dot".desc, $"id")
-    val dense = dot.withColumn("rank", row_number().over(kw).cast("long"))
-      .filter($"rank" <= 10).select($"qid", $"id", $"rank")
+    val dense = TopKFunctions.ranked(dot, Seq("qid"), Seq($"dot".desc, $"id"), 10)
+      .select($"qid", $"id", $"rank")
     // ≤ 80 rows each, eagerly materialized: the cached tuple must not
     // re-run the corpus-sized scoring passes for the second consumer
     (ix, qt, sparse.localCheckpoint(true), dense.localCheckpoint(true))
@@ -388,10 +387,8 @@ object CorpusQueries {
     val scored = inter.join(dsz, "id")
       .select($"qid", $"id",
         expr("inter * 1000000L DIV (3 + nd - inter)").as("jac_fp"))
-    val sw = org.apache.spark.sql.expressions.Window
-      .partitionBy($"qid").orderBy($"jac_fp".desc, $"id")
-    val setR = scored.withColumn("rank", row_number().over(sw).cast("long"))
-      .filter($"rank" <= 10).select($"qid", $"id", $"rank")
+    val setR = TopKFunctions.ranked(scored, Seq("qid"), Seq($"jac_fp".desc, $"id"), 10)
+      .select($"qid", $"id", $"rank")
     graft.ext.Rrf.fuse(
         Seq("bm25" -> sparse, "dense" -> dense, "set" -> setR), topK = 10)
       .select($"qid", $"rank", $"id".as("doc_id"), $"rrf_fp",

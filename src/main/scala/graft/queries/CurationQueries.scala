@@ -6,7 +6,7 @@ import graft.Tables
 import graft.operators.BloomPrune
 import graft.operators.ColOps.{dec, dsum}
 import graft.ext.{Quantize, Repetition, Similarity}
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, TopKFunctions}
 import org.apache.spark.sql.expressions.Window
 
 /** Round-3 additions: bloom-pruned semi join (q63), int8 scalar
@@ -437,7 +437,7 @@ object CurationQueries {
     * COUNTS per source, not fractions (q70): rank each stratum's rows by
     * an avalanched hash of the id (uniform, reproducible, no RNG state)
     * and keep the first k. Deterministic across engines and re-runs;
-    * the windowed rank partitions on the stratum, so no global sort. A
+    * the bounded top-k groups on the stratum, so no global sort. A
     * stratum smaller than k yields all its rows. */
   def q101StratifiedK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -445,12 +445,9 @@ object CurationQueries {
     // q70's mix recipe: polyhash of the id string, LCG-avalanched
     val mixed = (GraftFunctions.polyhash($"doc_id".cast("string")) * 1103515245L
       + 12345L) % 2147483648L
-    val w = Window.partitionBy($"lang").orderBy($"hk", $"doc_id")
-    Tables.load(s, dir, "documents")
-      .select($"doc_id", $"lang", mixed.as("hk"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter($"rn" <= k)
-      .select($"doc_id", $"lang", $"rn")
+    TopKFunctions.ranked(Tables.load(s, dir, "documents")
+        .select($"doc_id", $"lang", mixed.as("hk")), Seq("lang"), Seq($"hk", $"doc_id"), k)
+      .select($"doc_id", $"lang", $"rank".as("rn"))
       .orderBy($"lang", $"rn")
   }
 
@@ -540,20 +537,17 @@ object CurationQueries {
     * the selection mode a curriculum or fine-tuning-set build runs;
     * q144 answers "keep each document with probability ∝ its score".
     * Shares [[graft.ext.Dsir.importanceScores]] and the oracle chain
-    * with q144, so the weights cannot fork. Scale shape: the top-k is
-    * a TakeOrdered (map-side partial top-k, nothing corpus-sized
-    * sorts); the final rank window orders the 100 surviving rows. */
+    * with q144, so the weights cannot fork. Scale shape: a global
+    * [[TopKFunctions.ranked]] (map-side partial top-k, nothing
+    * corpus-sized sorts). */
   def q150DsirTopk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.ext.Dsir
     val k = 100
     val scored = Dsir.importanceScores(Tables.load(s, dir, "documents"),
       "doc_id", "text", targetPred = $"lang" === "en", carryCols = Seq("lang"))
-    val top = scored.orderBy($"score".desc, $"doc_id").limit(k)
-      .localCheckpoint(false) // ≤ k rows; the rank window runs over this
-    top.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy($"score".desc, $"doc_id"))
-      .cast("long"))
+    TopKFunctions.ranked(scored, Nil, Seq($"score".desc, $"doc_id"), k)
+      .localCheckpoint(false) // ≤ k rows; the final order runs over this
       .select($"rank", $"doc_id", $"lang", $"n_toks", $"score")
       .orderBy($"rank")
   }
@@ -580,9 +574,8 @@ object CurationQueries {
     * nondecreasing in score (pinned by spec), so higher-scoring
     * documents are selected with higher probability — while the hash
     * keeps every draw bit-replayable. Scale shape: scoring is q144's
-    * one-pass chain; the top-k is TakeOrdered (map-side partial
-    * top-k); only the ≤ k-row rank window is single-partition
-    * (justified). */
+    * one-pass chain; the top-k is q150's global
+    * [[TopKFunctions.ranked]] (map-side partial top-k). */
   def q154DsirGumbelTopk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.ext.{Dsir, Hll}
@@ -592,11 +585,8 @@ object CurationQueries {
       .withColumn("rate_bp", Dsir.rateBp($"score"))
       .withColumn("h", Hll.hash31($"doc_id".cast("string")))
       .withColumn("pri", expr("rate_bp * 2147483648L DIV (h + 1)"))
-    val top = scored.orderBy($"pri".desc, $"doc_id").limit(k)
-      .localCheckpoint(false) // ≤ k rows; the rank window runs over this
-    top.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy($"pri".desc, $"doc_id"))
-      .cast("long"))
+    TopKFunctions.ranked(scored, Nil, Seq($"pri".desc, $"doc_id"), k)
+      .localCheckpoint(false) // ≤ k rows; the final order runs over this
       .select($"rank", $"doc_id", $"lang", $"score", $"rate_bp", $"pri")
       .orderBy($"rank")
   }
@@ -623,19 +613,17 @@ object CurationQueries {
     * prolific domain must not dominate the mix no matter how much it
     * crawls; complements q101's hash-uniform exact-k with the
     * QUALITY-RANKED variant a curation pass actually ships). Rank is
-    * a per-source window over (quality DESC, doc_id) — deterministic
-    * ties, no global sort; at 100 TB this is one shuffle on the
-    * source key with map-side partial top-k via the windowed filter.
+    * a per-source bounded top-k over (quality DESC, doc_id) —
+    * deterministic ties, no global sort; at 100 TB this is one shuffle
+    * on the source key carrying ≤ k rows per (partition, source).
     * Quality is the engine-wide q16 score, whose arithmetic already
     * hash-matches DuckDB bit-for-bit. */
   def q184SourceCap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.TextFunctions.qualityScore
-    val w = Window.partitionBy($"source").orderBy($"quality".desc, $"doc_id")
-    Tables.load(s, dir, "documents")
-      .select($"doc_id", $"source", qualityScore($"text").as("quality"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= 10)
+    TopKFunctions.ranked(Tables.load(s, dir, "documents")
+        .select($"doc_id", $"source", qualityScore($"text").as("quality")),
+        Seq("source"), Seq($"quality".desc, $"doc_id"), 10)
       .select($"source", $"rank", $"doc_id", $"quality")
       .orderBy($"source", $"rank")
   }

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ext.{Similarity, SurprisalScore}
@@ -1043,15 +1042,6 @@ object MiningQueries {
       |FROM sel GROUP BY source, weight_ppm, sm_ppm, rate_bp
       |ORDER BY source""".stripMargin
 
-  /** Distributed top-n ranking: `orderBy(...).limit(n)` plans
-    * `TakeOrderedAndProject` (per-partition heaps merged on the
-    * driver, never a global sort), then the ≤ n survivors get dense
-    * 1-based ranks from a window over a constant-size input. */
-  private def topRanked(df: DataFrame, n: Int, ord: Column*): DataFrame =
-    df.orderBy(ord: _*).limit(n)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(ord: _*)).cast("long"))
-
   /** q188: quality-ensemble consensus ranking — three incomparable
     * quality signals fused with reciprocal-rank fusion
     * ([[graft.ext.Rrf]], the q142 retrieval discipline applied to
@@ -1073,9 +1063,10 @@ object MiningQueries {
     * "documents every signal agrees are gold" shortlist a curation
     * run audits first.
     *
-    * Scale shape: each signal reduces corpus → 100 rows via
-    * TakeOrderedAndProject (no global sort, no corpus-wide window);
-    * the fusion join and final re-rank touch ≤ 300 rows total. */
+    * Scale shape: each signal reduces corpus → 100 rows via a global
+    * [[graft.functions.TopKFunctions.ranked]] (map-side partial top-k,
+    * no global sort); the fusion join and final re-rank touch ≤ 300
+    * rows total. */
   def q188QualityEnsemble(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val n = 100
@@ -1096,15 +1087,13 @@ object MiningQueries {
     val (w, g) = TextQueries.sharedPersistedNbModel(s, dir)
     val nb = hk(graft.ext.NbClassifier.score(docs, "doc_id", "text", w, g)
       .select($"id", $"score_bits"))
-    def asList(df: DataFrame) =
-      df.select(lit("corpus").as("qid"), $"id", $"rank")
+    def asList(df: DataFrame, ord: Column*) =
+      graft.functions.TopKFunctions.ranked(df, Nil, ord, n)
+        .select(lit("corpus").as("qid"), $"id", $"rank")
     graft.ext.Rrf.fuse(Seq(
-        "surprisal" -> asList(topRanked(sur, n,
-          $"millibits_per_gram".asc, $"hk".asc, $"id".asc)),
-        "repetition" -> asList(topRanked(rep, n,
-          $"rep_ppm".asc, $"hk".asc, $"id".asc)),
-        "nb" -> asList(topRanked(nb, n,
-          $"score_bits".desc, $"hk".asc, $"id".asc))),
+        "surprisal" -> asList(sur, $"millibits_per_gram".asc, $"hk".asc, $"id".asc),
+        "repetition" -> asList(rep, $"rep_ppm".asc, $"hk".asc, $"id".asc),
+        "nb" -> asList(nb, $"score_bits".desc, $"hk".asc, $"id".asc)),
         topK = 50)
       .select($"rank", $"id".as("doc_id"), $"rrf_fp",
         $"r_surprisal", $"r_repetition", $"r_nb")

@@ -246,11 +246,9 @@ object Reference {
     convCkptCache(s, dir) {
       import graft.enrich.ConversationCheckpoint
       val input = convResumeInput(s, dir)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val prefix = input.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= 2).drop("__rn")
+      val prefix = graft.functions.TopKFunctions.ranked(input, Seq("o_custkey"),
+          Seq(col("o_orderdate"), col("o_orderkey")), 2)
+        .select(input.columns.toSeq.map(col): _*)
       val pre = EnrichRunner.runConversations(prefix, "o_custkey",
           Seq("o_orderdate", "o_orderkey"), "prompt",
           ConversationalTestEnricher(), AiConfig.test())

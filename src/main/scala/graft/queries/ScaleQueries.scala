@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.ext.{ConnectedComponents, MinHashLsh}
-import graft.functions.{GraftFunctions, TextFunctions}
+import graft.functions.{GraftFunctions, TextFunctions, TopKFunctions}
 import graft.operators.Profiler
 import graft.operators.ColOps._
 
@@ -114,7 +114,7 @@ object ScaleQueries {
   }
 
   /** q48: TF-IDF top-3 terms per document — tokenize → per-doc term
-    * counts → document frequencies → score → per-doc top-k window.
+    * counts → document frequencies → score → per-doc top-k.
     * Two shuffles ((doc,term) then term); the idf join broadcasts the
     * term-frequency side at scale (it is vocabulary-sized, not
     * corpus-sized). */
@@ -133,9 +133,7 @@ object ScaleQueries {
     val scored = tf.join(broadcast(dfreq), "term")
       .withColumn("tfidf", round(
         $"tf".cast("double") * log(lit((nDocs + 1).toDouble) / ($"df" + 1).cast("double")), 6))
-    val w = Window.partitionBy($"doc_id").orderBy($"tfidf".desc, $"term")
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= 3)
+    TopKFunctions.ranked(scored, Seq("doc_id"), Seq($"tfidf".desc, $"term"), 3)
       .select($"doc_id", $"rank", $"term", $"tf", $"df", $"tfidf")
       .orderBy($"doc_id", $"rank")
   }

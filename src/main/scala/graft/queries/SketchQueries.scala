@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ext.{HeavyHitters, Hll, KMeansInt, PassageDedup, Quantize}
+import graft.functions.TopKFunctions
 
 /** Sketches and training loops: integer k-means IVF training (q77),
   * HyperLogLog distinct registers (q78), repeated-passage dedup with
@@ -243,26 +244,18 @@ object SketchQueries {
       |WHERE c.cnt * 32 > t.n_lang
       |ORDER BY lang, cnt DESC, token""".stripMargin
 
-  /** q88: per-supplier top-3 line items by price via the native
-    * bounded-state [[graft.functions.TopKAgg]] — at most k rows per
-    * (partition, supplier) ever cross the shuffle, versus the window
-    * formulation's full sort of every row (which is exactly what the
-    * oracle runs). Descending price rides as negated cents so the
-    * struct's ascending lexicographic order gives (price desc,
-    * orderkey, linenumber). */
+  /** q88: per-supplier top-3 line items by (price DESC, orderkey,
+    * linenumber) via the native bounded-state [[TopKFunctions.ranked]]
+    * — at most k rows per (partition, supplier) ever cross the
+    * shuffle, versus the window formulation's full sort of every row
+    * (which is exactly what the oracle runs). */
   def q88GroupedTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pc = expr("CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
-    Tables.load(s, dir, "lineitem")
-      .select($"l_suppkey",
-        struct((-pc).as("np"), $"l_orderkey".as("ok"),
-          $"l_linenumber".cast("long").as("ln")).as("o"))
-      .groupBy($"l_suppkey")
-      .agg(graft.functions.TopKFunctions.topK($"o", 3).as("top"))
-      .select($"l_suppkey", posexplode($"top").as(Seq("r0", "t")))
-      .select($"l_suppkey", ($"r0" + 1).cast("long").as("rank"),
-        (-$"t.np").as("price_cents"), $"t.ok".as("l_orderkey"),
-        $"t.ln".as("l_linenumber"))
+    TopKFunctions.ranked(Tables.load(s, dir, "lineitem")
+        .select($"l_suppkey", pc.as("price_cents"), $"l_orderkey",
+          $"l_linenumber".cast("long").as("l_linenumber")),
+        Seq("l_suppkey"), Seq($"price_cents".desc, $"l_orderkey", $"l_linenumber"), 3)
       .orderBy($"l_suppkey", $"rank")
   }
 
@@ -614,16 +607,13 @@ object SketchQueries {
     val codes = sharedCodes(s, dir)
     val queries = recallQuerySample(s, codes)
     // exact code-space L2 truth: the q22-class broadcast brute force
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"qid").orderBy($"d2", $"id")
-    val truthExact = codes
-      .crossJoin(broadcast(queries.select($"id".as("qid"), $"codes".as("qcs"))))
-      .filter($"id" =!= $"qid")
-      .select($"qid", $"id",
-        aggregate(zip_with($"codes", $"qcs", (c, q) => (c - q) * (c - q)),
-          lit(0L), (a, x) => a + x).as("d2"))
-      .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 10)
+    val truthExact = TopKFunctions.ranked(codes
+        .crossJoin(broadcast(queries.select($"id".as("qid"), $"codes".as("qcs"))))
+        .filter($"id" =!= $"qid")
+        .select($"qid", $"id",
+          aggregate(zip_with($"codes", $"qcs", (c, q) => (c - q) * (c - q)),
+            lit(0L), (a, x) => a + x).as("d2")),
+        Seq("qid"), Seq($"d2", $"id"), 10)
       .select($"qid", $"id".as("vec_id"))
     // the whole sweep in ONE corpus pass (ADC distances are nProbe-
     // independent — ivfPqSweep scores once and slices); the full-probe
@@ -1162,10 +1152,10 @@ object SketchQueries {
     * (k+1)-th priority makes Σŵ unbiased for Σw. All integers — the
     * whole estimator is hash-verified, not just sampled row ids.
     *
-    * Scale shape: the top-(k+1) is TakeOrdered (map-side partial
-    * top-k, no sort exchange); τ is a one-row stat over that 33-row
-    * frame (the Bm25 N/T class); only the final 33-row ranking is a
-    * (justified) single-partition window. */
+    * Scale shape: the ranked top-(k+1) is a global
+    * [[TopKFunctions.ranked]] (map-side partial top-k, no sort
+    * exchange), checkpointed; τ is a one-row stat over that 33-row
+    * frame (the Bm25 N/T class). */
   def q128PrioritySample(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val k = 32
@@ -1176,17 +1166,15 @@ object SketchQueries {
       // product under 2^37
       .withColumn("h", Hll.hash31($"key"))
       .select($"key", $"w", expr("w * 2147483648L DIV (h + 1)").as("pri"))
-    val top = pri.orderBy($"pri".desc, $"key").limit(k + 1).localCheckpoint(true)
+    val top = TopKFunctions.ranked(pri, Nil, Seq($"pri".desc, $"key"), k + 1)
+      .localCheckpoint(true)
     // τ = the (k+1)-th priority, or 0 when the input has ≤ k rows: an
     // under-full sample is the exact population, so ŵ = max(w, 0) = w
     // (standard DLT; without the guard τ would be the smallest sampled
     // priority, biasing every ŵ upward).
     val nTop = top.count()
     val tau = if (nTop <= k) 0L else top.agg(min($"pri")).head().getLong(0)
-    val rw = org.apache.spark.sql.expressions.Window
-      .orderBy($"pri".desc, $"key") // 33 rows — justified single partition
-    top.withColumn("rank", row_number().over(rw).cast("long"))
-      .filter($"rank" <= k)
+    top.filter($"rank" <= k)
       .select($"rank", $"key", $"w", $"pri",
         greatest($"w", lit(tau)).as("w_hat"))
       .orderBy($"rank")

@@ -628,9 +628,9 @@ object TextQueries {
     * gate); ties break on the token string. Scale shape: one token
     * explode feeds the (doc, token) tf agg; df rolls up FROM tf (one
     * row per distinct pair — never re-scans the corpus); the per-doc
-    * top-3 is the bounded-state [[graft.functions.TopKFunctions.topK]]
-    * aggregate (k rows per partition per doc, map-side combined), not
-    * a corpus-wide rank window. */
+    * top-3 is the bounded-state [[graft.functions.TopKFunctions.ranked]]
+    * (k rows per partition per doc, map-side combined), not a
+    * corpus-wide rank window. */
   /** The per-(doc, token) term frequencies the TF-IDF family builds
     * on — one token explode, one map-side-combined agg. */
   private def tfidfTf(s: SparkSession, dir: String): DataFrame = {
@@ -664,21 +664,16 @@ object TextQueries {
 
   /** q163's ranking tail over scored (doc_id, token, tf, df, score)
     * rows: each document's top-3 by score DESC, token ASC through the
-    * bounded-state [[graft.functions.TopKFunctions.topK]] aggregate,
-    * as (doc_id, rank, token, tf, df, score). `keys` are pass-through
-    * columns put in front of the per-doc `groupBy` — the streaming
-    * twin ([[graft.streaming.Streaming.tfidfKeywordStream]]) passes its
+    * bounded-state [[graft.functions.TopKFunctions.ranked]], as
+    * (doc_id, rank, token, tf, df, score). `keys` are pass-through
+    * columns ranked apart, in front of doc_id — the streaming twin
+    * ([[graft.streaming.Streaming.tfidfKeywordStream]]) passes its
     * event-time window. */
   private[graft] def tfidfTop3(scored: DataFrame, keys: Seq[String] = Nil): DataFrame =
-    scored
-      .groupBy(keys.map(col) :+ col("doc_id"): _*)
-      .agg(graft.functions.TopKFunctions.topK(
-        struct((-col("score")).as("ns"), col("token"), col("tf"), col("df"),
-          col("score")), 3).as("top"))
-      .select(col("doc_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("t.token").as("token"), col("t.tf").as("tf"), col("t.df").as("df"),
-        col("t.score").as("score"))
+    graft.functions.TopKFunctions.ranked(
+        scored.select((keys ++ Seq("doc_id", "token", "tf", "df", "score")).map(col): _*),
+        keys :+ "doc_id", Seq(col("score").desc, col("token")), 3)
+      .select(col("doc_id"), col("rank"), col("token"), col("tf"), col("df"), col("score"))
 
   val q163Sql: String =
     """WITH toks AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS token

@@ -131,13 +131,6 @@ object Sinks {
     writeCsv(df, s"$dir/consolidated/csv", singleFile = true)
   }
 
-  /** E3 dead-letter sink: persist quarantined rows (error column set)
-    * for audit/replay — the reference silently dropped them
-    * (main.py:487-502). Partitioned parquet; at scale this is the
-    * replayable input for a retry pass. */
-  def writeQuarantine(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
   /** Small-file compaction (engine extension): rewrite a parquet
     * directory into ~`targetFileBytes` output files. The file count
     * comes from the directory's ACTUAL on-disk size (a listing, not a

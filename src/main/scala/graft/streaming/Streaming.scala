@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -189,10 +189,9 @@ object Streaming {
     * by the horizon instead of growing with the stream (the classic
     * unbounded-dedup-state failure at corpus scale).
     *
-    * `docs` must already carry a watermark on `tsCol`. */
+    * `docs` must already carry a watermark. */
   def incrementalDedupStream(
-      docs: DataFrame, textCol: String, tsCol: String,
-      knownHashes: DataFrame): DataFrame = {
+      docs: DataFrame, textCol: String, knownHashes: DataFrame): DataFrame = {
     import graft.functions.TextFunctions.contentHash
     docs
       .withColumn("__gch", contentHash(col(textCol)))
@@ -656,9 +655,9 @@ object Streaming {
     * trigger), accumulate per-(window, qid, doc) scores with the ONE
     * shared contribution formula ([[graft.ext.Bm25.contribExpr]] —
     * corpus constants ride as literals from the loaded globals), and
-    * emit each query's top-`k` through [[windowTopK]] (score DESC,
-    * id ASC — the batch `rankTopK` tie-break) when its window
-    * closes. TWO chained stateful
+    * emit each query's top-`k` through the batch
+    * [[graft.ext.Bm25.rankTopK]] with the window as its pass-through
+    * key when its window closes. TWO chained stateful
     * aggregations on one watermark (the [[mixMonitorStream]]
     * multi-stateful-op shape). State bound: per (window, qid) the
     * candidate docs sharing ≥1 query term — at web scale the query
@@ -680,27 +679,16 @@ object Streaming {
       .withColumn("c", graft.ext.Bm25.contribExpr(ix.n, ix.t))
       .groupBy(col("window"), col("qid"), col("id"))
       .agg(sum(col("c")).as("score_fp"))
-    windowTopK(perDoc, -col("score_fp"), k)
-      .select(col("window_start"), col("qid"), col("rank"),
-        col("top.id").as("id"), (-col("top.key")).as("score_fp"))
+    withWindowStart(graft.ext.Bm25.rankTopK(perDoc, k, WindowKey))
   }
 
-  /** Each query's top-`k` candidates, emitted when its window closes:
-    * `perDoc` rows (window, qid, id) ranked by `key` ASC, then id ASC
-    * (the batch `rankTopK` tie-break), as a sorted-slice array reduce —
-    * the second of the two chained stateful aggregations a serving
-    * twin runs on one watermark. Emits (window_start, qid, rank,
-    * top: struct(key, id)); window.start stays in the output because
-    * the same qid re-queried in a later window emits a SECOND ranking,
-    * and without it the consumer cannot tell which one is current. */
-  private def windowTopK(perDoc: DataFrame, key: Column, k: Int): DataFrame =
-    perDoc
-      .groupBy(col("window"), col("qid"))
-      .agg(slice(array_sort(collect_list(struct(key.as("key"), col("id")))), 1, k)
-        .as("tops"))
-      .select(col("window"), col("qid"), posexplode(col("tops")).as(Seq("pos", "top")))
-      .select(col("window.start").as("window_start"), col("qid"),
-        (col("pos") + 1).cast("long").as("rank"), col("top"))
+  /** A serving twin's ranked rows with `window` replaced by its start:
+    * it stays in the output because the same qid re-queried in a later
+    * window emits a SECOND ranking, and without it the consumer cannot
+    * tell which one is current. */
+  private def withWindowStart(ranked: DataFrame): DataFrame =
+    ranked.select(col("window.start").as("window_start") +:
+      ranked.columns.toSeq.filter(_ != "window").map(col): _*)
 
   /** Streaming frozen-codebook PQ encode — the ingest twin of q166:
     * arriving vectors are PQ-encoded ROW-locally against LITERAL
@@ -732,8 +720,9 @@ object Streaming {
     * LUT rows equi-join the STATIC compressed corpus — the loaded
     * `asg`/`enc` parts, pre-joined to (id, coarse, sub, cluster) — on
     * (coarse, sub, cluster), and each query's candidates fold like
-    * [[bm25ServeStream]]'s: per-(window, qid, id) ADC sums, then the
-    * per-query top-k of [[windowTopK]] emitted on window close. Two chained
+    * [[bm25ServeStream]]'s: the batch search's ADC-sum + top-k tail
+    * ([[graft.ext.ProductQuantize.adcLutTopK]]) with the window as its
+    * pass-through key, emitted on window close. Two chained
     * stateful aggregations; self-matches excluded and ties broken by
     * id exactly as the batch search. At 100 TB the stream-static join
     * is the ADC scan itself — candidates shrink by nProbe/K before
@@ -754,14 +743,7 @@ object Streaming {
       .select(col("qid"), col("window"), col("l.pc").as("coarse"),
         col("l.sub").cast("int").as("sub"), col("l.cluster").as("cluster"),
         col("l.lutd2").as("lutd2"))
-    val candidates = encR.join(asg, "id") // static: (id, sub, cluster, coarse)
-    val perDoc = lutRows.join(candidates, Seq("coarse", "sub", "cluster"))
-      .filter(col("id") =!= col("qid"))
-      .groupBy(col("window"), col("qid"), col("id"))
-      .agg(sum(col("lutd2")).as("adc_dist2"))
-    windowTopK(perDoc, col("adc_dist2"), topK)
-      .select(col("window_start"), col("qid"), col("rank"),
-        col("top.id").as("vec_id"), col("top.key").as("adc_dist2"))
+    withWindowStart(pq.adcLutTopK(lutRows, encR, asg, topK, WindowKey))
   }
 
   final case class CusumEventT(userId: Long, us: Long, eventId: Long,
@@ -988,7 +970,7 @@ object Streaming {
     * event_time). */
   def mixMonitorStream(docs: DataFrame, knownHashes: DataFrame,
       model: DataFrame, calib: DataFrame): DataFrame = {
-    val fresh = windowed(docs, incrementalDedupStream(_, "text", "event_time", knownHashes))
+    val fresh = windowed(docs, incrementalDedupStream(_, "text", knownHashes))
       .withColumn("n_tokens",
         size(graft.functions.TextFunctions.tokens(col("text"))).cast("long"))
     val perDoc = scoreStream(fresh, model, "source", "n_tokens")

@@ -29,6 +29,19 @@ object GraftShim {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
+  /** The Catalyst sort order behind a Column as a window's `orderBy`
+    * reads it: `asc`/`desc` and their nulls variants keep direction and
+    * null ordering; any other column sorts ascending, nulls first. */
+  def sortOrder(c: Column): org.apache.spark.sql.catalyst.expressions.SortOrder = {
+    import org.apache.spark.sql.catalyst.{expressions => ce}
+    c.node match {
+      case internal.SortOrder(child, dir, nulls, _) => ce.SortOrder(expression(new Column(child)),
+        if (dir == internal.SortOrder.Ascending) ce.Ascending else ce.Descending,
+        if (nulls == internal.SortOrder.NullsFirst) ce.NullsFirst else ce.NullsLast, Seq.empty)
+      case _ => ce.SortOrder(expression(c), ce.Ascending)
+    }
+  }
+
   /** `localCheckpoint(eager = true)` that KEEPS a hash layout: enforce
     * `hash(key) → numPartitions` clustering (repartition-by-NUM — not
     * AQE-coalescible, so the physical assignment is exactly

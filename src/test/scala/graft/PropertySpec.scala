@@ -362,6 +362,41 @@ class PropertySpec extends SparkSpec {
         .mapValues(_.map(t => (t._2, t._3)).sorted.take(4).toList).toMap
       assert(got === want, s"seed=$seed")
     }
+
+    // ranked ≡ row_number() <= k over the same frames: NULL group keys
+    // and NULL sort values, NaN / -0.0 / 0.0 doubles, heavy ties broken
+    // by the unique id, ASC and DESC, k above a group's size, no keys,
+    // and an empty input. Cells compare as strings so -0.0 ≠ 0.0.
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.TopKFunctions.ranked
+    val dbl = Gen.frequency(3 -> Gen.oneOf(Double.NaN, -0.0, 0.0, 1.5),
+      5 -> Gen.chooseNum(-3, 3).map(_.toDouble), 1 -> Gen.const(Double.MinValue))
+    val frame = Gen.listOfN(240, Gen.zip(Gen.option(Gen.chooseNum(0L, 6L)),
+      Gen.option(dbl), Gen.option(Gen.chooseNum(-2L, 2L))))
+    def cells(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().toSeq.map(_.toSeq.map(String.valueOf).mkString("|")).sorted
+    val cases = Seq(
+      (Seq("g"), Seq($"m", $"id"), 4), (Seq("g"), Seq($"m".desc, $"id"), 4),
+      (Seq("g"), Seq($"x".desc, $"m".asc_nulls_last, $"id".desc), 3),
+      (Seq("g", "x"), Seq($"m".desc_nulls_first, $"id"), 2),
+      (Seq("g"), Seq($"x", $"id"), 500), (Nil, Seq($"m".desc, $"x", $"id"), 7))
+    for (seed <- 1L to 3L; (keys, order, k) <- cases) {
+      val data = sample(frame, seed + 1500).zipWithIndex.map { case ((g, m, x), i) =>
+        (g, m, x, i.toLong)
+      }
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(data, 7))
+        .toDF("g", "m", "x", "id")
+      for (in <- Seq(df, df.limit(0))) {
+        val w = if (keys.isEmpty) Window.orderBy(order: _*)
+          else Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+        val cols = (keys :+ "rank") ++ Seq("g", "m", "x", "id").filterNot(keys.contains)
+        val want = in.withColumn("rank", row_number().over(w).cast("long"))
+          .filter($"rank" <= k).select(cols.map(col): _*)
+        val got = ranked(in, keys, order, k)
+        assert(got.schema === want.schema, s"seed=$seed keys=$keys order=$order")
+        assert(cells(got) === cells(want), s"seed=$seed keys=$keys order=$order k=$k")
+      }
+    }
   }
 
   test("property: Elkan-pruned k-means argmin equals the exhaustive scan, ties included") {

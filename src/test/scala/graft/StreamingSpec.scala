@@ -348,7 +348,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Long, String, java.sql.Timestamp)]
     val docs = input.toDF().toDF("id", "text", "ts").withWatermark("ts", "10 minutes")
-    val out = Streaming.incrementalDedupStream(docs, "text", "ts", known)
+    val out = Streaming.incrementalDedupStream(docs, "text", known)
     val q = out.writeStream.format("memory").queryName("incdedup_out")
       .outputMode("append").start()
     try {
